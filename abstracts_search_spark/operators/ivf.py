@@ -48,13 +48,13 @@ its own internal order, so a per-dimension mean within an ulp of a
 
 from __future__ import annotations
 
-import json
-import os
 import uuid
 
 import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from . import vecindex
 
 # bumped when the persisted IVF artifact layout or training math changes
 # (4: sq8r residual-coded payload (a format-3 reader would mis-read an sq8r
@@ -364,32 +364,21 @@ def _matrix_fn(
     batch must carry the ``list`` column). Standalone closure (only numpy
     arrays captured), so scoring UDFs never pickle a reader/session."""
     if quant is None:
-        def to_matrix(pdf) -> np.ndarray:
-            return np.stack(
-                [np.asarray(x, dtype=np.float64) for x in pdf["embedding"]]
-            )
-    else:
-        qmin, qscale, residual = quant
-        if residual and cents is None:
-            raise ValueError("residual decode requires the centroid matrix")
+        return vecindex.raw_matrix
+    qmin, qscale, residual = quant
+    if residual and cents is None:
+        raise ValueError("residual decode requires the centroid matrix")
 
-        def to_matrix(pdf) -> np.ndarray:
-            codes = np.stack(
-                [np.frombuffer(b, dtype=np.uint8) for b in pdf["codes"]]
-            )
-            dec = sq8_decode(codes, qmin, qscale)
-            if residual:
-                dec = cents[pdf["list"].to_numpy()] + dec
-            return dec
+    def to_matrix(pdf) -> np.ndarray:
+        codes = np.stack(
+            [np.frombuffer(b, dtype=np.uint8) for b in pdf["codes"]]
+        )
+        dec = sq8_decode(codes, qmin, qscale)
+        if residual:
+            dec = cents[pdf["list"].to_numpy()] + dec
+        return dec
 
     return to_matrix
-
-
-def _scrub_orphan_generations(out_dir: str, next_gen: int) -> None:
-    """Shared-lifecycle delegation (vecindex.scrub_orphan_generations)."""
-    from . import vecindex
-
-    vecindex.scrub_orphan_generations(out_dir, next_gen)
 
 
 def _load_centroids(spark, out_dir: str, params: dict) -> np.ndarray:
@@ -402,32 +391,18 @@ def _load_centroids(spark, out_dir: str, params: dict) -> np.ndarray:
     return cents
 
 
-# shared lifecycle spec (r5 verdict #8): sync/compact/scrub/staleness live
-# ONCE in operators/vecindex.py for both vector-index families
-def _ivf_spec():
-    from .vecindex import VecIndexSpec
-
-    return VecIndexSpec(
-        kind="IVF", params_file="ivf_params.json",
-        format_version=IVF_INDEX_FORMAT, part_col="lgroup",
-        sort_col="list", builder="build_ivf_index",
-    )
-
-
-def _ivf_params_path(out_dir: str) -> str:
-    return os.path.join(out_dir, "ivf_params.json")
+# shared lifecycle + reader (r5 verdict #8): sync/compact/scrub/staleness
+# and the probe → GEMM → top-k query path live ONCE in operators/vecindex.py
+# for both vector-index families
+_IVF_SPEC = vecindex.VecIndexSpec(
+    kind="IVF", params_file="ivf_params.json",
+    format_version=IVF_INDEX_FORMAT, part_col="lgroup",
+    sort_col="list", builder="build_ivf_index",
+)
 
 
 def _read_ivf_params(out_dir: str) -> dict:
-    from . import vecindex
-
-    return vecindex.read_params(out_dir, _ivf_spec())
-
-
-def _write_ivf_params(out_dir: str, params: dict) -> None:
-    from . import vecindex
-
-    vecindex.write_params(out_dir, _ivf_spec(), params)
+    return vecindex.read_params(out_dir, _IVF_SPEC)
 
 
 def build_ivf_index(
@@ -501,8 +476,7 @@ def build_ivf_index(
         _assign_fn(cents, id_col, vec_col, n_groups, gen=0, quant=quant),
         schema=f"vec_id long, {_payload_schema(vec_type, quantize)}, list int, lgroup int, gen int",
     )
-    commit(assigned, out_dir, "vectors", partition_by=["gen", "lgroup"],
-           repartition_by=["lgroup"], sort_by=["list"], row_group_bytes=1 << 20)
+    vecindex.commit_vectors(assigned, out_dir, _IVF_SPEC)
 
     spark = emb.sparkSession
     cdf = spark.createDataFrame(
@@ -528,7 +502,7 @@ def build_ivf_index(
     if quantize in ("sq8", "sq8r"):
         params["sq8_min"] = [float(x) for x in qmin]
         params["sq8_scale"] = [float(x) for x in qscale]
-    _write_ivf_params(out_dir, params)
+    vecindex.write_params(out_dir, _IVF_SPEC, params)
 
 
 def sync_ivf_index(
@@ -547,8 +521,6 @@ def sync_ivf_index(
     past the marker (appended, then crashed before the params update) are
     scrubbed before re-appending, so replays converge. Returns True if a
     generation was appended."""
-    from . import vecindex
-
     spark = new_emb.sparkSession
 
     def make_rows(p: dict, next_gen: int):
@@ -567,7 +539,7 @@ def sync_ivf_index(
         )
 
     return vecindex.sync_generation(
-        new_emb, out_dir, _ivf_spec(), src_tag, vec_col, make_rows
+        new_emb, out_dir, _IVF_SPEC, src_tag, vec_col, make_rows
     )
 
 
@@ -582,35 +554,18 @@ def probe_lists(query_vec, cents: np.ndarray, nprobe: int) -> list[int]:
     return [int(x) for x in order[: max(1, nprobe)]]
 
 
-from .vecindex import Staleness
+class IvfIndexReader(vecindex.CellIndexReader):
+    """Long-lived handle on a persisted IVF index (the shared query path of
+    :class:`~.vecindex.CellIndexReader`). A query's cells are its ``nprobe``
+    nearest centroids (:func:`probe_lists`): ``topk``/``topk_many`` take
+    ``nprobe`` (default: the tuned value in ivf_params.json). Lists map to
+    contiguous list-range directories (:func:`_lgroup_of`); SQ8 payloads are
+    reconstructed before scoring (asymmetric, as in FAISS ADC)."""
 
+    _spec = _IVF_SPEC
 
-class IvfIndexReader(Staleness):
-    """Long-lived handle on a persisted IVF index: params + centroid matrix
-    + the vectors table handle cached driver-side, re-attached when a
-    rebuild rewrites ivf_params.json (one stat() per query — the same
-    staleness protocol as IndexReader / AnnIndexReader)."""
-
-    def __init__(self, spark, index_dir: str):
-        self.spark = spark
-        self.index_dir = index_dir
-        self._spec = _ivf_spec()
-        self._sig: tuple[int, int] | None = None
-        self._attach()
-
-    def _attach(self) -> None:
-        from ..sources.tables import read_table
-
-        self._sig = self._signature()
-        self.params = _read_ivf_params(self.index_dir)
-        if self.params.get("format") != IVF_INDEX_FORMAT:
-            raise ValueError(
-                f"IVF index at {self.index_dir} is format "
-                f"{self.params.get('format')} (current {IVF_INDEX_FORMAT}); "
-                "rebuild with build_ivf_index"
-            )
+    def _load_constants(self) -> None:
         self.centroids = _load_centroids(self.spark, self.index_dir, self.params)
-        self.vectors = read_table(self.spark, self.index_dir, "vectors")
         self.quant: tuple[np.ndarray, np.ndarray, bool] | None = None
         qmode = self.params.get("quantize", "none")
         if qmode in ("sq8", "sq8r"):
@@ -619,158 +574,27 @@ class IvfIndexReader(Staleness):
                 np.asarray(self.params["sq8_scale"], dtype=np.float64),
                 qmode == "sq8r",
             )
+        self.payload_col = "codes" if self.quant is not None else "embedding"
 
-    def _payload_col(self) -> str:
-        return "codes" if self.quant is not None else "embedding"
+    def _probe(self, query_vec, nprobe: int | None = None) -> list[int]:
+        if nprobe is None:
+            nprobe = int(self.params.get("nprobe", 2))
+        return probe_lists(query_vec, self.centroids, nprobe)
+
+    def _n_cells(self) -> int:
+        return int(self.params["n_lists"])
+
+    def _groups_of(self, cells: np.ndarray) -> np.ndarray:
+        return _lgroup_of(cells, int(self.params["n_lists"]), int(self.params["n_groups"]))
+
+    def _decoder(self):
+        return _matrix_fn(self.quant, self.centroids)
 
     def assignments(self) -> DataFrame:
         """-> (vec_id, list_id): the full trained assignment table."""
         self._refresh_if_stale()
         return self.vectors.select(
             "vec_id", F.col("list").alias("list_id")
-        )
-
-    def topk(self, query_vec, k: int = 10, nprobe: int | None = None) -> DataFrame:
-        """-> (vec_id, cos) top k: probe the nprobe nearest lists
-        (directory-then-row-group pruned scan), score candidates with one
-        float64 GEMM per Arrow batch, exact cosine within the probed set."""
-        from typing import Iterator
-
-        import pandas as pd
-
-        self._refresh_if_stale()
-        p = self.params
-        if nprobe is None:
-            nprobe = int(p.get("nprobe", 2))
-        probe = probe_lists(query_vec, self.centroids, nprobe)
-        groups = sorted(
-            {int(x) for x in _lgroup_of(np.asarray(probe), p["n_lists"], p["n_groups"])}
-        )
-        cand = self.vectors.filter(
-            F.col("lgroup").isin(groups) & F.col("list").isin(probe)
-        )
-
-        qv = np.asarray(query_vec, dtype=np.float64)
-        qnorm = float(np.linalg.norm(qv))
-        to_matrix = _matrix_fn(self.quant, self.centroids)
-
-        def score(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            for pdf in batches:
-                if not len(pdf):
-                    continue
-                m = to_matrix(pdf)
-                cos = (m @ qv) / (np.linalg.norm(m, axis=1) * qnorm)
-                yield pd.DataFrame(
-                    {"vec_id": pdf["vec_id"].to_numpy(), "cos": np.round(cos, 6)}
-                )
-
-        scored = cand.select("vec_id", "list", self._payload_col()).mapInPandas(
-            score, schema="vec_id long, cos double"
-        )
-        return scored.orderBy(F.desc("cos"), F.asc("vec_id")).limit(k)
-
-    def topk_many(
-        self,
-        queries: dict[int, list[float]],
-        k: int = 10,
-        nprobe: int | None = None,
-    ) -> DataFrame:
-        """-> (query_id, rank, vec_id, cos): top-k per query in ONE job —
-        the scan is pruned to the union of all queries' probe cells, each
-        candidate batch is scored against every query with a single
-        (batch × dim)·(dim × q) GEMM, rows fan out only to queries whose
-        probe set contains the row's cell, and a per-query window rank
-        bounds the output. Identical results to per-query :meth:`topk`
-        (tested) — the IVF twin of AnnIndexReader.topk_many."""
-        from typing import Iterator
-
-        import pandas as pd
-        from pyspark.sql import Window
-
-        self._refresh_if_stale()
-        empty = self.spark.createDataFrame(
-            [], "query_id int, rank int, vec_id long, cos double"
-        )
-        if not queries:
-            return empty
-        p = self.params
-        if nprobe is None:
-            nprobe = int(p.get("nprobe", 2))
-        qids = sorted(queries)
-        n_lists = int(p["n_lists"])
-        probes = {qid: probe_lists(queries[qid], self.centroids, nprobe) for qid in qids}
-        by_list: dict[int, list[int]] = {}
-        for qi, qid in enumerate(qids):
-            for cell in probes[qid]:
-                by_list.setdefault(cell, []).append(qi)
-        # exhaustive-width shortcut (r5 verdict #5): nprobe >= n_lists for
-        # every query (the tune ground-truth pass) selects every cell —
-        # skip the In(list,…) filter instead of shipping an n_lists-element
-        # predicate, and fan every row out to all queries
-        full_scan = all(len(probes[qid]) >= n_lists for qid in qids)
-        if full_scan:
-            cand = self.vectors
-        else:
-            groups = sorted(
-                {
-                    int(x)
-                    for x in _lgroup_of(
-                        np.asarray(sorted(by_list)), p["n_lists"], p["n_groups"]
-                    )
-                }
-            )
-            cand = self.vectors.filter(
-                F.col("lgroup").isin(groups) & F.col("list").isin(sorted(by_list))
-            )
-        qmat = np.stack([np.asarray(queries[qid], dtype=np.float64) for qid in qids])
-        qnorm = np.linalg.norm(qmat, axis=1)
-        qid_arr = np.asarray(qids, dtype=np.int64)
-        # sorted-cell flat tables (r5 verdict #6): per-batch fan-out is
-        # np.searchsorted + flat gathers — no per-row Python dict lookups
-        ckeys = np.asarray(sorted(by_list), dtype=np.int64)
-        ccnt = np.asarray([len(by_list[int(c)]) for c in ckeys], dtype=np.int64)
-        coff = np.zeros(ckeys.shape[0] + 1, dtype=np.int64)
-        np.cumsum(ccnt, out=coff[1:])
-        cq = np.concatenate(
-            [np.asarray(by_list[int(c)], dtype=np.int64) for c in ckeys]
-        ) if ckeys.shape[0] else np.empty(0, dtype=np.int64)
-        n_q = len(qids)
-        to_matrix = _matrix_fn(self.quant, self.centroids)
-
-        def score(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            from ..codecs.multilist import concat_aranges
-
-            for pdf in batches:
-                if not len(pdf):
-                    continue
-                m = to_matrix(pdf)
-                cos = (m @ qmat.T) / np.outer(np.linalg.norm(m, axis=1), qnorm)
-                vids = pdf["vec_id"].to_numpy()
-                nrows = vids.shape[0]
-                if full_scan:
-                    row_idx = np.repeat(np.arange(nrows, dtype=np.int64), n_q)
-                    q_idx = np.tile(np.arange(n_q, dtype=np.int64), nrows)
-                else:
-                    pos = np.searchsorted(ckeys, pdf["list"].to_numpy())
-                    reps = ccnt[pos]
-                    row_idx = np.repeat(np.arange(nrows, dtype=np.int64), reps)
-                    q_idx = cq[np.repeat(coff[pos], reps) + concat_aranges(reps)]
-                yield pd.DataFrame(
-                    {
-                        "query_id": qid_arr[q_idx].astype(np.int32),
-                        "vec_id": vids[row_idx],
-                        "cos": np.round(cos[row_idx, q_idx], 6),
-                    }
-                )
-
-        scored = cand.select("vec_id", "list", self._payload_col()).mapInPandas(
-            score, schema="query_id int, vec_id long, cos double"
-        )
-        w = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("vec_id"))
-        return (
-            scored.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .select("query_id", "rank", "vec_id", "cos")
         )
 
 
@@ -816,9 +640,7 @@ def compact_ivf_index(spark, out_dir: str) -> int:
     Crash-wise the window between the swap and the params rewrite is benign:
     old tags still no-op and a new sync appends past the stale next_gen
     without touching gen=0."""
-    from . import vecindex
-
-    return vecindex.compact_generations(spark, out_dir, _ivf_spec())
+    return vecindex.compact_generations(spark, out_dir, _IVF_SPEC)
 
 
 def ivf_index_topk(
@@ -832,62 +654,23 @@ def ivf_index_topk(
 def tune_ivf_index(spark, out_dir: str, n_queries: int = 8, k: int = 10) -> dict:
     """Sweep nprobe and record recall@k vs brute force — the IVF analog of
     the reference's `index tune` nprobe sweep (Makefile:31-32), twin of
-    similarity.tune_ann_index. Sample queries are the index's own n_queries
-    lowest-vec_id vectors (deterministic, no external data; on an SQ8 index
-    the stored codes are reconstructed — the sweep measures the quantizer's
-    own geometry); the sweep walks nprobe = 1, 2, 4, … and stops at the
-    first width reaching recall 1.0 — guaranteed to terminate, since
-    nprobe = n_lists probes every cell and IS the exhaustive scan (the
-    ground truth in both storage modes). The chosen nprobe and the sweep
-    land in ivf_params.json, which :meth:`IvfIndexReader.topk` reads as its
-    default."""
-    import pandas as pd
-
+    similarity.tune_ann_index. The widths nprobe = 1, 2, 4, … run through
+    :func:`~.vecindex.recall_sweep` (on an SQ8 index the sample queries are
+    the reconstructed codes) and stop at the first width reaching recall
+    1.0 — guaranteed to terminate, since nprobe = n_lists probes every cell
+    and IS the exhaustive scan (the ground truth in both storage modes). The
+    chosen nprobe and the sweep land in ivf_params.json, which
+    :meth:`IvfIndexReader.topk` reads as its default."""
     reader = IvfIndexReader(spark, out_dir)
     p = reader.params
-    payload = reader._payload_col()
-    qrows = (
-        reader.vectors.select("vec_id", "list", payload)
-        .orderBy("vec_id")
-        .limit(n_queries)
-        .collect()
-    )
-    qmat = _matrix_fn(reader.quant, reader.centroids)(
-        pd.DataFrame(
-            {payload: [r[payload] for r in qrows], "list": [r["list"] for r in qrows]}
-        )
-    )
-    # positional query ids (0..n-1), NOT raw vec_ids: topk_many's query_id
-    # column is int32 and production vec_ids can exceed it
-    qvecs = {i: [float(x) for x in qmat[i]] for i in range(len(qrows))}
     n_lists = int(p["n_lists"])
-
-    def _topk_sets(nprobe: int) -> dict[int, set[int]]:
-        # ONE topk_many job answers every sample query at this width
-        # (rank-identical to per-query topk, tested) — the sweep runs
-        # O(log n_lists) jobs total instead of n_queries × widths
-        out: dict[int, set[int]] = {qid: set() for qid in qvecs}
-        for row in reader.topk_many(qvecs, k=k, nprobe=nprobe).collect():
-            out[int(row["query_id"])].add(row["vec_id"])
-        return out
-
-    truth = _topk_sets(n_lists)  # full probe = exhaustive scan
-    sweep: dict[str, float] = {}
-    chosen = n_lists
-    nprobe = 1
-    while True:
-        nprobe = min(nprobe, n_lists)
-        got = _topk_sets(nprobe)
-        hits = sum(len(got[qid] & truth[qid]) for qid in qvecs)
-        total = sum(len(truth[qid]) for qid in qvecs)
-        recall = round(hits / total, 4) if total else 1.0
-        sweep[str(nprobe)] = recall
-        if recall >= 1.0 or nprobe >= n_lists:
-            chosen = nprobe
-            break
-        nprobe *= 2
+    # 1, 2, 4, … below n_lists, then n_lists itself (the exhaustive scan)
+    widths = [1 << i for i in range(n_lists.bit_length()) if 1 << i < n_lists]
+    chosen, sweep, n_q = vecindex.recall_sweep(
+        reader, n_queries, k, "nprobe", widths + [n_lists]
+    )
     p["nprobe"] = int(chosen)
-    p["tune_recall_at_k"] = {"k": k, "n_queries": len(qrows), "sweep": sweep}
+    p["tune_recall_at_k"] = {"k": k, "n_queries": n_q, "sweep": sweep}
     # hot-cell skew disclosure (r5 verdict #7): cell occupancy IS the
     # probe-cost variance — a probe reads its cells' rows, so a hot cell is
     # a hot probe (the trained-IVF analog of the documented postings skew).
@@ -906,5 +689,5 @@ def tune_ivf_index(spark, out_dir: str, n_queries: int = 8, k: int = 10) -> dict
         "median_nonempty": med,
         "max_over_median": round(float(occ.max()) / med, 2) if med else None,
     }
-    _write_ivf_params(out_dir, p)
+    vecindex.write_params(out_dir, _IVF_SPEC, p)
     return p

@@ -22,6 +22,8 @@ import numpy as np
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from . import vecindex
+
 
 def _to_double(v: Column) -> Column:
     return F.transform(v, lambda x: x.cast("double"))
@@ -177,7 +179,6 @@ def cosine_pairs_lsh(
     max_bucket: int = 50,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    carry_vectors: bool = False,
 ) -> DataFrame:
     """Near-dup pairs via banded hyperplane LSH — the 100 TB path.
 
@@ -200,9 +201,7 @@ def cosine_pairs_lsh(
     their original (typically float32) storage width, and widened to float64
     only inside the per-bucket GEMM — identical numbers to scoring float64
     end-to-end (float32→float64 widening is exact), at a fraction of the
-    shuffle bytes. ``carry_vectors=True`` restores the old
-    vector-through-explode plan; it exists solely so the shuffle-bytes win is
-    measurable on the same input (scripts/shuffle_profile.py).
+    shuffle bytes (the measured win is recorded in BENCH_shuffle.json).
     """
     from typing import Iterator
 
@@ -224,34 +223,23 @@ def cosine_pairs_lsh(
             m = np.stack([np.asarray(x, dtype=np.float64) for x in pdf[vec_col]])
             bits = (m @ all_planes.T >= 0).reshape(len(pdf), bands, n_planes)
             buckets = (bits * weights).sum(axis=2).astype(np.int32)  # (n, bands)
-            out = {"vid": pdf[id_col].to_numpy(), "bks": list(buckets)}
-            if carry_vectors:
-                out["vec"] = [row for row in m]
-            yield pd.DataFrame(out)
+            yield pd.DataFrame({"vid": pdf[id_col].to_numpy(), "bks": list(buckets)})
 
-    if carry_vectors:  # measurement baseline: float64 vectors ride the explode
-        per_vec = emb.select(id_col, vec_col).mapInPandas(
-            bucketize, schema="vid long, bks array<int>, vec array<double>"
-        )
-        banded = per_vec.select("vid", "vec", F.posexplode("bks").alias("band", "bucket"))
-    else:
-        per_vec = emb.select(id_col, vec_col).mapInPandas(
-            bucketize, schema="vid long, bks array<int>"
-        )
-        # narrow rows cached: the bucketize pass otherwise re-runs for the
-        # guard aggregation and again for the candidate join (guide §5)
-        banded = per_vec.select("vid", F.posexplode("bks").alias("band", "bucket")).cache()
+    per_vec = emb.select(id_col, vec_col).mapInPandas(
+        bucketize, schema="vid long, bks array<int>"
+    )
+    # narrow rows cached: the bucketize pass otherwise re-runs for the
+    # guard aggregation and again for the candidate join (guide §5)
+    banded = per_vec.select("vid", F.posexplode("bks").alias("band", "bucket")).cache()
     guard = (
         banded.groupBy("band", "bucket")
         .agg(F.count("*").alias("bsz"))
         .filter((F.col("bsz") > 1) & (F.col("bsz") <= max_bucket))
         .select("band", "bucket")
     )
-    cand = banded.join(F.broadcast(guard), ["band", "bucket"])
-    if not carry_vectors:
-        # vectors join the surviving candidates at storage width (array<float>)
-        vecs = emb.select(F.col(id_col).alias("vid"), F.col(vec_col).alias("vec"))
-        cand = cand.join(vecs, "vid")
+    # vectors join the surviving candidates at storage width (array<float>)
+    vecs = emb.select(F.col(id_col).alias("vid"), F.col(vec_col).alias("vec"))
+    cand = banded.join(F.broadcast(guard), ["band", "bucket"]).join(vecs, "vid")
 
     def gemm(key, pdf: pd.DataFrame) -> pd.DataFrame:
         a = pdf.sort_values("vid")
@@ -370,42 +358,18 @@ def _query_sig(query_vec, planes: np.ndarray) -> int:
     return int(sum(1 << i for i in range(planes.shape[0]) if bits[i]))
 
 
-# shared lifecycle spec (r5 verdict #8): sync/compact/scrub/staleness live
-# ONCE in operators/vecindex.py for both vector-index families
-def _ann_spec():
-    from .vecindex import VecIndexSpec
-
-    return VecIndexSpec(
-        kind="ANN", params_file="ann_params.json",
-        format_version=ANN_INDEX_FORMAT, part_col="bgroup",
-        sort_col="bucket", builder="build_ann_index",
-    )
-
-
-def _ann_params_path(out_dir: str) -> str:
-    import os
-
-    return os.path.join(out_dir, "ann_params.json")
+# shared lifecycle + reader (r5 verdict #8): sync/compact/scrub/staleness
+# and the probe → GEMM → top-k query path live ONCE in operators/vecindex.py
+# for both vector-index families
+_ANN_SPEC = vecindex.VecIndexSpec(
+    kind="ANN", params_file="ann_params.json",
+    format_version=ANN_INDEX_FORMAT, part_col="bgroup",
+    sort_col="bucket", builder="build_ann_index",
+)
 
 
 def _read_ann_params(out_dir: str) -> dict:
-    from . import vecindex
-
-    return vecindex.read_params(out_dir, _ann_spec())
-
-
-def _write_ann_params(out_dir: str, params: dict) -> None:
-    from . import vecindex
-
-    vecindex.write_params(out_dir, _ann_spec(), params)
-
-
-def _check_ann_format(p: dict, out_dir: str) -> None:
-    """Format-stamp gate (ADVICE r5): pre-format-4 dirs fail with a rebuild
-    message instead of an opaque unresolved-column error on bgroup."""
-    from . import vecindex
-
-    vecindex.check_format(p, out_dir, _ann_spec())
+    return vecindex.read_params(out_dir, _ANN_SPEC)
 
 
 def _group_shift(n_planes: int) -> int:
@@ -474,8 +438,6 @@ def build_ann_index(
     rebuild-overwrite is crash-atomic (tmp→swap); ann_params.json lands LAST
     as the completeness marker.
     """
-    from ..sources.tables import commit
-
     if n_planes is None:
         n_planes = auto_n_planes(emb.count())
     planes = hyperplanes(_dim_of(emb, vec_col), n_planes, seed)
@@ -485,11 +447,10 @@ def build_ann_index(
         _bucketize_fn(planes, id_col, vec_col, gen=0),
         schema=f"vec_id long, embedding {vec_type}, bucket int, bgroup int, gen int",
     )
-    commit(bucketed, out_dir, "vectors", partition_by=["gen", "bgroup"],
-           repartition_by=["bgroup"], sort_by=["bucket"],
-           row_group_bytes=1 << 20)
-    _write_ann_params(
+    vecindex.commit_vectors(bucketed, out_dir, _ANN_SPEC)
+    vecindex.write_params(
         out_dir,
+        _ANN_SPEC,
         {
             "n_planes": int(n_planes),
             "seed": seed,
@@ -521,8 +482,6 @@ def sync_ann_index(
     append and the params marker converge instead of double-ingesting.
     Returns True if a generation was appended.
     """
-    from . import vecindex
-
     def make_rows(p: dict, next_gen: int):
         planes = hyperplanes(p["dim"], p["n_planes"], p["seed"])
         return new_emb.select(id_col, vec_col).mapInPandas(
@@ -531,7 +490,7 @@ def sync_ann_index(
         )
 
     return vecindex.sync_generation(
-        new_emb, out_dir, _ann_spec(), src_tag, vec_col, make_rows
+        new_emb, out_dir, _ANN_SPEC, src_tag, vec_col, make_rows
     )
 
 
@@ -559,9 +518,7 @@ def compact_ann_index(spark, out_dir: str) -> int:
     touching gen=0 — but a CONCURRENT probe from an already-attached reader
     can hit FileNotFound mid-scan and must re-open. Returns the generations
     folded."""
-    from . import vecindex
-
-    return vecindex.compact_generations(spark, out_dir, _ann_spec())
+    return vecindex.compact_generations(spark, out_dir, _ANN_SPEC)
 
 
 def ann_index_topk(
@@ -572,97 +529,31 @@ def ann_index_topk(
     probe_hamming: int | None = None,
     max_probes: int | None = None,
 ) -> DataFrame:
-    """Query the persisted ANN index -> (vec_id, cos), top k.
-
-    Probe buckets are enumerated in Hamming-distance order from the query's
-    signature (:func:`hamming_probe_order`; ``probe_hamming`` defaults to the
-    tuned value in ann_params.json, ``max_probes`` optionally truncates the
-    ordered list — the nprobe knob). The scan is bucket-partition-pruned to
-    the probed buckets' files; candidates are scored with ONE float64 GEMM
-    per Arrow batch (mapInPandas) — no interpreted higher-order-function
-    fold anywhere in the plan (r4-verdict item 1). Exact cosine within the
-    probed set, rounded to 6 decimals (GEMM ≡ sequential-SQL dot products at
-    that rounding — the same equivalence the near-dup GEMMs rely on).
-    """
-    from typing import Iterator
-
-    import pandas as pd
-
-    from ..sources.tables import read_table
-
-    p = _read_ann_params(out_dir)
-    _check_ann_format(p, out_dir)
-    if probe_hamming is None:
-        probe_hamming = int(p.get("probe_hamming", 1))
-    planes = hyperplanes(p["dim"], p["n_planes"], p["seed"])
-    qsig = _query_sig(query_vec, planes)
-    probe = hamming_probe_order(qsig, p["n_planes"], probe_hamming, max_probes)
-    shift = _group_shift(int(p["n_planes"]))
-    groups = sorted({b >> shift for b in probe})
-    vectors = read_table(spark, out_dir, "vectors")
-    # two-level pruning: bgroup is the PartitionFilter (≤2^ANN_GROUP_BITS
-    # dirs listed/read), bucket is the pushed data predicate pruned by the
-    # files' bucket-sorted row-group stats
-    cand = vectors.filter(F.col("bgroup").isin(groups) & F.col("bucket").isin(probe))
-
-    qv = np.asarray(query_vec, dtype=np.float64)
-    qnorm = float(np.linalg.norm(qv))
-
-    def score(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            m = np.stack([np.asarray(x, dtype=np.float64) for x in pdf["embedding"]])
-            cos = (m @ qv) / (np.linalg.norm(m, axis=1) * qnorm)
-            yield pd.DataFrame(
-                {"vec_id": pdf["vec_id"].to_numpy(), "cos": np.round(cos, 6)}
-            )
-
-    scored = cand.select("vec_id", "embedding").mapInPandas(
-        score, schema="vec_id long, cos double"
+    """One-shot probe of a persisted ANN index -> (vec_id, cos), top k
+    (functional wrapper around :class:`AnnIndexReader` for callers without a
+    long-lived handle)."""
+    return AnnIndexReader(spark, out_dir).topk(
+        query_vec, k=k, probe_hamming=probe_hamming, max_probes=max_probes
     )
-    return scored.orderBy(F.desc("cos"), F.asc("vec_id")).limit(k)
 
 
-from .vecindex import Staleness
+class AnnIndexReader(vecindex.CellIndexReader):
+    """Long-lived handle on a persisted ANN index (the shared query path of
+    :class:`~.vecindex.CellIndexReader`). A query's cells are its Hamming
+    probe order (:func:`hamming_probe_order` from its plane signature):
+    ``topk``/``topk_many`` take ``probe_hamming`` (default: the tuned value
+    in ann_params.json) and ``max_probes`` (truncates the ordered list — the
+    nprobe knob). Buckets map to directories by their top
+    :data:`ANN_GROUP_BITS` bits; payloads are the raw embeddings."""
 
+    _spec = _ANN_SPEC
 
-class AnnIndexReader(Staleness):
-    """Long-lived handle on a persisted ANN index — the vector twin of
-    plans/query.IndexReader: params + plane matrix + the vectors table handle
-    are cached driver-side and re-attached when a sync rewrites
-    ann_params.json (one cheap stat() per query — same staleness protocol),
-    so repeated probes pay zero re-listing and zero params I/O.
-
-    ``topk`` is the single-query probe (same plan as :func:`ann_index_topk`);
-    ``topk_many`` answers a whole query SET in ONE job: the scan is pruned to
-    the union of all queries' probe buckets, each candidate batch is scored
-    against every query with a single (batch × dim)·(dim × q) GEMM, and a
-    per-query window rank bounds the output — the ANN analog of
-    IndexReader.query_many (decode/scan shared across queries).
-    """
-
-    def __init__(self, spark, index_dir: str):
-        self.spark = spark
-        self.index_dir = index_dir
-        self._spec = _ann_spec()
-        self._sig: tuple[int, int] | None = None
-        self._attach()
-
-    def _attach(self) -> None:
-        from ..sources.tables import read_table
-
-        self._sig = self._signature()
-        self.params = _read_ann_params(self.index_dir)
-        _check_ann_format(self.params, self.index_dir)
+    def _load_constants(self) -> None:
         self.planes = hyperplanes(
             self.params["dim"], self.params["n_planes"], self.params["seed"]
         )
-        # handle re-created on staleness: a DataFrame's file index is frozen
-        # at read time, so a new gen=G dir is invisible to old handles
-        self.vectors = read_table(self.spark, self.index_dir, "vectors")
 
-    def _probe(self, query_vec, probe_hamming: int | None, max_probes: int | None):
+    def _probe(self, query_vec, probe_hamming: int | None = None, max_probes: int | None = None):
         if probe_hamming is None:
             probe_hamming = int(self.params.get("probe_hamming", 1))
         qsig = _query_sig(query_vec, self.planes)
@@ -670,119 +561,11 @@ class AnnIndexReader(Staleness):
             qsig, int(self.params["n_planes"]), probe_hamming, max_probes
         )
 
-    def topk(
-        self,
-        query_vec: list[float],
-        k: int = 10,
-        probe_hamming: int | None = None,
-        max_probes: int | None = None,
-    ) -> DataFrame:
-        out = self.topk_many(
-            {0: query_vec}, k=k, probe_hamming=probe_hamming, max_probes=max_probes
-        )
-        return (
-            out.select("vec_id", "cos")
-            .orderBy(F.desc("cos"), F.asc("vec_id"))
-            .limit(k)
-        )
+    def _n_cells(self) -> int:
+        return 1 << int(self.params["n_planes"])
 
-    def topk_many(
-        self,
-        queries: dict[int, list[float]],
-        k: int = 10,
-        probe_hamming: int | None = None,
-        max_probes: int | None = None,
-    ) -> DataFrame:
-        """-> (query_id, rank, vec_id, cos): top-k per query, rank by
-        (cos DESC, vec_id ASC), candidates pruned per query to ITS probe
-        set (identical results to per-query :meth:`topk`, tested)."""
-        from typing import Iterator
-
-        import pandas as pd
-        from pyspark.sql import Window
-
-        self._refresh_if_stale()
-        empty = self.spark.createDataFrame(
-            [], "query_id int, rank int, vec_id long, cos double"
-        )
-        if not queries:
-            return empty
-        qids = sorted(queries)
-        n_planes = int(self.params["n_planes"])
-        probes = {qid: self._probe(queries[qid], probe_hamming, max_probes) for qid in qids}
-        # bucket -> indices of the queries probing it (probe sets are small:
-        # |queries| × |probe| entries, driver-side only)
-        by_bucket: dict[int, list[int]] = {}
-        for qi, qid in enumerate(qids):
-            for b in probes[qid]:
-                by_bucket.setdefault(b, []).append(qi)
-        # exhaustive-radius shortcut (r5 verdict #5): when EVERY query probes
-        # every bucket (the tune ground-truth pass), the In(bucket,…)
-        # predicate selects everything — skip it instead of shipping a
-        # 2^n_planes-element filter, and fan every row out to all queries
-        full_scan = all(len(probes[qid]) >= (1 << n_planes) for qid in qids)
-        if full_scan:
-            cand = self.vectors
-        else:
-            shift = _group_shift(n_planes)
-            groups = sorted({b >> shift for b in by_bucket})
-            cand = self.vectors.filter(
-                F.col("bgroup").isin(groups) & F.col("bucket").isin(sorted(by_bucket))
-            )
-        qmat = np.stack([np.asarray(queries[qid], dtype=np.float64) for qid in qids])
-        qnorm = np.linalg.norm(qmat, axis=1)
-        qid_arr = np.asarray(qids, dtype=np.int64)
-        # sorted-bucket flat tables (r5 verdict #6): the per-batch fan-out is
-        # np.searchsorted + flat gathers — no per-row Python dict lookups
-        bkeys = np.asarray(sorted(by_bucket), dtype=np.int64)
-        bcnt = np.asarray([len(by_bucket[int(b)]) for b in bkeys], dtype=np.int64)
-        boff = np.zeros(bkeys.shape[0] + 1, dtype=np.int64)
-        np.cumsum(bcnt, out=boff[1:])
-        bq = np.concatenate(
-            [np.asarray(by_bucket[int(b)], dtype=np.int64) for b in bkeys]
-        ) if bkeys.shape[0] else np.empty(0, dtype=np.int64)
-        n_q = len(qids)
-
-        def score(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            from ..codecs.multilist import concat_aranges
-
-            for pdf in batches:
-                if not len(pdf):
-                    continue
-                m = np.stack(
-                    [np.asarray(x, dtype=np.float64) for x in pdf["embedding"]]
-                )
-                # ONE GEMM scores every candidate against every query …
-                cos = (m @ qmat.T) / np.outer(np.linalg.norm(m, axis=1), qnorm)
-                vids = pdf["vec_id"].to_numpy()
-                nrows = vids.shape[0]
-                if full_scan:
-                    row_idx = np.repeat(np.arange(nrows, dtype=np.int64), n_q)
-                    q_idx = np.tile(np.arange(n_q, dtype=np.int64), nrows)
-                else:
-                    # … then rows emit only for queries whose probe set
-                    # contains the row's bucket (per-query pruning preserved)
-                    pos = np.searchsorted(bkeys, pdf["bucket"].to_numpy())
-                    reps = bcnt[pos]
-                    row_idx = np.repeat(np.arange(nrows, dtype=np.int64), reps)
-                    q_idx = bq[np.repeat(boff[pos], reps) + concat_aranges(reps)]
-                yield pd.DataFrame(
-                    {
-                        "query_id": qid_arr[q_idx].astype(np.int32),
-                        "vec_id": vids[row_idx],
-                        "cos": np.round(cos[row_idx, q_idx], 6),
-                    }
-                )
-
-        scored = cand.select("vec_id", "bucket", "embedding").mapInPandas(
-            score, schema="query_id int, vec_id long, cos double"
-        )
-        w = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("vec_id"))
-        return (
-            scored.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .select("query_id", "rank", "vec_id", "cos")
-        )
+    def _groups_of(self, cells: np.ndarray) -> np.ndarray:
+        return cells >> _group_shift(int(self.params["n_planes"]))
 
 
 def tune_ann_index(
@@ -795,50 +578,22 @@ def tune_ann_index(
     the ANN analog of the reference's nprobe tune step (`sidecar-search
     index tune`, Makefile:31-32).
 
-    Sample queries are the index's own ``n_queries`` lowest-vec_id vectors
-    (deterministic, no external data). For each probe_hamming radius
-    (0, 1, 2, … up to n_planes) the probed top-k id sets — ONE batched
-    topk_many job per radius, same estimator as tune_ivf_index's sweep —
-    are compared against radius-n_planes ground truth (every bucket probed
-    = the exhaustive scan), so the whole sweep runs O(n_planes) jobs
-    instead of n_queries × radii. Guaranteed to terminate at recall 1.0.
-    The chosen radius and the full sweep land in ann_params.json
+    The radii 0, 1, 2, … up to n_planes run through
+    :func:`~.vecindex.recall_sweep` against radius-n_planes ground truth
+    (every bucket probed = the exhaustive scan), so the whole sweep runs
+    O(n_planes) jobs and is guaranteed to terminate at recall 1.0. The
+    chosen radius and the full sweep land in ann_params.json
     (probe_hamming / tune_recall_at_k), which :func:`ann_index_topk` reads
     as its default.
     """
     reader = AnnIndexReader(spark, out_dir)
     p = reader.params
-    qrows = (
-        reader.vectors.select("vec_id", "embedding")
-        .orderBy("vec_id")
-        .limit(n_queries)
-        .collect()
-    )
-    # positional query ids: topk_many's query_id column is int32 and
-    # production vec_ids can exceed it
-    qvecs = {i: [float(x) for x in r["embedding"]] for i, r in enumerate(qrows)}
     n_planes = int(p["n_planes"])
-
-    def _topk_sets(h: int) -> dict[int, set[int]]:
-        out: dict[int, set[int]] = {qid: set() for qid in qvecs}
-        for row in reader.topk_many(qvecs, k=k, probe_hamming=h).collect():
-            out[int(row["query_id"])].add(row["vec_id"])
-        return out
-
-    truth = _topk_sets(n_planes) if qvecs else {}
-    sweep: dict[str, float] = {}
-    chosen = n_planes
-    for h in range(n_planes + 1):
-        got = _topk_sets(h) if qvecs else {}
-        hits = sum(len(got[q] & truth[q]) for q in qvecs)
-        total = sum(len(truth[q]) for q in qvecs)
-        recall = round(hits / total, 4) if total else 1.0
-        sweep[str(h)] = recall
-        if recall >= 1.0:
-            chosen = h
-            break
+    chosen, sweep, n_q = vecindex.recall_sweep(
+        reader, n_queries, k, "probe_hamming", list(range(n_planes + 1))
+    )
     p["probe_hamming"] = int(chosen)
-    p["tune_recall_at_k"] = {"k": k, "n_queries": len(qrows), "sweep": sweep}
+    p["tune_recall_at_k"] = {"k": k, "n_queries": n_q, "sweep": sweep}
     # hot-bucket skew disclosure (r5 verdict #7, LSH twin of the IVF cell
     # stats): occupied-bucket occupancy recorded at tune time — a hot
     # bucket is a hot probe; empties are implicit (2^n_planes − n_buckets)
@@ -854,7 +609,7 @@ def tune_ann_index(
         "median_occupied": med,
         "max_over_median": round(float(occ.max()) / med, 2) if med else None,
     }
-    _write_ann_params(out_dir, p)
+    vecindex.write_params(out_dir, _ANN_SPEC, p)
     return p
 
 

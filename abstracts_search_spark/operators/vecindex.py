@@ -1,17 +1,26 @@
-"""Shared lifecycle for the persisted vector indexes (LSH + trained IVF).
+"""The persisted vector indexes (LSH + trained IVF): one lifecycle and one
+query path for both families.
 
 ``operators/similarity.py`` (hashed LSH buckets) and ``operators/ivf.py``
 (trained k-means cells) persist the same artifact shape — a generation-
 partitioned ``vectors`` table under two-level pruning directories plus a
-params-json completeness marker — and until round 6 each carried its own
-copy of the lifecycle: atomic marker writes, the sync tag-replay /
-empty-batch / dimension guards, orphan-generation scrub, compaction, and
-reader staleness. One format bump applied to only one twin would have
-diverged two contracts that are tested to behave identically (r5 verdict
-item 8); this module is the single implementation both now call.
+params-json completeness marker — and answer queries the same way: pick
+each query's cells, scan only those cells, score the candidates exactly,
+keep the top k. This module holds everything the two families share, so a
+format or contract change lands once (r5 verdict item 8):
 
-Family-specific bits (params filename, format stamp, partition/sort
-columns, builder name for error messages) are a small ``VecIndexSpec``.
+- the lifecycle: atomic marker writes, the vectors-table layout, the sync
+  tag-replay / empty-batch / dimension guards, orphan-generation scrub,
+  compaction and reader staleness;
+- the reader: :class:`CellIndexReader` runs probe → pruned scan → one GEMM
+  per candidate batch → top-k for both families;
+- the tune step's recall sweep (:func:`recall_sweep`).
+
+A family differs only in its constants (a small ``VecIndexSpec``: params
+filename, format stamp, partition/sort columns, builder name for error
+messages) and in four reader hooks: how a query picks its cells, how a cell
+maps to its directory, how many cells exist, and how a stored row decodes
+to a float64 vector.
 """
 
 from __future__ import annotations
@@ -21,7 +30,13 @@ import os
 import shutil
 from dataclasses import dataclass
 
+import numpy as np
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
+
+# vectors-table row-group size: the pushed In(cell,…) predicate prunes
+# cell-sorted row groups of this size inside each directory
+VECTORS_ROW_GROUP_BYTES = 1 << 20
 
 
 @dataclass(frozen=True)
@@ -66,6 +81,18 @@ def check_format(p: dict, out_dir: str, spec: VecIndexSpec, appending: bool = Fa
         )
 
 
+def commit_vectors(rows: DataFrame, out_dir: str, spec: VecIndexSpec, mode: str = "overwrite") -> None:
+    """Write the vectors table in the two-level pruning layout every probe
+    relies on: one directory per (gen, ``spec.part_col``) — co-partitioned,
+    so one file per directory — with rows sorted by ``spec.sort_col`` inside
+    each file, so a probe prunes directories first, then row groups."""
+    from ..sources.tables import commit
+
+    commit(rows, out_dir, "vectors", mode=mode,
+           partition_by=["gen", spec.part_col], repartition_by=[spec.part_col],
+           sort_by=[spec.sort_col], row_group_bytes=VECTORS_ROW_GROUP_BYTES)
+
+
 def scrub_orphan_generations(out_dir: str, next_gen: int) -> None:
     """Remove generation dirs at/past the params marker — output of a sync
     that crashed before its params rewrite. Shared by sync (before
@@ -101,8 +128,6 @@ def sync_generation(
     ``make_rows(params, next_gen) -> DataFrame`` supplies the family's
     assigned rows (bucketize / centroid-assign + optional quantize).
     Returns True if a generation was appended."""
-    from ..sources.tables import commit
-
     p = read_params(out_dir, spec)
     check_format(p, out_dir, spec, appending=True)
     if src_tag in p["merged_srcs"]:
@@ -123,9 +148,7 @@ def sync_generation(
         )
     next_gen = int(p["next_gen"])
     scrub_orphan_generations(out_dir, next_gen)
-    commit(make_rows(p, next_gen), out_dir, "vectors", mode="append",
-           partition_by=["gen", spec.part_col], repartition_by=[spec.part_col],
-           sort_by=[spec.sort_col], row_group_bytes=1 << 20)
+    commit_vectors(make_rows(p, next_gen), out_dir, spec, mode="append")
     p["merged_srcs"] = p["merged_srcs"] + [src_tag]
     p["next_gen"] = next_gen + 1
     write_params(out_dir, spec, p)  # marker LAST
@@ -145,9 +168,7 @@ def compact_generations(spark, out_dir: str, spec: VecIndexSpec) -> int:
     re-open; the crash window between the swap and the params rewrite is
     benign (old tags still no-op, a new sync appends past the stale
     next_gen without touching gen=0). Returns the generations folded."""
-    from pyspark.sql import functions as F
-
-    from ..sources.tables import commit, read_table
+    from ..sources.tables import read_table
 
     p = read_params(out_dir, spec)
     check_format(p, out_dir, spec)
@@ -157,16 +178,14 @@ def compact_generations(spark, out_dir: str, spec: VecIndexSpec) -> int:
     scrub_orphan_generations(out_dir, n_gens)
     vectors = read_table(spark, out_dir, "vectors")
     folded = vectors.withColumn("gen", F.lit(0).cast("int"))
-    commit(folded, out_dir, "vectors", partition_by=["gen", spec.part_col],
-           repartition_by=[spec.part_col], sort_by=[spec.sort_col],
-           row_group_bytes=1 << 20)
+    commit_vectors(folded, out_dir, spec)
     p["next_gen"] = 1
     write_params(out_dir, spec, p)
     return n_gens
 
 
 class Staleness:
-    """Reader staleness protocol shared by AnnIndexReader / IvfIndexReader:
+    """Reader staleness protocol of :class:`CellIndexReader`:
     the params marker is rewritten LAST by every sync/tune/compaction, so
     its (mtime_ns, size) is a complete change signal — one cheap stat() per
     query, re-``_attach`` on change (table handles must be re-created too:
@@ -184,3 +203,227 @@ class Staleness:
     def _refresh_if_stale(self) -> None:
         if self._signature() != self._sig:
             self._attach()
+
+
+def raw_matrix(pdf) -> np.ndarray:
+    """Candidate batch -> float64 matrix of its stored ``embedding`` column
+    (exact widening from float32 storage)."""
+    return np.stack([np.asarray(x, dtype=np.float64) for x in pdf["embedding"]])
+
+
+class CellIndexReader(Staleness):
+    """Long-lived handle on a persisted vector index — the vector twin of
+    plans/query.IndexReader: params, the family's constants (plane matrix or
+    centroids + quantizer) and the vectors table handle are cached
+    driver-side and re-attached when a sync/tune/compaction rewrites the
+    params marker (one cheap stat() per query), so repeated probes pay zero
+    re-listing and zero params I/O.
+
+    One query path serves both families. Each query picks its cells
+    (:meth:`_probe`); the scan is pruned to the union of the probed cells —
+    directories by ``spec.part_col``, then row groups by the pushed
+    ``spec.sort_col`` predicate — and each candidate batch is scored against
+    every query with a single (batch × dim)·(dim × q) float64 GEMM. Rows fan
+    out only to the queries whose probe set holds the row's cell, so every
+    query sees exactly its own candidates: exact cosine within the probed
+    cells, rounded to 6 decimals (GEMM ≡ sequential-SQL dot products at that
+    rounding). ``topk`` ranks one query with a plain TakeOrderedAndProject;
+    ``topk_many`` ranks a query set in one job with a per-query window.
+
+    Subclasses set ``_spec`` and ``payload_col`` and supply the hooks
+    :meth:`_load_constants`, :meth:`_probe` (its keyword arguments are the
+    family's probe knobs, passed through ``topk``/``topk_many``),
+    :meth:`_n_cells`, :meth:`_groups_of` and, for coded payloads,
+    :meth:`_decoder`.
+    """
+
+    _spec: VecIndexSpec
+    payload_col = "embedding"
+
+    def __init__(self, spark, index_dir: str):
+        self.spark = spark
+        self.index_dir = index_dir
+        self._sig: tuple[int, int] | None = None
+        self._attach()
+
+    def _attach(self) -> None:
+        from ..sources.tables import read_table
+
+        self._sig = self._signature()
+        self.params = read_params(self.index_dir, self._spec)
+        check_format(self.params, self.index_dir, self._spec)
+        self._load_constants()
+        # handle re-created on staleness: a DataFrame's file index is frozen
+        # at read time, so a new gen=G dir is invisible to old handles
+        self.vectors = read_table(self.spark, self.index_dir, "vectors")
+
+    # ---- family hooks ----
+    def _load_constants(self) -> None:
+        raise NotImplementedError
+
+    def _probe(self, query_vec, **knobs) -> list[int]:
+        """The cells one query probes, nearest first."""
+        raise NotImplementedError
+
+    def _n_cells(self) -> int:
+        raise NotImplementedError
+
+    def _groups_of(self, cells: np.ndarray) -> np.ndarray:
+        """cell ids -> their ``spec.part_col`` directory keys."""
+        raise NotImplementedError
+
+    def _decoder(self):
+        """-> batch -> float64 matrix. A standalone function (only numpy
+        arrays captured), so scoring UDFs never pickle a reader/session."""
+        return raw_matrix
+
+    # ---- the one query path ----
+    def topk(self, query_vec, k: int = 10, **knobs) -> DataFrame:
+        """-> (vec_id, cos) top k by (cos DESC, vec_id ASC): one query,
+        ranked by a TakeOrderedAndProject — no window, no exchange."""
+        return (
+            self._scored({0: query_vec}, knobs)
+            .select("vec_id", "cos")
+            .orderBy(F.desc("cos"), F.asc("vec_id"))
+            .limit(k)
+        )
+
+    def topk_many(self, queries: dict[int, list[float]], k: int = 10, **knobs) -> DataFrame:
+        """-> (query_id, rank, vec_id, cos): top-k per query in ONE job,
+        rank by (cos DESC, vec_id ASC) — identical results to per-query
+        :meth:`topk` (tested), the analog of IndexReader.query_many."""
+        from pyspark.sql import Window
+
+        if not queries:
+            return self.spark.createDataFrame(
+                [], "query_id int, rank int, vec_id long, cos double"
+            )
+        w = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("vec_id"))
+        return (
+            self._scored(queries, knobs)
+            .withColumn("rank", F.row_number().over(w))
+            .filter(F.col("rank") <= k)
+            .select("query_id", "rank", "vec_id", "cos")
+        )
+
+    def _scored(self, queries: dict[int, list[float]], knobs: dict) -> DataFrame:
+        """-> (query_id, vec_id, cos) for every (query, candidate in one of
+        its probed cells) pair."""
+        from typing import Iterator
+
+        import pandas as pd
+
+        self._refresh_if_stale()
+        qids = sorted(queries)
+        probes = [self._probe(queries[qid], **knobs) for qid in qids]
+        # cell -> indices of the queries probing it (probe sets are small:
+        # |queries| × |probe| entries, driver-side only)
+        by_cell: dict[int, list[int]] = {}
+        for qi, cells in enumerate(probes):
+            for c in cells:
+                by_cell.setdefault(c, []).append(qi)
+        cell_col = self._spec.sort_col
+        # exhaustive-probe shortcut (r5 verdict #5): when EVERY query probes
+        # every cell (the tune ground-truth pass), the In(cell,…) predicate
+        # selects everything — skip it instead of shipping a cell-count-sized
+        # filter, and fan every row out to all queries
+        n_cells = self._n_cells()
+        full_scan = all(len(cells) >= n_cells for cells in probes)
+        # sorted-cell flat tables (r5 verdict #6): the per-batch fan-out is
+        # np.searchsorted + flat gathers — no per-row Python dict lookups
+        ckeys = np.asarray(sorted(by_cell), dtype=np.int64)
+        if full_scan:
+            cand = self.vectors
+        else:
+            # two-level pruning: part_col is the PartitionFilter (directories
+            # listed/read), cell_col the pushed data predicate pruned by the
+            # files' cell-sorted row-group stats
+            groups = sorted({int(g) for g in self._groups_of(ckeys)})
+            cand = self.vectors.filter(
+                F.col(self._spec.part_col).isin(groups)
+                & F.col(cell_col).isin(ckeys.tolist())
+            )
+        ccnt = np.asarray([len(by_cell[int(c)]) for c in ckeys], dtype=np.int64)
+        coff = np.zeros(ckeys.shape[0] + 1, dtype=np.int64)
+        np.cumsum(ccnt, out=coff[1:])
+        cq = np.concatenate(
+            [np.asarray(by_cell[int(c)], dtype=np.int64) for c in ckeys]
+        ) if ckeys.shape[0] else np.empty(0, dtype=np.int64)
+        qmat = np.stack([np.asarray(queries[qid], dtype=np.float64) for qid in qids])
+        qnorm = np.linalg.norm(qmat, axis=1)
+        qid_arr = np.asarray(qids, dtype=np.int64)
+        n_q = len(qids)
+        to_matrix = self._decoder()
+
+        def score(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+            from ..codecs.multilist import concat_aranges
+
+            for pdf in batches:
+                if not len(pdf):
+                    continue
+                m = to_matrix(pdf)
+                # ONE GEMM scores every candidate against every query …
+                cos = (m @ qmat.T) / np.outer(np.linalg.norm(m, axis=1), qnorm)
+                vids = pdf["vec_id"].to_numpy()
+                nrows = vids.shape[0]
+                if full_scan:
+                    row_idx = np.repeat(np.arange(nrows, dtype=np.int64), n_q)
+                    q_idx = np.tile(np.arange(n_q, dtype=np.int64), nrows)
+                else:
+                    # … then rows emit only for queries whose probe set
+                    # contains the row's cell (per-query pruning preserved)
+                    pos = np.searchsorted(ckeys, pdf[cell_col].to_numpy())
+                    reps = ccnt[pos]
+                    row_idx = np.repeat(np.arange(nrows, dtype=np.int64), reps)
+                    q_idx = cq[np.repeat(coff[pos], reps) + concat_aranges(reps)]
+                yield pd.DataFrame(
+                    {
+                        "query_id": qid_arr[q_idx].astype(np.int32),
+                        "vec_id": vids[row_idx],
+                        "cos": np.round(cos[row_idx, q_idx], 6),
+                    }
+                )
+
+        return cand.select("vec_id", cell_col, self.payload_col).mapInPandas(
+            score, schema="query_id int, vec_id long, cos double"
+        )
+
+
+def recall_sweep(reader: CellIndexReader, n_queries: int, k: int, knob: str, widths: list[int]):
+    """The tune step's sweep (the reference's nprobe tune, Makefile:31-32):
+    recall@k of the probe widths in ascending order against the widest one,
+    which probes every cell and IS the exhaustive scan. Sample queries are
+    the index's own ``n_queries`` lowest-vec_id vectors as the reader
+    scores them (deterministic, no external data; a coded index's codes are
+    reconstructed, so the sweep measures its quantizer's own geometry).
+    Each width is ONE batched ``topk_many`` job over every sample query
+    (rank-identical to per-query topk, tested), so the sweep runs
+    O(len(widths)) jobs instead of n_queries × widths. Stops at the first
+    width reaching recall 1.0 — guaranteed by the last width at the latest.
+    -> (chosen width, {str(width): recall}, number of sample queries)."""
+    import pandas as pd
+
+    cols = [reader._spec.sort_col, reader.payload_col]
+    rows = reader.vectors.select("vec_id", *cols).orderBy("vec_id").limit(n_queries).collect()
+    m = reader._decoder()(pd.DataFrame({c: [r[c] for r in rows] for c in cols})) if rows else []
+    # positional query ids (0..n-1), NOT raw vec_ids: topk_many's query_id
+    # column is int32 and production vec_ids can exceed it
+    qvecs = {i: [float(x) for x in m[i]] for i in range(len(rows))}
+
+    def topk_sets(width: int) -> dict[int, set[int]]:
+        out: dict[int, set[int]] = {qid: set() for qid in qvecs}
+        for row in reader.topk_many(qvecs, k=k, **{knob: width}).collect():
+            out[int(row["query_id"])].add(row["vec_id"])
+        return out
+
+    truth = topk_sets(widths[-1])
+    total = sum(len(t) for t in truth.values())
+    sweep: dict[str, float] = {}
+    for width in widths:
+        got = topk_sets(width)
+        hits = sum(len(got[q] & truth[q]) for q in qvecs)
+        recall = round(hits / total, 4) if total else 1.0
+        sweep[str(width)] = recall
+        if recall >= 1.0:
+            break
+    return width, sweep, len(qvecs)

@@ -64,6 +64,17 @@ INDEX_FORMAT = 5
 # pushes past this many, merge_index folds everything back to gen=0
 DEFAULT_MAX_GENERATIONS = 8
 
+# dictionary row-group size: each file is written term_id-sorted, so
+# IndexReader.lookup_terms' pushed In(term_id,…) predicate (used above the
+# driver-side cache) prunes every file to the row groups holding the query's
+# terms instead of reading the whole vocabulary
+DICT_ROW_GROUP_BYTES = 64 << 10
+
+
+def _commit_dictionary(df: DataFrame, index_dir: str) -> None:
+    commit(df, index_dir, "dictionary", sort_by=["term_id"],
+           row_group_bytes=DICT_ROW_GROUP_BYTES)
+
 
 def list_source_partitions(transcripts_dir: str) -> list[int]:
     return sorted(
@@ -350,12 +361,12 @@ def build_doc_index(
            row_group_bytes=8 << 20)
 
     merged = read_table(spark, index_dir, "postings")
-    commit(
+    _commit_dictionary(
         merged.groupBy("term_id")
         .agg(F.sum("df").alias("df"), F.first("bucket").alias("bucket"))
         .withColumn("through_gen", F.lit(0))
         .withColumn("through_fp", F.lit(_parts_fingerprint({0}))),
-        index_dir, "dictionary",
+        index_dir,
     )
     n_terms = read_table(spark, index_dir, "dictionary").count()  # footer metadata only
 
@@ -580,14 +591,14 @@ def merge_index(
                 .groupBy("term_id")
                 .agg(F.sum("df").alias("df"), F.first("bucket").alias("bucket"))
             )
-            commit(_mark(new_dict), index_dir, "dictionary")
+            _commit_dictionary(_mark(new_dict), index_dir)
         else:
             new_dict = (
                 read_table(spark, index_dir, "postings")
                 .groupBy("term_id")
                 .agg(F.sum("df").alias("df"), F.first("bucket").alias("bucket"))
             )
-            commit(_mark(new_dict), index_dir, "dictionary")
+            _commit_dictionary(_mark(new_dict), index_dir)
         # parquet count() is footer-metadata only — no data scan
         return read_table(spark, index_dir, "dictionary").count()
 

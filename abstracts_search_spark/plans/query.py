@@ -32,11 +32,6 @@ from ..operators.wand import idf_of, make_multi_scorer, make_shard_scorer
 from ..sources.tables import read_table
 
 
-def _query_tids(text: str) -> dict[int, str]:
-    """query text -> {term_id: term} for its distinct tokens."""
-    return {term_id_of(t): t for t in sorted(set(tokenize_pd(pd.Series([text]))[0]))}
-
-
 def _env_cache_limit(default: int) -> int:
     """SPARK_GRAFT_DICT_CACHE_TERMS, parsed defensively: non-integer values
     fall back to the default with a warning instead of crashing reader
@@ -56,57 +51,6 @@ def _env_cache_limit(default: int) -> int:
             stacklevel=3,
         )
         return default
-
-
-def indexed_topk_inmem(
-    docs: DataFrame,
-    query_text: str,
-    k: int = 10,
-    buckets: int = 8,
-    shard_docs: int = 256,
-    method: str = "bmw",
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
-    """Full indexed pipeline (segments → merge → WAND) without touching disk.
-
-    Test/oracle helper ONLY (the flagship path queries a persisted index via
-    IndexReader): the result must equal plain brute-force BM25 SQL — which is
-    exactly what the DuckDB oracle runs. -> (doc_id, score) in rank order.
-    """
-    from ..operators.bm25_brute import doc_tokens
-    from ..operators.postings import build_segments, merge_segments
-
-    spark = docs.sparkSession
-    tids = _query_tids(query_text)
-    if not tids:
-        return spark.createDataFrame([], "doc_id long, score double")
-    tokens = doc_tokens(docs, text_col=text_col, id_col=id_col).withColumn(
-        "src_part", F.lit(0)
-    )
-    stats = tokens.select("doc_id", "doclen").distinct().agg(
-        F.count("*").alias("n"), F.avg("doclen").alias("avgdl")
-    ).collect()[0]
-    n_docs, avgdl = int(stats["n"]), float(stats["avgdl"])
-    segments = build_segments(tokens, buckets=buckets, shard_docs=shard_docs)
-    postings = merge_segments(segments)
-    dfs = {
-        int(r["term_id"]): int(r["df"])
-        for r in postings.filter(F.col("term_id").isin(list(tids)))
-        .groupBy("term_id")
-        .agg(F.sum("df").alias("df"))
-        .collect()
-    }
-    if not dfs:
-        return spark.createDataFrame([], "doc_id long, score double")
-    idfs = {t: idf_of(n_docs, d) for t, d in dfs.items()}
-    scorer = make_shard_scorer(idfs, k, avgdl, method=method)
-    per_shard = (
-        postings.filter(F.col("term_id").isin(list(idfs)))
-        .groupBy("shard")
-        .applyInPandas(scorer, "doc_id long, score double")
-    )
-    return per_shard.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
 
 
 class IndexReader:

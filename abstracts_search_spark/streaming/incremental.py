@@ -213,13 +213,14 @@ def stream_sync_vectors(
     never retrain). Rerunning after new files land processes only the new
     files. Returns {"batches": n_appended}.
     """
-    from ..operators.ivf import _ivf_params_path, sync_ivf_index
-    from ..operators.similarity import _ann_params_path, sync_ann_index
+    from ..operators import vecindex
+    from ..operators.ivf import _IVF_SPEC, sync_ivf_index
+    from ..operators.similarity import _ANN_SPEC, sync_ann_index
 
     if kind == "ivf":
-        params_path, sync = _ivf_params_path(index_dir), sync_ivf_index
+        params_path, sync = vecindex.params_path(index_dir, _IVF_SPEC), sync_ivf_index
     elif kind == "ann":
-        params_path, sync = _ann_params_path(index_dir), sync_ann_index
+        params_path, sync = vecindex.params_path(index_dir, _ANN_SPEC), sync_ann_index
     else:
         raise ValueError(f"unknown vector index kind {kind!r}")
     if not os.path.exists(params_path):

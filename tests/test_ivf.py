@@ -5,6 +5,7 @@ persisted index probe, empty-list survival, reader staleness."""
 import os
 
 import numpy as np
+import pytest
 from pyspark.sql import functions as F
 
 from abstracts_search_spark.operators.ivf import (
@@ -329,6 +330,35 @@ def test_topk_many_equals_per_query(spark, tmp_path):
         ]
         assert sorted(got[qid]) == want
     assert r.topk_many({}, k=3).count() == 0
+
+
+@pytest.mark.parametrize("kind", ["lsh", "ivf", "sq8", "sq8r"])
+def test_single_topk_plan_and_equivalence(spark, tmp_path, kind):
+    """Every reader kind answers one query through the same shape: a
+    TakeOrderedAndProject over the GEMM scan — no per-query window and so
+    no shuffle — with the rows topk_many ranks 1..k for that query."""
+    from abstracts_search_spark.operators.similarity import AnnIndexReader, build_ann_index
+
+    emb = _emb(spark)
+    out = str(tmp_path / kind)
+    if kind == "lsh":
+        build_ann_index(emb, out, n_planes=6)
+        r = AnnIndexReader(spark, out)
+    else:
+        build_ivf_index(emb, out, n_lists=8, iters=2,
+                        quantize="none" if kind == "ivf" else kind)
+        r = IvfIndexReader(spark, out)
+    q = [float(v) for v in emb.filter(F.col("vec_id") == 5).first()["embedding"]]
+    df = r.topk(q, k=7)
+    single = df.collect()
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "TakeOrderedAndProject" in plan
+    assert "Exchange" not in plan and "Window" not in plan, plan
+    assert len(single) == 7 and single[0]["vec_id"] == 5
+    many = sorted(
+        (x["rank"], x["vec_id"], x["cos"]) for x in r.topk_many({0: q}, k=7).collect()
+    )
+    assert many == [(i + 1, x["vec_id"], x["cos"]) for i, x in enumerate(single)]
 
 
 def test_tune_ivf_records_recall(spark, tmp_path):

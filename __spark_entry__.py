@@ -352,10 +352,10 @@ def _q_ann_lsh(spark, sf_dir):
     # the SCALE path: probe the persisted bucket-partitioned ANN index
     # (partition pruning reads only the probed buckets' files; candidates
     # scored with one float64 GEMM per Arrow batch — no interpreted HOF
-    # fold) — same results as the unindexed ann_lsh_topk scan, same oracle
-    idx = _ann_index_dir(spark, sf_dir)
-    return similarity.ann_index_topk(
-        spark, idx, _query_vec(spark, sf_dir), k=ANN_K, probe_hamming=1
+    # fold) — same results as the unindexed ann_lsh_topk scan, same oracle.
+    # The cached reader skips the per-open listing of the vectors table.
+    return _ann_reader(spark, sf_dir).topk(
+        _query_vec(spark, sf_dir), k=ANN_K, probe_hamming=1
     )
 
 

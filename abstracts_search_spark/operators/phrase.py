@@ -8,9 +8,10 @@ engine (this repo's tier) needs one. Two paths, identical results (tested):
   whole-stage codegen end to end, and the identical algorithm runs in the
   DuckDB oracle, so counts match bit-for-bit. A full corpus scan per query:
   the correctness oracle.
-- **indexed** (`make_phrase_matcher`, driven by ``IndexReader.phrase_query``)
-  — the scale path: dictionary lookup → bucket-pruned, term-pushed postings
-  scan → per-shard POSITION intersection over the positional varint stream
+- **indexed** (`make_phrase_matcher_multi`, driven by
+  ``IndexReader.phrase_query`` and ``phrase_query_many``) — the scale path:
+  dictionary lookup → bucket-pruned, term-pushed postings scan → per-shard
+  POSITION intersection over the positional varint stream
   (codecs/postings.py pos_bin). Only the phrase terms' posting lists are ever
   read; the corpus is never scanned.
 
@@ -219,18 +220,5 @@ def make_phrase_matcher_multi(term_seqs: dict[int, list[int]]):
                     out_d.append(int(cand[ranks[a]]))
                     out_n.append(n)
         return pd.DataFrame({"query_id": out_q, "doc_id": out_d, "n_hits": out_n})
-
-    return match_shard
-
-
-def make_phrase_matcher(term_seq: list[int]):
-    """Single-phrase wrapper over :func:`make_phrase_matcher_multi` ->
-    applyInPandas fn emitting (doc_id, n_hits). Top-k is the CALLER's
-    orderBy/limit (global TakeOrderedAndProject) — no per-shard truncation
-    happens here."""
-    multi = make_phrase_matcher_multi({0: term_seq})
-
-    def match_shard(pdf: pd.DataFrame) -> pd.DataFrame:
-        return multi(pdf)[["doc_id", "n_hits"]]
 
     return match_shard

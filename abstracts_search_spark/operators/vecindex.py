@@ -61,13 +61,9 @@ def read_params(out_dir: str, spec: VecIndexSpec) -> dict:
 
 
 def write_params(out_dir: str, spec: VecIndexSpec, params: dict) -> None:
-    """Atomic marker write (ADVICE r5): tmp + os.replace — a crash mid-write
-    leaves the previous complete marker, never truncated JSON."""
-    path = params_path(out_dir, spec)
-    tmp = path + ".tmp"
-    with open(tmp, "w") as f:
-        json.dump(params, f)
-    os.replace(tmp, path)
+    from ..sources.tables import write_params as write_atomic
+
+    write_atomic(params_path(out_dir, spec), params)
 
 
 def check_format(p: dict, out_dir: str, spec: VecIndexSpec, appending: bool = False) -> None:
@@ -185,19 +181,19 @@ def compact_generations(spark, out_dir: str, spec: VecIndexSpec) -> int:
 
 
 class Staleness:
-    """Reader staleness protocol of :class:`CellIndexReader`:
-    the params marker is rewritten LAST by every sync/tune/compaction, so
-    its (mtime_ns, size) is a complete change signal — one cheap stat() per
-    query, re-``_attach`` on change (table handles must be re-created too:
-    a DataFrame's file index is frozen at read time, so a new gen=G dir is
-    invisible to old handles)."""
+    """The one reader staleness protocol (:class:`CellIndexReader` and the
+    text ``plans/query.IndexReader``): the params file at ``_params_file``
+    is rewritten LAST by every sync/tune/compaction, so its (mtime_ns, size)
+    is a complete change signal — one cheap stat() per query, re-``_attach``
+    on change (table handles must be re-created too: a DataFrame's file
+    index is frozen at read time, so a new gen=G dir is invisible to old
+    handles). ``_attach`` records the signature it attached at in ``_sig``."""
 
-    index_dir: str
-    _spec: VecIndexSpec
+    _params_file: str
     _sig: tuple[int, int] | None
 
     def _signature(self) -> tuple[int, int]:
-        st = os.stat(params_path(self.index_dir, self._spec))
+        st = os.stat(self._params_file)
         return (st.st_mtime_ns, st.st_size)
 
     def _refresh_if_stale(self) -> None:
@@ -243,7 +239,7 @@ class CellIndexReader(Staleness):
     def __init__(self, spark, index_dir: str):
         self.spark = spark
         self.index_dir = index_dir
-        self._sig: tuple[int, int] | None = None
+        self._params_file = params_path(index_dir, self._spec)
         self._attach()
 
     def _attach(self) -> None:

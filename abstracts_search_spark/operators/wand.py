@@ -1,22 +1,26 @@
-"""Query-time top-k over merged postings (SURVEY.md §2.6 T2, §3.2).
+"""Query-time BM25 top-k over merged postings (SURVEY.md §2.6 T2, §3.2).
 
-Two exact scorers run per (shard) group inside ``applyInPandas`` — shards
-tile the docID space disjointly, so per-shard top-k → global
-TakeOrderedAndProject(k) is exact:
+One scorer, :func:`make_scorer`, runs per (shard) group inside
+``applyInPandas`` for every text query: a single query is a batch of one.
+Shards tile the docID space disjointly, so per-shard top-k → global top-k is
+exact. Per (query, shard) it runs one of two exact methods:
 
-- ``bmw``  — zone-vectorized block-max WAND: per-block (max_tf, min_dl)
-  upper bounds (computed with LIVE corpus stats) are folded into per-ZONE
-  bounds (zones = doc ranges cut at the union of block boundaries); zones are
-  scored whole-zone with numpy in descending-bound order and the loop stops
-  when the k-th score meets the next bound. Blocks that can't beat θ are
-  never DECODED (block-restarted varint streams make per-block decode
-  possible). The analog of FAISS-IVF probing only nprobe inverted lists
-  (/root/reference/Makefile:24-25; README.md:16). The classic per-document
-  pivot walk is kept as ``wand_topk_docwise`` for cross-check tests.
+- ``bmw`` — zone-vectorized block-max WAND (:func:`wand_topk`): per-block
+  (max_tf, min_dl) upper bounds (computed with LIVE corpus stats) are folded
+  into per-ZONE bounds (zones = doc ranges cut at the union of block
+  boundaries); zones are scored whole-zone with numpy in descending-bound
+  order and the loop stops when the k-th score meets the next bound. Blocks
+  that can't beat θ are never DECODED (block-restarted varint streams make
+  per-block decode possible). The analog of FAISS-IVF probing only nprobe
+  inverted lists (the reference's Makefile:24-25; README.md:16). The classic
+  per-document pivot walk is kept as ``wand_topk_docwise`` for cross-check
+  tests.
 - ``taat`` — term-at-a-time vectorized scoring: numpy bincount accumulation
-  over the shard's bounded doc range. No skipping, but zero Python-per-doc
+  over the shard's bounded doc range, each list decoded once per shard and
+  shared across the batch's queries. No skipping, but zero Python-per-doc
   work; wins when query terms are hot (dense lists).
 
+``auto`` picks between them per (query, shard) with :func:`pick_method`.
 Both return identical rankings (tested); tie-break everywhere is
 (score DESC, doc_id ASC). All arithmetic float64.
 """
@@ -232,120 +236,99 @@ def wand_topk_docwise(rows: list[dict], idfs: dict[int, float], k: int, k1: floa
     return [(doc, s) for s, doc in out]
 
 
-def taat_topk(rows: list[dict], idfs: dict[int, float], k: int, k1: float, b: float, avgdl: float):
-    """Exact vectorized term-at-a-time scoring over one shard."""
-    base = min(int(r["first_doc"]) for r in rows)
-    hi = max(int(r["last_doc"]) for r in rows)
-    width = hi - base + 1
-    acc = np.zeros(width, dtype=np.float64)
-    touched = np.zeros(width, dtype=bool)
-    for r in rows:
-        docs, tfs, dls = decode_posting_list(r)
-        contrib = _contrib(idfs[r["term_id"]], tfs, dls, k1, b, avgdl)
-        idx = docs - base
-        acc += np.bincount(idx, weights=contrib, minlength=width)
-        touched[idx] = True
-    cand = np.flatnonzero(touched)
-    scores = acc[cand]
-    order = np.lexsort((cand, -scores))[:k]  # (score DESC, doc ASC), exact
-    return [(int(cand[i]) + base, float(scores[i])) for i in order]
 
 
-def make_multi_scorer(
+def pick_method(df_sum: int, width: int) -> str:
+    """The ``auto`` choice for one (query, shard): TAAT when the query's
+    postings in the shard hold at least one entry per 64 docs of the shard's
+    doc range (dense: block skipping cannot prune much and one bincount per
+    list wins), block-max WAND otherwise. The ×64 crossover is MEASURED: on
+    random posting lists it sits near one posting per ~80 docs of range
+    across shard widths 16k→1M (BASELINE.md round 3)."""
+    return "taat" if df_sum * 64 >= width else "bmw"
+
+
+def make_scorer(
     query_idfs: dict[int, dict[int, float]],
     k: int,
     avgdl: float,
     k1: float = K1,
     b: float = B_BM25,
+    method: str = "auto",
 ):
-    """Batched scorer: decode each posting list ONCE per shard, score every
-    query that references it (vectorized TAAT per query). The throughput path
-    for query batches — one Spark job for the whole reference query set.
-    Returns an applyInPandas fn -> (query_id, doc_id, score) top-k per query.
+    """The one BM25 shard scorer: ``query_idfs`` is {query_id: {term_id:
+    idf}}; a single query is a batch of one. Returns an applyInPandas fn:
+    one shard's posting rows (the union of the queries' terms) ->
+    (query_id, doc_id, score), top k per query in the shard.
+
+    Per (query, shard) it runs ``method``: "bmw" (zone-vectorized block-max
+    WAND over the query's rows), "taat" (one bincount per list), or "auto"
+    (:func:`pick_method` on the query's rows). A list TAAT needs is decoded
+    once per shard and shared by every query that references it. Both
+    methods sum each doc's contributions in row order, so their rankings
+    and scores are bit-identical (tested) and the switch never changes a
+    result.
     """
     # A term's idf is GLOBAL (df over the whole corpus), so its per-doc BM25
     # contribution is identical for every query referencing it — that is what
-    # lets each posting row be decoded AND scored exactly once per shard. The
+    # lets each posting row be decoded AND scored once per shard. The
     # invariant is ASSERTED here (driver-side, at closure creation) instead of
-    # silently last-write-wins: a future caller passing per-query idfs for the
-    # same term would otherwise corrupt every other query's scores.
+    # silently last-write-wins: a caller passing per-query idfs for the same
+    # term would otherwise corrupt every other query's scores.
     term_idf: dict[int, float] = {}
     for qid, idfs in query_idfs.items():
         for t, i in idfs.items():
             prev = term_idf.setdefault(t, i)
             if prev != i:
                 raise ValueError(
-                    f"make_multi_scorer: term_id {t} has conflicting idf values "
+                    f"make_scorer: term_id {t} has conflicting idf values "
                     f"({prev} vs {i} in query {qid}); idf must be derived from "
                     "the global df for every query"
                 )
 
     def score_shard(pdf: pd.DataFrame) -> pd.DataFrame:
-        # a term may appear in MULTIPLE rows of one shard (one per index
-        # generation, disjoint doc sub-ranges) — accumulate, never overwrite.
-        decoded: dict[int, list[tuple]] = {}
+        rows = pdf.to_dict("records")
+        # a term may own SEVERAL rows of one shard (one per index generation,
+        # disjoint doc sub-ranges) — they accumulate, never overwrite
+        rows_of: dict[int, list[int]] = {}
+        for i, r in enumerate(rows):
+            rows_of.setdefault(r["term_id"], []).append(i)
         base = int(pdf["first_doc"].min())
-        hi = int(pdf["last_doc"].max())
-        width = hi - base + 1
-        for r in pdf.to_dict("records"):
-            tid = r["term_id"]
-            idf = term_idf.get(tid)
-            if idf is None:
-                continue
-            docs, tfs, dls = decode_posting_list(r)
-            decoded.setdefault(tid, []).append(
-                (docs - base, _contrib(idf, tfs, dls, k1, b, avgdl))
-            )
+        width = int(pdf["last_doc"].max()) - base + 1
+        decoded: dict[int, tuple[np.ndarray, np.ndarray]] = {}
         out_q, out_d, out_s = [], [], []
         for qid, idfs in query_idfs.items():
-            acc = np.zeros(width, dtype=np.float64)
-            touched = np.zeros(width, dtype=bool)
-            hit = False
-            for term in idfs:
-                got = decoded.get(term)
-                if got is None:
-                    continue
-                hit = True
-                for idx, contrib in got:
+            mine = sorted(i for t in idfs for i in rows_of.get(t, ()))
+            if not mine:
+                continue
+            m = method
+            if m == "auto":
+                lo = min(int(rows[i]["first_doc"]) for i in mine)
+                hi = max(int(rows[i]["last_doc"]) for i in mine)
+                m = pick_method(sum(int(rows[i]["df"]) for i in mine), hi - lo + 1)
+            if m == "bmw":
+                top = wand_topk([rows[i] for i in mine], idfs, k, k1, b, avgdl)
+                docs = [d for d, _ in top]
+                scores = [s for _, s in top]
+            else:
+                acc = np.zeros(width, dtype=np.float64)
+                touched = np.zeros(width, dtype=bool)
+                for i in mine:
+                    got = decoded.get(i)
+                    if got is None:
+                        d, tfs, dls = decode_posting_list(rows[i])
+                        idf = term_idf[rows[i]["term_id"]]
+                        got = decoded[i] = (d - base, _contrib(idf, tfs, dls, k1, b, avgdl))
+                    idx, contrib = got
                     acc += np.bincount(idx, weights=contrib, minlength=width)
                     touched[idx] = True
-            if not hit:
-                continue
-            cand = np.flatnonzero(touched)
-            scores = acc[cand]
-            order = np.lexsort((cand, -scores))[:k]
-            out_q.extend([qid] * len(order))
-            out_d.extend((cand[order] + base).tolist())
-            out_s.extend(scores[order].tolist())
+                cand = np.flatnonzero(touched)
+                order = np.lexsort((cand, -acc[cand]))[:k]  # (score DESC, doc ASC)
+                docs = (cand[order] + base).tolist()
+                scores = acc[cand[order]].tolist()
+            out_q.extend([qid] * len(docs))
+            out_d.extend(docs)
+            out_s.extend(scores)
         return pd.DataFrame({"query_id": out_q, "doc_id": out_d, "score": out_s})
-
-    return score_shard
-
-
-def make_shard_scorer(idfs: dict[int, float], k: int, avgdl: float,
-                      k1: float = K1, b: float = B_BM25, method: str = "auto"):
-    """Returns an applyInPandas function: one shard's posting rows -> top-k.
-
-    ``method``: "bmw" (zone-vectorized block-max), "taat" (vectorized), or
-    "auto" — decided PER SHARD from candidate density: when the query terms'
-    postings cover a meaningful fraction of the shard's doc range, block
-    skipping can't prune much and the single-bincount TAAT path wins; on
-    selective queries the zone scorer decodes only surviving blocks. Both are
-    exact (bit-identical accumulation order, tested), so the switch can never
-    change a ranking. The density threshold is MEASURED, not guessed: on
-    random posting lists the crossover sits near one posting per ~80 docs of
-    range across shard widths 16k→1M (see BASELINE.md round 3), hence ×64.
-    """
-
-    def score_shard(pdf: pd.DataFrame) -> pd.DataFrame:
-        m = method
-        if m == "auto":
-            width = int(pdf["last_doc"].max()) - int(pdf["first_doc"].min()) + 1
-            # ≥ one posting per 64 docs of range → dense → vectorized TAAT
-            m = "taat" if int(pdf["df"].sum()) * 64 >= width else "bmw"
-        fn = wand_topk if m == "bmw" else taat_topk
-        rows = pdf.to_dict("records")
-        top = fn(rows, idfs, k, k1, b, avgdl)
-        return pd.DataFrame({"doc_id": [d for d, _ in top], "score": [s for _, s in top]})
 
     return score_shard

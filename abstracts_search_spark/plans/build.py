@@ -44,7 +44,7 @@ from ..operators.postings import (
     merge_segments,
     pack_doc_tokens,
 )
-from ..sources.tables import commit, read_table, table_exists
+from ..sources.tables import commit, read_table, table_exists, write_params
 
 # bumped whenever the on-disk artifact schema changes
 # (2 = int64 term_id keys; 3 = generation-stacked postings/gen=G/bucket=B;
@@ -302,7 +302,7 @@ def build_index(
         # while TRUE destroy-params recovery (stub gone too) refuses loudly.
         # Overwritten by merge_index's full params when a merge runs.
         if not os.path.exists(params_path):
-            _write_params(params_path, {
+            write_params(params_path, {
                 "format": INDEX_FORMAT,
                 "tokenizer": tokenizer,
                 "positions": bool(with_positions),
@@ -387,7 +387,7 @@ def build_doc_index(
     )
     prepared.unpersist()
 
-    _write_params(
+    write_params(
         os.path.join(index_dir, "params.json"),
             {
                 "k1": K1,
@@ -405,17 +405,6 @@ def build_doc_index(
                 "tokenizer": tokenizer,
             },
         )
-
-
-def _write_params(path: str, params: dict) -> None:
-    """Atomic marker write (ADVICE r5, same contract as _write_ivf_params /
-    _write_ann_params): tmp + os.replace so a crash mid-write never leaves a
-    truncated params.json — the marker is either the old complete state or
-    the new one."""
-    tmp = path + ".tmp"
-    with open(tmp, "w") as f:
-        json.dump(params, f)
-    os.replace(tmp, path)
 
 
 def _parts_fingerprint(parts) -> int:
@@ -667,7 +656,7 @@ def merge_index(
     }
     if "method" in prev:  # keep the tune_index winner across syncs/compactions
         params["method"] = prev["method"]
-    _write_params(params_path, params)
+    write_params(params_path, params)
 
     # auto-compaction: generation fan-out exceeded the policy bound — fold
     # everything back to gen=0 (rank-identical by construction, tested). Runs

@@ -1,22 +1,26 @@
 """Search-parameter tuning — the `sidecar-search index tune` analog
 (/root/reference/Makefile:31-32: offline sweep → params.json).
 
-The engine's query-time tunable is the shard scorer: block-max WAND (skips
-decoding, wins on selective queries) vs vectorized TAAT (no skipping, zero
-per-doc Python, wins on hot/dense queries). `tune_index`:
+The engine's query-time tunable is the ``method`` of the one BM25 shard
+scorer (operators/wand.make_scorer): block-max WAND (skips decoding, wins on
+selective queries), vectorized TAAT (no skipping, zero per-doc Python, wins
+on hot/dense queries) or ``auto`` (per (query, shard) density rule).
+`tune_index`:
 
 1. times the INTERACTIVE path (per-query jobs) for each method on a sample
-   query set and records the winner — IndexReader.query uses it by default;
+   query set and records the winner — IndexReader.query and query_many use
+   it by default;
 2. times the BATCHED path (query_many — the throughput regime: one job, each
    posting row decoded once per shard) median-of-N with raw runs disclosed;
 3. records a per-(query, shard) METHOD HISTOGRAM: the decision the `auto`
    scorer would take for every shard it touches, recomputed driver-side from
-   posting metadata (sum(df) vs the shard's doc-range width — the same ×64
-   density rule as operators/wand.make_shard_scorer, measured in round 3).
-   The histogram makes the tuned choice auditable: a corpus whose histogram
-   is all-taat should not be served with method="bmw".
+   posting metadata through the reader's own tokenizer and candidate scan
+   and decided by the scorer's own rule (operators/wand.pick_method). The
+   histogram makes the tuned choice auditable: a corpus whose histogram is
+   all-taat should not be served with method="bmw".
 
-Everything lands in params.json, which IndexReader re-reads when it changes.
+Everything lands in params.json (written atomically — it is the index's
+completeness marker), which IndexReader re-reads when it changes.
 """
 
 from __future__ import annotations
@@ -28,26 +32,19 @@ import time
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
-AUTO_DENSITY_X = 64  # keep in sync with operators/wand.make_shard_scorer
+from ..operators.wand import pick_method
+from ..sources.tables import write_params
 
 
 def method_histogram(reader, sample_queries: list[str]) -> dict[str, int]:
     """Per-(query, shard) auto-decision counts over the sample set."""
-    from ..functions.tokenize import tokenize_pd
-    import pandas as pd
-
     hist = {"taat": 0, "bmw": 0}
     for q in sample_queries:
-        terms = sorted(set(tokenize_pd(pd.Series([q]))[0]))
-        entries = reader.lookup_terms(terms)
+        entries = reader.lookup_terms(sorted(set(reader.tokens(q))))
         if not entries:
             continue
-        tids = [e["term_id"] for e in entries]
-        buckets = sorted({int(e["bucket"]) for e in entries})
         rows = (
-            reader.postings.filter(
-                F.col("bucket").isin(buckets) & F.col("term_id").isin(tids)
-            )
+            reader.candidates(entries, ("df", "first_doc", "last_doc"))
             .groupBy("shard")
             .agg(
                 F.sum("df").alias("df_sum"),
@@ -57,9 +54,7 @@ def method_histogram(reader, sample_queries: list[str]) -> dict[str, int]:
             .collect()
         )
         for r in rows:
-            width = int(r["hi"]) - int(r["lo"]) + 1
-            dense = int(r["df_sum"]) * AUTO_DENSITY_X >= width
-            hist["taat" if dense else "bmw"] += 1
+            hist[pick_method(int(r["df_sum"]), int(r["hi"]) - int(r["lo"]) + 1)] += 1
     return hist
 
 
@@ -112,6 +107,5 @@ def tune_index(
         "n_queries": len(sample_queries),
     }
     params["method_histogram"] = hist
-    with open(params_path, "w") as f:
-        json.dump(params, f)
+    write_params(params_path, params)
     return params

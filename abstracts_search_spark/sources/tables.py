@@ -28,6 +28,7 @@ boundary.
 
 from __future__ import annotations
 
+import json
 import os
 import shutil
 
@@ -165,6 +166,16 @@ def commit(
     if os.path.exists(old):
         shutil.rmtree(old)
     _maybe_crash(name)
+
+
+def write_params(path: str, params: dict) -> None:
+    """Atomic write of an index's params JSON, its completeness marker:
+    tmp + os.replace, so a crash mid-write leaves the previous complete
+    marker, never truncated JSON."""
+    tmp = path + ".tmp"
+    with open(tmp, "w") as f:
+        json.dump(params, f)
+    os.replace(tmp, path)
 
 
 def _maybe_crash(name: str) -> None:

@@ -17,13 +17,14 @@ from __future__ import annotations
 import os
 
 import numpy as np
+import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
 from abstracts_search_spark.codecs.postings import encode_posting_list
 from abstracts_search_spark.operators.wand import (
     idf_of,
-    taat_topk,
+    make_scorer,
     wand_topk,
     wand_topk_docwise,
 )
@@ -49,6 +50,12 @@ def _results(spark, ix, **kw):
 
 
 # ------------------------------------------------------------- WAND zones --
+
+
+def taat_topk(rows, idfs, k, k1, b, avgdl):
+    """The shard scorer forced to TAAT on one query -> [(doc_id, score)]."""
+    out = make_scorer({0: idfs}, k, avgdl, k1=k1, b=b, method="taat")(pd.DataFrame(rows))
+    return list(zip(out["doc_id"].tolist(), out["score"].tolist()))
 
 
 def _random_shard(rng, n_docs=4000, n_terms=6, max_df=1800, tie_scores=False):

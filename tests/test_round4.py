@@ -11,38 +11,19 @@ from pyspark.sql import functions as F
 
 
 # ---------------------------------------------------------------------------
-# ADVICE r3: SPARK_GRAFT_DICT_CACHE_TERMS parsed defensively
-# ---------------------------------------------------------------------------
-
-
-def test_env_cache_limit_defensive(monkeypatch):
-    from abstracts_search_spark.plans.query import _env_cache_limit
-
-    monkeypatch.delenv("SPARK_GRAFT_DICT_CACHE_TERMS", raising=False)
-    assert _env_cache_limit(123) == 123
-    monkeypatch.setenv("SPARK_GRAFT_DICT_CACHE_TERMS", "42")
-    assert _env_cache_limit(123) == 42
-    monkeypatch.setenv("SPARK_GRAFT_DICT_CACHE_TERMS", "-5")
-    assert _env_cache_limit(123) == 0  # negative clamps, never disables-by-accident
-    monkeypatch.setenv("SPARK_GRAFT_DICT_CACHE_TERMS", "banana")
-    with pytest.warns(UserWarning):
-        assert _env_cache_limit(123) == 123  # non-integer falls back, warns
-
-
-# ---------------------------------------------------------------------------
-# ADVICE r3: make_multi_scorer asserts the global-idf invariant
+# ADVICE r3: the batched scorer asserts the global-idf invariant
 # ---------------------------------------------------------------------------
 
 
 def test_multi_scorer_conflicting_idf_raises():
-    from abstracts_search_spark.operators.wand import make_multi_scorer
+    from abstracts_search_spark.operators.wand import make_scorer
 
     # same term, two different idf values across queries -> loud error, not
     # silent last-write-wins
     with pytest.raises(ValueError, match="conflicting idf"):
-        make_multi_scorer({0: {7: 1.5}, 1: {7: 2.5}}, k=10, avgdl=10.0)
+        make_scorer({0: {7: 1.5}, 1: {7: 2.5}}, k=10, avgdl=10.0)
     # identical values are fine
-    make_multi_scorer({0: {7: 1.5}, 1: {7: 1.5}}, k=10, avgdl=10.0)
+    make_scorer({0: {7: 1.5}, 1: {7: 1.5}}, k=10, avgdl=10.0)
 
 
 # ---------------------------------------------------------------------------
@@ -485,6 +466,51 @@ def test_tune_batched_and_histogram(spark, small_dir, tmp_path):
     # a long-lived reader picks the tuned method up via the params refresh
     reader = IndexReader(spark, ix)
     assert reader.params["method_histogram"] == hist
+
+
+def test_tune_crash_mid_write_keeps_params(spark, tmp_path, monkeypatch):
+    """params.json is the index's completeness marker: a tune that dies while
+    writing it must leave the previous complete file, never truncated JSON."""
+    import json
+
+    from abstracts_search_spark.plans.build import build_doc_index
+    from abstracts_search_spark.plans.tune import tune_index
+
+    docs = spark.createDataFrame(
+        [(0, "alpha beta gamma"), (1, "beta gamma delta")], "doc_id long, text string"
+    )
+    idx = str(tmp_path / "ix")
+    build_doc_index(docs, idx, buckets=4, shard_docs=64)
+    params_path = os.path.join(idx, "params.json")
+    with open(params_path) as f:
+        before = json.load(f)
+
+    def dump_then_fail(obj, fp, *args, **kwargs):
+        fp.write(json.dumps(obj)[:20])
+        raise OSError("injected: disk full mid-write")
+
+    monkeypatch.setattr(json, "dump", dump_then_fail)
+    with pytest.raises(OSError, match="injected"):
+        tune_index(spark, idx, sample_queries=["alpha beta"], batched_runs=1)
+    monkeypatch.undo()
+    with open(params_path) as f:
+        assert json.load(f) == before
+
+
+def test_method_histogram_uses_index_tokenizer(spark, tmp_path):
+    """A unicode index's non-Latin sample queries are tokenized with the
+    index's tokenizer, so their shards land in the histogram."""
+    from abstracts_search_spark.plans.build import build_doc_index
+    from abstracts_search_spark.plans.query import IndexReader
+    from abstracts_search_spark.plans.tune import method_histogram
+
+    docs = spark.createDataFrame(
+        [(0, "Καλημέρα κόσμε"), (1, "Привет мир"), (2, "κόσμε мир")], "doc_id long, text string"
+    )
+    idx = str(tmp_path / "uni")
+    build_doc_index(docs, idx, buckets=4, shard_docs=64, tokenizer="unicode")
+    hist = method_histogram(IndexReader(spark, idx), ["κόσμε", "Привет мир"])
+    assert sum(hist.values()) > 0, hist
 
 
 # ---------------------------------------------------------------------------

@@ -14,19 +14,22 @@ conversation whose every turn is empty produces no document row.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
-def assemble_documents(transcripts: DataFrame) -> DataFrame:
-    """-> DataFrame(conv_id string, document string, n_turns long).
+def assemble_documents(transcripts: DataFrame, *extra: Column) -> DataFrame:
+    """-> DataFrame(conv_id string, document string, n_turns long, *extra).
 
     ``document`` = non-empty turn texts joined with single spaces under
     stable (conv_id, turn_idx) ordering (input rows may arrive in any order).
+    ``extra`` are further per-conversation aggregates over the same turns,
+    computed in the same pass (the index build adds src_part and doclen).
     """
     turns = transcripts.filter(F.col("text").isNotNull() & (F.col("text") != ""))
     ordered = F.array_sort(F.collect_list(F.struct("turn_idx", "text")))
     return turns.groupBy("conv_id").agg(
         F.concat_ws(" ", F.transform(ordered, lambda s: s.getField("text"))).alias("document"),
         F.count("*").alias("n_turns"),
+        *extra,
     )

@@ -2,7 +2,7 @@
 
 Scores every document for a query with pure DataFrame ops: tokenize →
 posexplode → tf → join df/N/avgdl → BM25 expression → TakeOrderedAndProject.
-This IS the oracle the indexed path (segments + merge + WAND) must match
+This IS the oracle the indexed path (postings + WAND) must match
 rank-identically (north_rule). All arithmetic in float64.
 
 BM25 (k1=1.2, b=0.75, BASELINE.json north_star):
@@ -189,8 +189,9 @@ def bm25_score_scan(
                     continue
                 n_docs += 1
                 sum_dl += len(toks)
+                present = set(toks)
                 for i, term in enumerate(terms):
-                    if term in toks:
+                    if term in present:
                         dfs[i] += 1
         if n_docs:
             yield pd.DataFrame(

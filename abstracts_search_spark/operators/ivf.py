@@ -105,8 +105,8 @@ def assign_ids(m: np.ndarray, cents: np.ndarray) -> np.ndarray:
     same round((‖v‖² − 2·v·c) + ‖c‖², 6) as the untiled version, blocks
     scan in ascending centroid order and the running update is a strict
     ``<`` (np.argmin keeps the first index within a block), so ties still
-    resolve to the lowest list id — same assignments, bounded memory
-    (scripts/ivf_assign_microbench.py measures the 65,536-list geometry).
+    resolve to the lowest list id — same assignments, with memory bounded
+    by one ASSIGN_ROW_CHUNK × ASSIGN_CENT_BLOCK tile at any list count.
     """
     n, k = m.shape[0], cents.shape[0]
     cc = (cents * cents).sum(axis=1)

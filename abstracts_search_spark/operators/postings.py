@@ -1,24 +1,27 @@
-"""Posting segment build + merge — the index centerpiece (SURVEY.md A5/A6).
+"""Posting-list encode + merge — the index centerpiece (SURVEY.md A5/A6).
 
 Mirrors the reference's two-stage shape: per-source-partition incremental
 builds that accumulate into a store (/root/reference/Makefile:57-66), then a
 global fill producing on-disk inverted lists (Makefile:24-25). Here:
 
-- **build_segments** — per src partition: tokens → dictionary-encoded to
-  int64 ``term_id`` → grouped by (src_part, bucket, shard) →
-  ``applyInPandas`` emits one encoded posting row per term.
-  ``bucket = term_id % B`` drives query-time partition pruning (the analog of
-  IVF probing only nprobe lists, SURVEY.md §4); ``shard = doc_id //
-  shard_docs`` tiles the docID space so doc ranges are DISJOINT across shards.
-- **merge_segments** — grouped by (bucket, shard): concatenates each term's
-  per-src-partition postings (disjoint doc sets), re-sorts, re-encodes with
-  block metadata.
+- **pack_doc_tokens** — tokenize + per-doc tf + ``term_id`` hash + bucket in
+  one Arrow pass, one packed row per (doc, bucket).
+- **build_segments_packed** — the one encoder: grouped by (bucket, shard),
+  one encoded posting row per term. Every text write (batch build, stream
+  epoch, documents index) encodes its rows ONCE with it and stores them as
+  one postings generation ``gen=G``. ``bucket = term_id % B`` drives
+  query-time partition pruning (the analog of IVF probing only nprobe lists,
+  SURVEY.md §4); ``shard = doc_id // shard_docs`` tiles the docID space so
+  doc ranges are DISJOINT across shards.
+- **merge_segments** — the compaction fold: grouped by (bucket, shard), it
+  concatenates each term's rows from every generation (disjoint doc sets),
+  re-sorts and re-encodes them as one row.
 
 Skew (north_star: hot terms 'user'/'assistant'): a hot term's postings are
 bounded per group by the shard's doc-range width — the skew is sharded away
 structurally instead of salted after the fact; a term appearing in every doc
-produces `n_shards` independent, equally-sized merge rows (and query-time
-rows) that process in parallel. AQE never sees a mega-group.
+produces `n_shards` independent, equally-sized rows (and query-time rows)
+that process in parallel. AQE never sees a mega-group.
 """
 
 from __future__ import annotations
@@ -57,7 +60,6 @@ _POSTING_COLS = (
     "pos_bin binary, pos_offs array<int>"
 )
 
-SEGMENT_SCHEMA = f"src_part int, bucket int, shard long, {_POSTING_COLS}"
 POSTINGS_SCHEMA = f"bucket int, shard long, {_POSTING_COLS}"
 
 
@@ -74,29 +76,6 @@ def bucket_of_id(tid: int, buckets: int) -> int:
     """Bucket from the signed id. Python's ``%`` with a positive modulus
     equals Spark's ``pmod`` — either side may compute it, identically."""
     return tid % buckets
-
-
-def _term_id_udf():
-    """Vectorized term→term_id for string-token DataFrames (the build_segments
-    / build_segments_raw ingest shape). Per-batch cache: hashing cost is per
-    UNIQUE term, not per occurrence."""
-    from pyspark.sql import types as T
-    from pyspark.sql.functions import pandas_udf
-
-    def _run(terms):
-        cache: dict[str, int] = {}
-        get = cache.get
-
-        def one(t):
-            v = get(t)
-            if v is None:
-                v = term_id_of(t)
-                cache[t] = v
-            return v
-
-        return terms.map(one)
-
-    return pandas_udf(_run, T.LongType())
 
 
 _EMPTY_COLS = (
@@ -144,88 +123,6 @@ def _emit_rows(term_arr, doc_arr, tf_arr, dl_arr, head: dict, pos_flat=None) -> 
     pos = _gather_positions(pos_flat, tf_arr, order) if pos_flat is not None else None
     return _encode_sorted(
         codes[order], uniques, doc_arr[order], tf_arr[order], dl_arr[order], head, pos=pos
-    )
-
-
-def _emit_rows_counting(term_arr, doc_arr, dl_arr, head: dict) -> pd.DataFrame:
-    """Like _emit_rows but over RAW token occurrences: computes tf by
-    run-length-encoding equal (term, doc) pairs after the lexsort — the
-    map-side tf aggregation happens here instead of a separate groupBy
-    shuffle (one exchange of the token stream instead of two)."""
-    codes, uniques = pd.factorize(term_arr, sort=False)
-    order = np.lexsort((doc_arr, codes))
-    codes, docs = codes[order], doc_arr[order]
-    dls = dl_arr[order]
-    new_pair = np.empty(len(codes), dtype=bool)
-    if len(codes):
-        new_pair[0] = True
-        np.logical_or(np.diff(codes) != 0, np.diff(docs) != 0, out=new_pair[1:])
-    starts = np.flatnonzero(new_pair)
-    tfs = np.diff(np.concatenate([starts, [len(codes)]]))
-    return _encode_sorted(codes[starts], uniques, docs[starts], tfs, dls[starts], head)
-
-
-def build_segments(
-    tokens: DataFrame,
-    buckets: int = DEFAULT_BUCKETS,
-    shard_docs: int = DEFAULT_SHARD_DOCS,
-) -> DataFrame:
-    """tokens(src_part, doc_id, doclen, term, tf) -> segment rows.
-
-    Terms are dictionary-encoded to int64 BEFORE the wide exchange (the ids
-    shuffle; the strings don't). The groupBy keys make the shuffle explicit:
-    one exchange hash-partitioned on (src_part, bucket, shard) — group width
-    bounded by shard_docs × (vocab / buckets), independent of term skew.
-    """
-    keyed = (
-        tokens.withColumn("term_id", _term_id_udf()(F.col("term")))
-        .drop("term")
-        .withColumn("bucket", F.pmod(F.col("term_id"), F.lit(buckets)).cast("int"))
-        .withColumn("shard", (F.col("doc_id") / F.lit(shard_docs)).cast("long"))
-    )
-
-    def build_group(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        src_part, bucket, shard = int(key[0]), int(key[1]), int(key[2])
-        return _emit_rows(
-            pdf["term_id"].to_numpy(np.int64),
-            pdf["doc_id"].to_numpy(np.int64),
-            pdf["tf"].to_numpy(np.int64),
-            pdf["doclen"].to_numpy(np.int64),
-            {"src_part": src_part, "bucket": bucket, "shard": shard},
-        )
-
-    return keyed.groupBy("src_part", "bucket", "shard").applyInPandas(
-        build_group, schema=SEGMENT_SCHEMA
-    )
-
-
-def build_segments_raw(
-    token_occurrences: DataFrame,
-    buckets: int = DEFAULT_BUCKETS,
-    shard_docs: int = DEFAULT_SHARD_DOCS,
-) -> DataFrame:
-    """Segment build over RAW token occurrences (src_part, doc_id, doclen, term)
-    — tf is counted inside the grouped UDF (run-length encode after lexsort),
-    so the token stream crosses exactly ONE exchange, carrying int64 term_ids.
-    Output ≡ build_segments over pre-aggregated tf rows (tested)."""
-    keyed = (
-        token_occurrences.withColumn("term_id", _term_id_udf()(F.col("term")))
-        .drop("term")
-        .withColumn("bucket", F.pmod(F.col("term_id"), F.lit(buckets)).cast("int"))
-        .withColumn("shard", (F.col("doc_id") / F.lit(shard_docs)).cast("long"))
-    )
-
-    def build_group(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        src_part, bucket, shard = int(key[0]), int(key[1]), int(key[2])
-        return _emit_rows_counting(
-            pdf["term_id"].to_numpy(np.int64),
-            pdf["doc_id"].to_numpy(np.int64),
-            pdf["doclen"].to_numpy(np.int64),
-            {"src_part": src_part, "bucket": bucket, "shard": shard},
-        )
-
-    return keyed.groupBy("src_part", "bucket", "shard").applyInPandas(
-        build_group, schema=SEGMENT_SCHEMA
     )
 
 
@@ -388,24 +285,34 @@ def pack_doc_tokens(
     return out
 
 
-def build_segments_packed(packed: DataFrame) -> DataFrame:
-    """Packed (doc, bucket) token groups -> encoded segment rows.
+def build_segments_packed(packed: DataFrame, counts) -> DataFrame:
+    """Packed (doc, bucket) token groups -> encoded posting rows, one per
+    (bucket, shard, term).
 
-    groupBy(src_part, bucket, shard) over packed rows; inside the UDF the
-    arrays are flattened with numpy (concatenate/repeat — no per-token Python)
-    and encoded per term_id. Output ≡ build_segments_raw (tested). When the
-    packed rows carry a ``positions`` column (pack_doc_tokens
-    ``with_positions``), the posting rows gain the pos_bin/pos_offs stream.
+    groupBy(bucket, shard) over packed rows; inside the UDF the arrays are
+    flattened with numpy (concatenate/repeat — no per-token Python) and
+    encoded per term_id. When the packed rows carry a ``positions`` column
+    (pack_doc_tokens ``with_positions``), the posting rows gain the
+    pos_bin/pos_offs stream. ``counts`` (an accumulator of
+    :class:`PartCounts`) collects each source partition's lineage numbers
+    while the rows are encoded — its (term, doc) entries and its
+    (term, shard) lists — so nothing is read back after the write.
     """
     with_positions = "positions" in packed.columns
 
     def build_group(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        src_part, bucket, shard = int(key[0]), int(key[1]), int(key[2])
+        bucket, shard = int(key[0]), int(key[1])
         lens = pdf["term_ids"].map(len).to_numpy(np.int64)
         tids = np.concatenate([np.asarray(t, dtype=np.int64) for t in pdf["term_ids"]])
         tfs = np.concatenate([np.asarray(t, dtype=np.int64) for t in pdf["tfs"]])
         doc_ids = np.repeat(pdf["doc_id"].to_numpy(np.int64), lens)
         dls = np.repeat(pdf["doclen"].to_numpy(np.int64), lens)
+        parts = np.repeat(pdf["src_part"].to_numpy(np.int64), lens)
+        lists = np.unique(np.stack([parts, tids]), axis=1)[0]
+        counts.add({
+            int(p): (int(n), int((lists == p).sum()))
+            for p, n in zip(*np.unique(parts, return_counts=True))
+        })
         pos_flat = None
         if with_positions:
             pos_flat = np.concatenate(
@@ -413,23 +320,35 @@ def build_segments_packed(packed: DataFrame) -> DataFrame:
                 or [np.empty(0, dtype=np.int64)]
             )
         return _emit_rows(
-            tids, doc_ids, tfs, dls,
-            {"src_part": src_part, "bucket": bucket, "shard": shard},
-            pos_flat=pos_flat,
+            tids, doc_ids, tfs, dls, {"bucket": bucket, "shard": shard}, pos_flat=pos_flat
         )
 
-    return packed.groupBy("src_part", "bucket", "shard").applyInPandas(
-        build_group, schema=SEGMENT_SCHEMA
-    )
+    return packed.groupBy("bucket", "shard").applyInPandas(build_group, schema=POSTINGS_SCHEMA)
 
 
-def merge_segments(segments: DataFrame) -> DataFrame:
-    """segment rows -> merged postings, one row per (bucket, shard, term).
+class PartCounts:
+    """AccumulatorParam summing {src_part: (n_postings, n_term_rows)}."""
 
-    Different src partitions hold disjoint doc sets (a conversation lives in
-    exactly one source partition), so the merge is concat + argsort + re-encode
-    per term — the per-term analog of FAISS fill appending rowids to each
-    centroid's list (/root/reference/Makefile:24-25).
+    @staticmethod
+    def zero(_value: dict) -> dict:
+        return {}
+
+    @staticmethod
+    def addInPlace(acc: dict, more: dict) -> dict:
+        for p, (n, r) in more.items():
+            n0, r0 = acc.get(p, (0, 0))
+            acc[p] = (n0 + n, r0 + r)
+        return acc
+
+
+def merge_segments(postings: DataFrame) -> DataFrame:
+    """Posting rows of several generations -> one row per (bucket, shard,
+    term): the compaction fold.
+
+    Different generations hold disjoint doc sets (a document is ingested
+    exactly once), so the merge is concat + argsort + re-encode per term —
+    the per-term analog of FAISS fill appending rowids to each centroid's
+    list (the reference's Makefile:24-25).
     """
 
     def merge_group(key, pdf: pd.DataFrame) -> pd.DataFrame:
@@ -437,40 +356,23 @@ def merge_segments(segments: DataFrame) -> DataFrame:
 
         bucket, shard = int(key[0]), int(key[1])
         dfs = pdf["df"].to_numpy(np.int64)
-        # pre-format-5 segment files have no pos_bin column: non-positional
-        n_pos = int(pdf["pos_bin"].notna().sum()) if "pos_bin" in pdf.columns else 0
-        if n_pos not in (0, len(pdf)):
-            # positional and bare segments in one index cannot merge into a
-            # consistent row (build_index enforces the contract at ingest;
-            # this guards hand-assembled segment tables)
-            raise ValueError(
-                f"merge group (bucket={bucket}, shard={shard}) mixes positional "
-                f"and non-positional segment rows ({n_pos}/{len(pdf)} positional)"
-            )
-        with_pos = n_pos == len(pdf)
-        if with_pos:
-            docs, tfs, dls, _, pos_flat = decode_posting_lists(
-                [bytes(b) for b in pdf["doc_bin"]],
-                [bytes(b) for b in pdf["tf_bin"]],
-                [bytes(b) for b in pdf["dl_bin"]],
-                dfs,
-                pos_bins=[bytes(b) for b in pdf["pos_bin"]],
-            )
-        else:
-            docs, tfs, dls, _ = decode_posting_lists(
-                [bytes(b) for b in pdf["doc_bin"]],
-                [bytes(b) for b in pdf["tf_bin"]],
-                [bytes(b) for b in pdf["dl_bin"]],
-                dfs,
-            )
+        with_pos = bool(pdf["pos_bin"].notna().any())
+        decoded = decode_posting_lists(
+            [bytes(b) for b in pdf["doc_bin"]],
+            [bytes(b) for b in pdf["tf_bin"]],
+            [bytes(b) for b in pdf["dl_bin"]],
+            dfs,
+            pos_bins=[bytes(b) for b in pdf["pos_bin"]] if with_pos else None,
+        )
+        docs, tfs, dls = decoded[:3]
         row_codes, uniques = pd.factorize(pdf["term_id"].to_numpy(np.int64), sort=False)
         codes = np.repeat(row_codes, dfs)
         order = np.lexsort((docs, codes))
-        pos = _gather_positions(pos_flat, tfs, order) if with_pos else None
+        pos = _gather_positions(decoded[4], tfs, order) if with_pos else None
         return _encode_sorted(
             codes[order], uniques, docs[order], tfs[order], dls[order],
             {"bucket": bucket, "shard": shard},
             pos=pos,
         )
 
-    return segments.groupBy("bucket", "shard").applyInPandas(merge_group, schema=POSTINGS_SCHEMA)
+    return postings.groupBy("bucket", "shard").applyInPandas(merge_group, schema=POSTINGS_SCHEMA)

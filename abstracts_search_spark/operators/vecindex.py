@@ -27,12 +27,13 @@ from __future__ import annotations
 
 import json
 import os
-import shutil
 from dataclasses import dataclass
 
 import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from ..sources.tables import scrub_orphan_generations
 
 # vectors-table row-group size: the pushed In(cell,…) predicate prunes
 # cell-sorted row groups of this size inside each directory
@@ -89,23 +90,6 @@ def commit_vectors(rows: DataFrame, out_dir: str, spec: VecIndexSpec, mode: str 
            sort_by=[spec.sort_col], row_group_bytes=VECTORS_ROW_GROUP_BYTES)
 
 
-def scrub_orphan_generations(out_dir: str, next_gen: int) -> None:
-    """Remove generation dirs at/past the params marker — output of a sync
-    that crashed before its params rewrite. Shared by sync (before
-    re-appending) and compact (an orphan folded into gen=0 would become a
-    permanent untracked batch whose tag-replay then DUPLICATES every row).
-    Also heals a crashed overwrite's ``vectors.__old`` first — an append
-    would otherwise strand the entire old corpus."""
-    from ..sources.tables import heal_table
-
-    heal_table(out_dir, "vectors")
-    vec_root = os.path.join(out_dir, "vectors")
-    if os.path.exists(vec_root):
-        for d in os.listdir(vec_root):
-            if d.startswith("gen=") and int(d.split("=", 1)[1]) >= next_gen:
-                shutil.rmtree(os.path.join(vec_root, d))
-
-
 def sync_generation(
     new_emb: DataFrame,
     out_dir: str,
@@ -143,7 +127,7 @@ def sync_generation(
             "this index"
         )
     next_gen = int(p["next_gen"])
-    scrub_orphan_generations(out_dir, next_gen)
+    scrub_orphan_generations(out_dir, "vectors", next_gen)
     commit_vectors(make_rows(p, next_gen), out_dir, spec, mode="append")
     p["merged_srcs"] = p["merged_srcs"] + [src_tag]
     p["next_gen"] = next_gen + 1
@@ -171,7 +155,7 @@ def compact_generations(spark, out_dir: str, spec: VecIndexSpec) -> int:
     n_gens = int(p["next_gen"])
     if n_gens <= 1:
         return 0  # single generation — nothing to fold
-    scrub_orphan_generations(out_dir, n_gens)
+    scrub_orphan_generations(out_dir, "vectors", n_gens)
     vectors = read_table(spark, out_dir, "vectors")
     folded = vectors.withColumn("gen", F.lit(0).cast("int"))
     commit_vectors(folded, out_dir, spec)
@@ -199,6 +183,16 @@ class Staleness:
     def _refresh_if_stale(self) -> None:
         if self._signature() != self._sig:
             self._attach()
+
+
+def no_rows(handle: DataFrame, schema: str) -> DataFrame:
+    """An empty DataFrame of ``schema`` that runs no Spark job: ``limit(0)``
+    on a table handle folds to an empty local relation, where
+    ``createDataFrame([], schema)`` is RDD-backed and costs a job."""
+    from pyspark.sql.types import _parse_datatype_string
+
+    fields = _parse_datatype_string(schema).fields
+    return handle.limit(0).select(*[F.lit(None).cast(f.dataType).alias(f.name) for f in fields])
 
 
 def raw_matrix(pdf) -> np.ndarray:
@@ -291,9 +285,7 @@ class CellIndexReader(Staleness):
         from pyspark.sql import Window
 
         if not queries:
-            return self.spark.createDataFrame(
-                [], "query_id int, rank int, vec_id long, cos double"
-            )
+            return no_rows(self.vectors, "query_id int, rank int, vec_id long, cos double")
         w = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("vec_id"))
         return (
             self._scored(queries, knobs)

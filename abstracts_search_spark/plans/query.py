@@ -7,9 +7,9 @@ the vector readers' ``vecindex.CellIndexReader``:
 1. tokenize each query with the index's tokenizer (:meth:`IndexReader.tokens`)
    and hash each term to its int64 ``term_id`` (operators/postings.term_id_of
    — the postings key; no string dictionary exists or is needed),
-2. look the ids up in `dictionary` (driver-cached for small vocabularies,
-   predicate-pushdown scan otherwise — the analog of loading params.json +
-   coarse quantizer),
+2. look the ids up in `dictionary` and sum each term's df over its
+   generations (driver-cached for small vocabularies, predicate-pushdown
+   scan otherwise — the analog of loading params.json + coarse quantizer),
 3. scan `postings` with bucket-partition pruning + term_id predicate,
    projecting only the columns the scorer reads (only the query terms'
    files/row-groups are read — the IVF-probe analog),
@@ -36,15 +36,26 @@ from pyspark.sql import functions as F
 from ..functions.tokenize import tokenize_pd
 from ..operators.phrase import make_phrase_matcher_multi
 from ..operators.postings import term_id_of
-from ..operators.vecindex import Staleness
+from ..operators.vecindex import Staleness, no_rows
 from ..operators.wand import idf_of, make_scorer
 from ..sources.tables import read_table
+from .build import check_format
 
 # postings columns each scorer reads — the pruned scan projects only these,
 # so BM25 never ships the positional stream to Python
 _BM25_COLS = ("term_id", "df", "first_doc", "last_doc", "doc_bin", "tf_bin", "dl_bin",
               "doc_offs", "tf_offs", "dl_offs", "block_last", "block_max_tf", "block_min_dl")
 _PHRASE_COLS = ("term_id", "df", "doc_bin", "tf_bin", "dl_bin", "pos_bin")
+
+
+def _df_sums(rows) -> dict[int, tuple[int, int]]:
+    """Dictionary rows of any generations -> {term_id: (df, bucket)}, df
+    summed across generations (a term's bucket is the same in all)."""
+    out: dict[int, tuple[int, int]] = {}
+    for r in rows:
+        tid = int(r["term_id"])
+        out[tid] = (out.get(tid, (0, 0))[0] + int(r["df"]), int(r["bucket"]))
+    return out
 
 
 class IndexReader(Staleness):
@@ -78,22 +89,26 @@ class IndexReader(Staleness):
         self._sig = self._signature()
         with open(self._params_file) as f:
             self.params = json.load(f)
+        check_format(self.params, self.index_dir)
         row = read_table(self.spark, self.index_dir, "stats").collect()[0]
         self.n_docs = int(row["n_docs"])
         self.avgdl = float(row["avgdl"])
         # table handles are re-created too: a DataFrame's file index is frozen
-        # at read time, so a new gen=G partition dir is invisible to old handles
-        self.postings = read_table(self.spark, self.index_dir, "postings")
-        self.dictionary = read_table(self.spark, self.index_dir, "dictionary")
+        # at read time, so a new gen=G partition dir is invisible to old
+        # handles. Only merged generations are visible: an ingested one
+        # joins at the merge that moves params.json's next_gen past it
+        merged = F.col("gen") < int(self.params["next_gen"])
+        self.postings = read_table(self.spark, self.index_dir, "postings").filter(merged)
+        self.dictionary = read_table(self.spark, self.index_dir, "dictionary").filter(merged)
         self.docmap = read_table(self.spark, self.index_dir, "docmap")
         # query text is normalized with the INDEX's tokenizer contract
         # (params.json "tokenizer", fixed at first ingest) — a unicode index
         # must not have its queries ascii-tokenized or non-Latin query terms
         # silently vanish before lookup
-        self._tokenizer: str = self.params.get("tokenizer", "ascii")
-        # vocab size is recorded at merge time (params.json n_terms); absent
-        # (pre-format-4 index) means unknown → treated as large, never counted
-        self._n_terms: int | None = self.params.get("n_terms")
+        self._tokenizer: str = self.params["tokenizer"]
+        # dictionary rows (all generations) recorded at merge time
+        # (params.json n_terms) — an upper bound on the vocabulary
+        self._n_terms = int(self.params["n_terms"])
         self._dict_cache: dict[int, tuple[int, int]] | None = None
         # big-vocab regime: terms already looked up (hits AND misses) are
         # remembered, bounded by the same cap — repeated hot query terms cost
@@ -102,11 +117,8 @@ class IndexReader(Staleness):
         self._lookup_cache: dict[int, tuple[int, int] | None] = {}
 
     def _cached_dict(self) -> dict[int, tuple[int, int]] | None:
-        if self._dict_cache is None and self._n_terms is not None and self._n_terms <= self._cache_limit:
-            self._dict_cache = {
-                int(r["term_id"]): (int(r["df"]), int(r["bucket"]))
-                for r in self.dictionary.collect()
-            }
+        if self._dict_cache is None and self._n_terms <= self._cache_limit:
+            self._dict_cache = _df_sums(self.dictionary.collect())
         return self._dict_cache
 
     def lookup_terms(self, terms: list[str]) -> list[dict]:
@@ -127,10 +139,7 @@ class IndexReader(Staleness):
             tid: self._lookup_cache[tid] for tid in tids if tid in self._lookup_cache
         }
         if unseen:
-            got = {
-                int(r["term_id"]): (int(r["df"]), int(r["bucket"]))
-                for r in self.dictionary.filter(F.col("term_id").isin(unseen)).collect()
-            }
+            got = _df_sums(self.dictionary.filter(F.col("term_id").isin(unseen)).collect())
             fresh = {tid: got.get(tid) for tid in unseen}
             entries.update(fresh)
             if len(self._lookup_cache) + len(fresh) <= self._cache_limit:
@@ -176,7 +185,7 @@ class IndexReader(Staleness):
                 query_idfs[qid] = idfs
         schema = "query_id int, doc_id long, score double"
         if not query_idfs:
-            return self.spark.createDataFrame([], schema)
+            return no_rows(self.postings, schema)
         scorer = make_scorer(
             query_idfs, k, self.avgdl, k1=self.params["k1"], b=self.params["b"],
             method=method or self.params.get("method", "auto"),
@@ -202,7 +211,7 @@ class IndexReader(Staleness):
         }
         schema = "query_id int, doc_id long, n_hits int"
         if not term_seqs:
-            return self.spark.createDataFrame([], schema)
+            return no_rows(self.postings, schema)
         live = [entries[t] for qid in term_seqs for t in toks[qid]]
         cand = self.candidates(live, _PHRASE_COLS)
         return cand.groupBy("shard").applyInPandas(make_phrase_matcher_multi(term_seqs), schema)

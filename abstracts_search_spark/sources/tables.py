@@ -9,10 +9,12 @@ Two backends:
   dir to ``<name>.__old`` → rename temp into place → drop ``__old``); a crash
   at any step leaves either the old or the new complete table, and
   ``read_table`` knows how to roll back the one ambiguous window (live dir
-  missing, ``__old`` present). Appends stay plain appends — the build's
-  per-partition scrub + lineage-last ordering already make them idempotent
-  (plans/build.py), which is this engine's `make recover` contract
-  (/root/reference/Makefile:98-101).
+  missing, ``__old`` present). ``commit_generation`` appends one whole
+  ``gen=G`` directory the same way (write under ``<name>.__staged`` → one
+  rename into place), so a generation is either all there or absent; the
+  build's orphan-generation scrub + lineage-last ordering make reruns
+  idempotent (plans/build.py), which is this engine's `make recover`
+  contract (the reference's Makefile:98-101).
 - **iceberg**: when ``SPARK_GRAFT_TABLE_FORMAT=iceberg`` (and an Iceberg
   catalog is on the session), tables are read/written through the catalog and
   every commit is an Iceberg snapshot — the reference's atomic grouped-target
@@ -86,7 +88,7 @@ def table_exists(root: str, name: str) -> bool:
     if not os.path.exists(path) and os.path.exists(path + ".__old"):
         return True
     return os.path.exists(path) and any(
-        f.endswith(".parquet") or f.startswith(("part=", "bucket=", "src_part="))
+        f.endswith(".parquet") or f.startswith(("part=", "bucket=", "src_part=", "gen="))
         for f in os.listdir(path)
     )
 
@@ -135,15 +137,19 @@ def commit(
         return
 
     path = os.path.join(root, name)
-    if mode == "append":
-        writer = out.write.mode("append")
+
+    def write(target: str, write_mode: str) -> None:
+        writer = out.write.mode(write_mode)
         if compression:
             writer = writer.option("compression", compression)
         if row_group_bytes:
             writer = writer.option("parquet.block.size", str(row_group_bytes))
         if partition_by:
             writer = writer.partitionBy(*partition_by)
-        writer.parquet(path)
+        writer.parquet(target)
+
+    if mode == "append":
+        write(path, "append")
         _maybe_crash(name)
         return
 
@@ -152,20 +158,59 @@ def commit(
     for d in (tmp, old):
         if os.path.exists(d):
             shutil.rmtree(d)
-    writer = out.write.mode("overwrite")
-    if compression:
-        writer = writer.option("compression", compression)
-    if row_group_bytes:
-        writer = writer.option("parquet.block.size", str(row_group_bytes))
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    writer.parquet(tmp)
+    write(tmp, "overwrite")
     if os.path.exists(path):
         os.rename(path, old)
     os.rename(tmp, path)
     if os.path.exists(old):
         shutil.rmtree(old)
     _maybe_crash(name)
+
+
+def commit_generation(df: DataFrame, root: str, name: str, gen: int, **opts) -> None:
+    """Append generation ``gen`` of a ``gen``-partitioned table, crash-atomic:
+    the rows (without a ``gen`` column) are written under
+    ``<name>.__staged/gen=G`` — outside the table, so no reader lists them —
+    and then renamed to ``<name>/gen=G`` in one step. A crash leaves either
+    the whole generation or none of it; ``opts`` are :func:`commit`'s."""
+    if _backend() == "iceberg":
+        from pyspark.sql import functions as F
+
+        parts = ["gen", *(opts.pop("partition_by", None) or [])]
+        commit(df.withColumn("gen", F.lit(gen)), root, name, mode="append",
+               partition_by=parts, **opts)
+        return
+    heal_table(root, name)
+    staged = os.path.join(root, f"{name}.__staged")
+    if os.path.exists(staged):
+        shutil.rmtree(staged)
+    commit(df, staged, f"gen={gen}", **opts)
+    path = os.path.join(root, name)
+    os.makedirs(path, exist_ok=True)
+    os.rename(os.path.join(staged, f"gen={gen}"), os.path.join(path, f"gen={gen}"))
+    shutil.rmtree(staged)
+    _maybe_crash(name)
+
+
+def generations(root: str, name: str) -> list[int]:
+    """The ``gen=G`` directories of a generation-partitioned table, ascending."""
+    path = os.path.join(root, name)
+    if not os.path.isdir(path):
+        return []
+    return sorted(int(d.split("=", 1)[1]) for d in os.listdir(path) if d.startswith("gen="))
+
+
+def scrub_orphan_generations(root: str, name: str, next_gen: int) -> None:
+    """Remove ``gen=G`` dirs at/past ``next_gen`` — the output of a write
+    that crashed before its commit marker (the text index's lineage, a
+    vector index's params). Callers run it before appending, so replays
+    converge instead of stacking a second copy of the rows. Heals a crashed
+    overwrite's ``<name>.__old`` first: an append would otherwise strand the
+    whole old table."""
+    heal_table(root, name)
+    for g in generations(root, name):
+        if g >= next_gen:
+            shutil.rmtree(os.path.join(root, name, f"gen={g}"))
 
 
 def write_params(path: str, params: dict) -> None:

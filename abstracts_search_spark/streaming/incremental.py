@@ -5,9 +5,10 @@ The reference is batch-incremental (re-run `make`, README.md:63-65 in
 plans/build.py. This module provides the equivalent semantics with
 harness-managed checkpoints instead of the lineage anti-join:
 ``readStream`` over the transcripts directory + ``Trigger.AvailableNow`` +
-``foreachBatch`` — each micro-batch builds posting segments exactly like the
-batch path, and Spark's streaming checkpoint (WAL of processed files) plays
-the role of the `events/` touch-files (Makefile:57-66).
+``foreachBatch`` — each micro-batch is committed by the batch path's own
+ingest body (plans/build.ingest) as one postings generation, and Spark's
+streaming checkpoint (WAL of processed files) plays the role of the
+`events/` touch-files (Makefile:57-66).
 
 Note on semantics: the file stream delivers whole FILES exactly once, so a
 conversation split across late-arriving files would assemble per-batch. The
@@ -19,15 +20,18 @@ partition file, matching the reference's assumption that one
 from __future__ import annotations
 
 import os
-import shutil
-import time
 
 from pyspark.sql import SparkSession
 
-from ..plans.build import merge_index
-from ..operators.docids import assign_doc_ids
 from ..operators.postings import DEFAULT_BUCKETS, DEFAULT_SHARD_DOCS
-from ..sources.tables import commit, read_table, table_exists
+from ..plans.build import (
+    check_contract,
+    committed_lineage,
+    documents,
+    ingest,
+    merge_index,
+    next_doc_id,
+)
 
 # streaming epochs are namespaced into their own src_part range so they can
 # never collide with batch-path part numbers (directory-derived small ints)
@@ -46,39 +50,19 @@ def stream_build(
     with_positions: bool = False,
     tokenizer: str = "ascii",
 ) -> dict:
-    """Drain all available transcript files into segments, then merge.
+    """Drain all available transcript files into postings generations, then
+    merge.
 
     Returns {"batches": n} — rerunning after new files land processes only
     the new files (checkpointed file WAL = resume-from-checkpoint).
-    ``with_positions`` and ``tokenizer`` follow the same index-wide
-    contracts as build_index: fixed at first ingest, mismatches refused.
+    ``with_positions``, ``tokenizer``, ``buckets`` and ``shard_docs`` follow
+    the same index-wide contracts as build_index (plans/build.check_contract).
     """
-    import json as _json
-
     from pyspark.sql import functions as F
 
-    from ..functions.tokenize import doclen_expr
-    from ..operators.postings import build_segments_packed, pack_doc_tokens
-
-    from ..plans.build import guard_lineage_layout
-
-    guard_lineage_layout(index_dir)
-    params_path = os.path.join(index_dir, "params.json")
-    if os.path.exists(params_path):
-        with open(params_path) as f:
-            _prev = _json.load(f)
-        prev_positions = _prev.get("positions", False)
-        if bool(prev_positions) != bool(with_positions):
-            raise ValueError(
-                f"index at {index_dir} was built with positions={prev_positions}; "
-                f"pass with_positions={prev_positions}"
-            )
-        prev_tok = _prev.get("tokenizer", "ascii")
-        if prev_tok != tokenizer:
-            raise ValueError(
-                f"index at {index_dir} was built with tokenizer={prev_tok!r}; "
-                f"pass tokenizer={prev_tok!r}"
-            )
+    contract = dict(buckets=buckets, shard_docs=shard_docs,
+                    positions=bool(with_positions), tokenizer=tokenizer)
+    check_contract(index_dir, **contract)
     checkpoint_dir = checkpoint_dir or os.path.join(index_dir, "_stream_checkpoint")
     schema = (
         "conv_id string, turn_idx int, role string, text string, tool string, ts timestamp"
@@ -91,83 +75,16 @@ def stream_build(
     n_batches = {"n": 0}
 
     def process_batch(batch_df, epoch_id: int) -> None:
-        t0 = time.time()
         src_part = STREAM_PART_BASE + int(epoch_id)
-        # foreachBatch is at-least-once: a crash after the appends below but
-        # before the checkpoint commit replays this epoch. Scrub any partial
-        # output of the same epoch first (mirrors build_index's pending-part
-        # scrub) so replays are idempotent instead of double-appending —
-        # lineage included: it is src_part-partitioned exactly so a replayed
-        # epoch REPLACES its lineage row instead of double-counting metrics.
-        for sub in ("segments", "docmap", "lineage"):
-            d = os.path.join(index_dir, sub, f"src_part={src_part}")
-            if os.path.exists(d):
-                shutil.rmtree(d)
-        turns = batch_df.filter(F.col("text").isNotNull() & (F.col("text") != ""))
-        if turns.isEmpty():
+        # foreachBatch is at-least-once: a crash after the lineage commit but
+        # before the checkpoint commit replays this epoch with the same
+        # files. Its lineage row is the commit marker, so a committed epoch
+        # is a no-op; an uncommitted one re-ingests after ingest's scrub.
+        lineage = committed_lineage(spark, index_dir)
+        if any(r["src_part"] == src_part for r in lineage) or batch_df.isEmpty():
             return
-        ordered = F.array_sort(F.collect_list(F.struct("turn_idx", "text")))
-        docs = turns.groupBy("conv_id").agg(
-            F.concat_ws(" ", F.transform(ordered, lambda s: s.getField("text"))).alias("document"),
-            F.count("*").alias("n_turns"),
-            F.sum(doclen_expr("text", tokenizer=tokenizer)).cast("int").alias("doclen"),
-        ).filter(F.col("doclen") > 0)
-        docs = docs.withColumn("src_part", F.lit(src_part))
-
-        start = 0
-        if table_exists(index_dir, "docmap"):
-            start = (
-                read_table(spark, index_dir, "docmap").agg(F.max("doc_id")).collect()[0][0] + 1
-            )
-        skinny = docs.select("conv_id", "src_part", "n_turns", "doclen")
-        ids = assign_doc_ids(skinny, start=start).persist()
-        fat = docs.select("conv_id", "document").join(ids, "conv_id")
-        packed = pack_doc_tokens(
-            fat.select("doc_id", "src_part", "doclen", "document"),
-            buckets=buckets,
-            shard_docs=shard_docs,
-            with_positions=with_positions,
-            tokenizer=tokenizer,
-        )
-        commit(build_segments_packed(packed), index_dir, "segments", mode="append",
-               partition_by=["src_part"], repartition_by=["src_part"],
-               compression="uncompressed")
-        commit(ids.select("doc_id", "conv_id", "doclen", "src_part"), index_dir,
-               "docmap", mode="append", partition_by=["src_part"],
-               repartition_by=["src_part"])
-        agg = ids.agg(
-            F.count("*").alias("n_docs"),
-            F.sum("n_turns").alias("n_turns"),
-            F.countDistinct("conv_id").alias("n_convs"),
-        ).collect()[0]
-        seg = (
-            read_table(spark, index_dir, "segments")
-            .filter(F.col("src_part") == src_part)
-            .agg(F.sum("df").alias("n_postings"), F.count("*").alias("n_term_rows"))
-            .collect()[0]
-        )
-        ids.unpersist()
-        # lineage LAST = per-epoch commit marker, same contract as the batch
-        # path; a mixed batch+stream index_dir now shares one lineage table
-        # with disjoint src_part namespaces, so neither mode re-ingests or
-        # collides with the other's partitions
-        lineage = spark.createDataFrame(
-            [
-                (
-                    src_part,
-                    int(agg["n_convs"]),
-                    int(agg["n_turns"]),
-                    int(agg["n_docs"]),
-                    int(seg["n_postings"] or 0),
-                    int(seg["n_term_rows"] or 0),
-                    float(time.time() - t0),
-                )
-            ],
-            "src_part int, n_convs long, n_turns long, n_docs long, "
-            "n_postings long, n_term_rows long, wall_sec double",
-        ).withColumn("ts", F.current_timestamp())
-        commit(lineage, index_dir, "lineage", mode="append",
-               partition_by=["src_part"], repartition_by=["src_part"])
+        docs = documents(batch_df.withColumn("src_part", F.lit(src_part)), tokenizer)
+        ingest(docs, index_dir, [src_part], **contract, start=next_doc_id(lineage))
         n_batches["n"] += 1
 
     q = (
@@ -177,7 +94,7 @@ def stream_build(
         .start()
     )
     q.awaitTermination()
-    if merge_after and n_batches["n"]:
+    if merge_after:
         merge_index(spark, index_dir, buckets=buckets, shard_docs=shard_docs,
                     tokenizer=tokenizer)
     return {"batches": n_batches["n"]}

@@ -44,3 +44,32 @@ def small_df(spark, small_dir):
     from abstracts_search_spark.sources.transcripts import load_transcripts
 
     return load_transcripts(spark, small_dir).cache()
+
+
+@pytest.fixture(scope="session")
+def job_count(spark):
+    """-> count(fn): the number of Spark jobs ``fn()`` runs, read from the
+    status tracker by job group. A sentinel job in a second group runs
+    after ``fn``; the listener bus is ordered, so once the sentinel is
+    visible every job of ``fn`` is too."""
+    import time
+
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+
+    def count(fn) -> int:
+        group = f"jobcount-{time.time_ns()}"
+        sc.setJobGroup(group, "job count probe")
+        try:
+            fn()
+            sc.setJobGroup(group + "-sentinel", "job count sentinel")
+            sc.parallelize([0], 1).count()
+        finally:
+            sc._jsc.clearJobGroup()
+        deadline = time.time() + 60
+        while not tracker.getJobIdsForGroup(group + "-sentinel"):
+            assert time.time() < deadline, "sentinel job never reached the status tracker"
+            time.sleep(0.05)
+        return len(tracker.getJobIdsForGroup(group))
+
+    return count

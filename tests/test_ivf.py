@@ -312,7 +312,7 @@ def test_ann_sync_dim_and_null_guards(spark, tmp_path):
         sync_ann_index(null_vec, out, src_tag="bad2")
 
 
-def test_topk_many_equals_per_query(spark, tmp_path):
+def test_topk_many_equals_per_query(spark, tmp_path, job_count):
     emb = _emb(spark)
     out = str(tmp_path / "ivf")
     build_ivf_index(emb, out, n_lists=8, iters=2)
@@ -330,6 +330,7 @@ def test_topk_many_equals_per_query(spark, tmp_path):
         ]
         assert sorted(got[qid]) == want
     assert r.topk_many({}, k=3).count() == 0
+    assert job_count(lambda: r.topk_many({}, k=3).collect()) == 0
 
 
 @pytest.mark.parametrize("kind", ["lsh", "ivf", "sq8", "sq8r"])

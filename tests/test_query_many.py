@@ -30,6 +30,18 @@ def test_query_many_empty_set(reader):
     assert reader.query_many({0: "—— ☃ !!!", 1: "zzznope"}, k=5).count() == 0
 
 
+def test_empty_reads_run_no_job(reader, two_gen, job_count):
+    """A read with nothing to score answers with an empty relation that runs
+    no Spark job: an empty token stream always, an absent term once the
+    dictionary cache holds the vocabulary."""
+    reader.query("user", k=3).collect()  # warms the dictionary cache
+    assert reader._dict_cache is not None
+    for text in ("", "—— ☃ !!!", "zzzneverinthiscorpus"):
+        assert job_count(lambda: reader.query(text, k=5).collect()) == 0, text
+    assert job_count(lambda: reader.query_many({0: "—— ☃ !!!"}, k=5).collect()) == 0
+    assert job_count(lambda: two_gen.phrase_query("—— ☃ !!!", k=5).collect()) == 0
+
+
 # ------------------------------------------------ one path, every method --
 
 

@@ -87,22 +87,15 @@ def test_reader_stale_miss_not_served_after_sync(spark, tmp_path):
     reader = IndexReader(spark, idx, max_cached_terms=0)  # big-vocab regime
     assert reader.lookup_terms(["zebrafish"]) == []  # miss now cached
 
-    # append a segment containing the term, then sync (rewrites params.json)
-    from abstracts_search_spark.operators.postings import (
-        build_segments_packed,
-        pack_doc_tokens,
-    )
-    from abstracts_search_spark.sources.tables import commit
+    # ingest a document containing the term as a new generation, then sync
+    # (rewrites params.json)
+    from abstracts_search_spark.plans.build import ingest
 
     extra = spark.createDataFrame(
-        [(2, 1, 2, "zebrafish swims")], "doc_id long, src_part int, doclen int, document string"
+        [(2, "2", "zebrafish swims", 1, 1, 2)],
+        "doc_id long, conv_id string, document string, n_turns long, src_part int, doclen int",
     )
-    seg = build_segments_packed(pack_doc_tokens(extra, buckets=4, shard_docs=64))
-    commit(seg, idx, "segments", mode="append", partition_by=["src_part"])
-    commit(
-        spark.createDataFrame([(2, "2", 2, 1)], "doc_id long, conv_id string, doclen int, src_part int"),
-        idx, "docmap", mode="append",
-    )
+    ingest(extra, idx, [1], buckets=4, shard_docs=64, positions=True, tokenizer="ascii")
     time.sleep(0.05)
     merge_index(spark, idx, buckets=4, shard_docs=64)
 
@@ -333,7 +326,7 @@ def test_positions_survive_incremental_merge(spark, tmp_path):
 
 def test_positions_contract_enforced_at_ingest(spark, tmp_path):
     """An index is positional or not, fixed at FIRST ingest: extending with
-    the opposite flag is refused (mixed segments could not merge)."""
+    the opposite flag is refused (mixed posting rows could not merge)."""
     from abstracts_search_spark.plans.build import build_index
     from abstracts_search_spark.sources.transcripts import gen_transcripts
 

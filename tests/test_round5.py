@@ -1,4 +1,4 @@
-"""Round-5 closures: pre-positional segment guards (ADVICE r4), the sized /
+"""Round-5 closures: the index format gate, the sized /
 incremental / GEMM-scored ANN index, the multi-probe tune sweep, and the
 Unicode tokenizer variant (r4-verdict items 1, 3, 5, 6)."""
 
@@ -12,61 +12,34 @@ import pytest
 from pyspark.sql import functions as F
 
 
-# ------------------------------------------------ pre-format-5 segments ----
+# ----------------------------------------------------------- format gate ----
 
 
-def _strip_positions(spark, ix, tmp_path):
-    """Rewrite the segments table without pos_bin/pos_offs, emulating files
-    written before INDEX_FORMAT=5."""
-    import shutil
-
-    from abstracts_search_spark.sources.tables import read_table
-
-    seg = read_table(spark, ix, "segments").drop("pos_bin", "pos_offs")
-    seg.write.mode("overwrite").partitionBy("src_part").parquet(str(tmp_path / "seg4"))
-    shutil.rmtree(os.path.join(ix, "segments"))
-    shutil.move(str(tmp_path / "seg4"), os.path.join(ix, "segments"))
-
-
-def test_pre_format5_segments_merge_as_nonpositional(spark, tiny_dir, tmp_path):
-    """A segments table whose FILES lack the pos_bin column (pre-format-5
-    layout) must recover as positions=False, not raise (ADVICE r4 medium)."""
-    import shutil
-
-    from abstracts_search_spark.plans.build import build_index, merge_index
-
-    ix = str(tmp_path / "ix")
-    build_index(spark, tiny_dir, ix, buckets=4, shard_docs=64, with_positions=True)
-    _strip_positions(spark, ix, tmp_path)
-    # destroy derived artifacts + params so merge_index runs the recovery path
-    for t in ("postings", "dictionary", "stats"):
-        shutil.rmtree(os.path.join(ix, t))
-    os.remove(os.path.join(ix, "params.json"))
-
-    # destroy-params recovery re-states the tokenizer contract (ADVICE r5)
-    merge_index(spark, ix, buckets=4, shard_docs=64, tokenizer="ascii")
-    with open(os.path.join(ix, "params.json")) as f:
-        params = json.load(f)
-    assert params["positions"] is False
+def test_format_gate_refuses_older_index(spark, tiny_dir, tmp_path):
+    """An index stamped with another INDEX_FORMAT (here: 5, which still had a
+    segments table and replay markers) is refused with a re-ingest message
+    at build, merge and reader attach — before anything is written."""
+    from abstracts_search_spark.plans.build import INDEX_FORMAT, build_index, merge_index
     from abstracts_search_spark.plans.query import IndexReader
 
-    reader = IndexReader(spark, ix)
-    assert len(reader.query("user assistant", k=3).collect()) == 3
-    with pytest.raises(ValueError, match="without positions"):
-        reader.phrase_query("the user", k=3)
-
-
-def test_append_to_pre_format5_segments_refused(spark, tiny_dir, tmp_path):
-    """Appending format-5 segments next to files lacking pos_bin would leave
-    a mixed file schema — refused with a re-ingest message."""
-    from abstracts_search_spark.plans.build import build_index
-
     ix = str(tmp_path / "ix")
-    build_index(spark, tiny_dir, ix, max_parts=1, skip_merge=True)
-    _strip_positions(spark, ix, tmp_path)
+    build_index(spark, tiny_dir, ix, max_parts=1)
+    path = os.path.join(ix, "params.json")
+    with open(path) as f:
+        params = json.load(f)
+    assert params["format"] == INDEX_FORMAT
+    params["format"] = 5
+    with open(path, "w") as f:
+        json.dump(params, f)
+    listing = sorted(os.walk(ix))
 
-    with pytest.raises(ValueError, match="re-ingest"):
-        build_index(spark, tiny_dir, ix, max_parts=2, skip_merge=True)
+    with pytest.raises(ValueError, match="format 5.*re-ingest"):
+        build_index(spark, tiny_dir, ix)
+    with pytest.raises(ValueError, match="format 5.*re-ingest"):
+        merge_index(spark, ix)
+    with pytest.raises(ValueError, match="format 5.*re-ingest"):
+        IndexReader(spark, ix)
+    assert sorted(os.walk(ix)) == listing
 
 
 # ----------------------------------------------------------- sized ANN ----

@@ -36,20 +36,31 @@ def test_overwrite_swap_and_rollback(spark, tmp_path):
     assert os.path.exists(os.path.join(root, "t"))
 
 
-def _query_rows(spark, index_dir, q="index merge spark"):
+def _query_rows(spark, index_dir, q="index merge spark", key="doc_id"):
     r = IndexReader(spark, index_dir)
-    return [(row["doc_id"], round(row["score"], 9)) for row in r.query(q, k=10).collect()]
+    return [(row[key], round(row["score"], 9)) for row in r.query(q, k=10).collect()]
 
 
-@pytest.mark.parametrize("fail_after", ["docmap", "postings", "dictionary"])
-def test_crash_then_rerun_converges(spark, tiny_dir, tmp_path, fail_after):
-    """Kill the build right after each artifact commit; a plain rerun must
-    converge to the same index as a never-crashed build."""
-    clean = str(tmp_path / "clean_idx")
+# every write boundary of a text build: the ingest's postings generation,
+# docmap and lineage (the commit marker), then the merge's derived tables
+BOUNDARIES = ["postings", "docmap", "lineage", "dictionary", "stats"]
+
+
+@pytest.fixture(scope="module")
+def fresh_want(spark, tiny_dir, tmp_path_factory):
+    """Ranks of a never-crashed fresh build."""
+    clean = str(tmp_path_factory.mktemp("fresh_crash") / "clean_idx")
     build_index(spark, tiny_dir, clean)
     want = _query_rows(spark, clean)
     assert want
+    return want
 
+
+@pytest.mark.parametrize("fail_after", BOUNDARIES)
+def test_crash_then_rerun_converges(spark, tiny_dir, tmp_path, fresh_want, fail_after):
+    """Kill a fresh build right after each artifact commit; a plain rerun
+    must converge to the same index as a never-crashed build."""
+    want = fresh_want
     crashed = str(tmp_path / f"crash_{fail_after}")
     tables._FAIL_AFTER = fail_after
     with pytest.raises(InjectedCrash):
@@ -57,6 +68,38 @@ def test_crash_then_rerun_converges(spark, tiny_dir, tmp_path, fail_after):
     tables._FAIL_AFTER = None
     build_index(spark, tiny_dir, crashed)  # plain rerun, no special recovery
     assert _query_rows(spark, crashed) == want
+
+
+SYNC_KW = dict(buckets=8, shard_docs=64)
+
+
+@pytest.fixture(scope="module")
+def sync_base(spark, small_dir, tmp_path_factory):
+    """(index over the first 2 source partitions, ranks of a never-crashed
+    from-scratch build over all 4)."""
+    root = tmp_path_factory.mktemp("sync_crash")
+    base = str(root / "base")
+    build_index(spark, small_dir, base, max_parts=2, **SYNC_KW)
+    clean = str(root / "clean")
+    build_index(spark, small_dir, clean, **SYNC_KW)
+    return base, _query_rows(spark, clean, key="conv_id")
+
+
+@pytest.mark.parametrize("fail_after", BOUNDARIES)
+def test_sync_crash_then_rerun_converges(spark, small_dir, tmp_path, sync_base, fail_after):
+    """The same boundaries during a 2-part sync onto an existing index: the
+    rerun converges to a never-crashed from-scratch build's ranks."""
+    import shutil
+
+    base, want = sync_base
+    ix = str(tmp_path / "ix")
+    shutil.copytree(base, ix)
+    tables._FAIL_AFTER = fail_after
+    with pytest.raises(InjectedCrash):
+        build_index(spark, small_dir, ix, **SYNC_KW)
+    tables._FAIL_AFTER = None
+    build_index(spark, small_dir, ix, **SYNC_KW)
+    assert _query_rows(spark, ix, key="conv_id") == want
 
 
 def test_iceberg_flip_identifier_and_gating(spark, tmp_path, monkeypatch):

@@ -14,6 +14,7 @@
 
 from __future__ import annotations
 
+import json
 import os
 
 import numpy as np
@@ -302,6 +303,25 @@ def test_crash_then_late_arriving_part_falls_back_to_full_reagg(spark, small_dir
     scratch = str(tmp_path / "scratch")
     build_index(spark, small_dir, scratch, **BUILD_KW)
     assert _results(spark, ix) == _results(spark, scratch)
+
+
+def test_flat_lineage_layout_is_refused(spark, small_dir, tmp_path):
+    """Extending a pre-format-4 index (flat lineage files) must fail loudly
+    BEFORE any write — appending generations next to the flat files would
+    corrupt the table. The params.json format stamp refuses it."""
+    ix = str(tmp_path / "ix")
+    os.makedirs(os.path.join(ix, "lineage"))
+    with open(os.path.join(ix, "lineage", "part-00000.parquet"), "wb") as f:
+        f.write(b"not really parquet")
+    with open(os.path.join(ix, "params.json"), "w") as f:
+        json.dump({"format": 3, "tokenizer": "ascii", **BUILD_KW}, f)
+    listing = sorted(os.walk(ix))
+
+    with pytest.raises(ValueError, match="format 3.*re-ingest"):
+        build_index(spark, small_dir, ix, **BUILD_KW)
+    with pytest.raises(ValueError, match="format 3.*re-ingest"):
+        IndexReader(spark, ix)
+    assert sorted(os.walk(ix)) == listing
 
 
 # ------------------------------------------------------- auto-compaction --

@@ -42,6 +42,38 @@ def test_format_gate_refuses_older_index(spark, tiny_dir, tmp_path):
     assert sorted(os.walk(ix)) == listing
 
 
+def test_append_to_pre_format5_segments_refused(spark, tiny_dir, tmp_path):
+    """Appending to an index whose segments files lack pos_bin (written
+    before INDEX_FORMAT=5) would mix layouts in one index — both append
+    paths (a batch sync and a stream epoch) refuse it with a re-ingest
+    message before they write anything."""
+    import shutil
+
+    from abstracts_search_spark.plans.build import build_index
+    from abstracts_search_spark.sources.tables import read_table
+    from abstracts_search_spark.streaming.incremental import stream_build
+
+    ix = str(tmp_path / "ix")
+    build_index(spark, tiny_dir, ix, max_parts=1)
+    # the older layout: a segments table without the positional columns
+    seg = read_table(spark, ix, "postings").drop("pos_bin", "pos_offs", "gen")
+    seg.write.parquet(os.path.join(ix, "segments"))
+    shutil.rmtree(os.path.join(ix, "postings"))
+    path = os.path.join(ix, "params.json")
+    with open(path) as f:
+        params = json.load(f)
+    params["format"] = 4
+    with open(path, "w") as f:
+        json.dump(params, f)
+    listing = sorted(os.walk(ix))
+
+    with pytest.raises(ValueError, match="format 4.*re-ingest"):
+        build_index(spark, tiny_dir, ix, max_parts=2, skip_merge=True)
+    with pytest.raises(ValueError, match="format 4.*re-ingest"):
+        stream_build(spark, tiny_dir, ix)
+    assert sorted(os.walk(ix)) == listing
+
+
 # ----------------------------------------------------------- sized ANN ----
 
 

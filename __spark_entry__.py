@@ -21,11 +21,7 @@ from pyspark.sql import functions as F
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from abstracts_search_spark import B_BM25, K1
-from abstracts_search_spark.functions.tokenize import (
-    TOKENIZE_SQL_DUCKDB,
-    get_tokenizer,
-    tokens_expr,
-)
+from abstracts_search_spark.functions.tokenize import get_tokenizer, tokens_expr
 from abstracts_search_spark.functions.uninvert import invert_expr, uninvert_expr
 from abstracts_search_spark.operators import dedup, ivf, similarity, textstats
 from abstracts_search_spark.operators.bm25_brute import bm25_score_scan, doc_tokens
@@ -57,7 +53,7 @@ def _ensure_shipped(spark: SparkSession) -> SparkSession:
 BM25_QUERY = "spark query join"
 BM25_HOT_QUERY = "table row scan value"
 ANN_K = 10
-_TOK = TOKENIZE_SQL_DUCKDB  # .format(col=...)
+_TOK = get_tokenizer("ascii").duckdb_sql  # .format(col=...)
 _UTOK = get_tokenizer("unicode").duckdb_sql  # the any-script variant (F9b)
 
 
@@ -195,8 +191,7 @@ def _q_corpus_stats(spark, sf_dir):
 
 def _bm25_spark(spark, sf_dir, qtext):
     # two-scan brute BM25 (stats pass + local scoring pass, zero shuffles —
-    # optimization r6); same formula/results as the old doc_tokens →
-    # bm25_score_all join plan, which remains the tested reference shape
+    # optimization r6); pinned to the numpy oracle (oracle_numpy.BM25Oracle)
     scores = bm25_score_scan(_load(spark, sf_dir, "documents"), qtext)
     return (
         scores.select("doc_id", F.round("score", 6).alias("score_r"))
@@ -242,7 +237,8 @@ def _q_doc_assembly(spark, sf_dir):
 def _q_doc_ids(spark, sf_dir):
     docs = _q_doc_assembly(spark, sf_dir)
     docs = docs.filter(F.size(tokens_expr("document")) > 0).select("conv_id")
-    return assign_doc_ids(docs, num_partitions=4)
+    ids, _ = assign_doc_ids(docs, num_partitions=4)
+    return ids
 
 
 def _q_dedup_exact(spark, sf_dir):

@@ -1,10 +1,9 @@
-from .tokenize import TOKEN_PATTERN, tokenize_pd, tokenize_udf, tokens_expr
+from .tokenize import TOKEN_PATTERN, get_tokenizer, tokens_expr
 from .uninvert import invert_expr, uninvert_expr
 
 __all__ = [
     "TOKEN_PATTERN",
-    "tokenize_udf",
-    "tokenize_pd",
+    "get_tokenizer",
     "tokens_expr",
     "uninvert_expr",
     "invert_expr",

@@ -3,38 +3,36 @@
 The reference delegates tokenization to its embedding model's tokenizer
 (/root/reference/requirements.txt:2-3, opaque); the target engine defines one
 explicit tokenizer used IDENTICALLY at index-build time, at query time, and in
-every oracle: extract ASCII alphanumeric runs ``[A-Za-z0-9]+`` from the raw
-text, then lowercase each token. Lowercasing only pure-ASCII tokens keeps the
-semantics engine-independent (Python/JVM/DuckDB unicode lowercasing differ on
-exotic codepoints; ASCII lowering does not).
+every oracle: extract the runs of the tokenizer's character class from the raw
+text, then lowercase each token. The default ``ascii`` tokenizer extracts
+``[A-Za-z0-9]+`` runs; lowering pure-ASCII tokens keeps the semantics
+engine-independent (Python/JVM/DuckDB unicode lowercasing differ on exotic
+codepoints; ASCII lowering does not).
 
-Three equivalent implementations are provided and tested for equality:
+One Python implementation, plus the same rule in the two other engines
+(tested equal on a mixed-script fixture):
 
-- ``tokenize_udf``  — Arrow-vectorized pandas UDF (the spec'd build path,
-  BASELINE.json input_hint: "vectorized pandas/Arrow UDFs").
-- ``tokens_expr``   — pure Catalyst expression (JVM-side, whole-stage
-  codegen'd; used where staying in codegen wins).
-- ``TOKENIZE_SQL_DUCKDB`` — the same in DuckDB SQL, for driver oracles.
+- :class:`TokenizerSpec` — ``tokens(text)`` for one text and ``batch(texts)``
+  for a batch (one ``findall`` per text, one ``pd.factorize`` over the batch's
+  token stream, one ``lower()`` per unique raw token). It is the only Python
+  code that applies the rule: the build's pack pass, query terms, the brute
+  BM25/phrase/dedup operators and the numpy oracle all call it.
+- :func:`tokens_expr` / :func:`doclen_expr` — the Catalyst (JVM) form,
+  whole-stage codegen'd; used where staying in the JVM wins.
+- ``TokenizerSpec.duckdb_sql`` — the DuckDB SQL form, for driver oracles.
 """
 
 from __future__ import annotations
 
 import re
+from collections.abc import Iterable
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
-from pyspark.sql.functions import pandas_udf
 
 TOKEN_PATTERN = r"[A-Za-z0-9]+"
-_TOKEN_RE = re.compile(TOKEN_PATTERN)
-
-# DuckDB expression template: {col} -> list<varchar> of lowercase tokens.
-TOKENIZE_SQL_DUCKDB = (
-    "list_transform(list_filter(regexp_split_to_array({col}, '[^A-Za-z0-9]+'),"
-    " t -> t <> ''), t -> lower(t))"
-)
 
 
 class TokenizerSpec:
@@ -54,6 +52,30 @@ class TokenizerSpec:
         self.jvm_pattern = jvm_pattern
         self.sql_split = sql_split
         self.regex = re.compile(py_pattern)
+
+    def tokens(self, text: str | None) -> list[str]:
+        """One text -> its lowercase token stream (None/'' -> [])."""
+        return [m.lower() for m in self.regex.findall(text or "")]
+
+    def batch(self, texts: Iterable[str | None]) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+        """Texts -> ``(lens, codes, terms)``: each text's token count, the
+        batch's flat token stream as int64 codes into ``terms``, and the
+        distinct lowercase terms in first-occurrence order.
+
+        Lowering runs once per unique RAW token; the codes are then re-keyed
+        onto the distinct lowered terms, so case variants ("Spark"/"spark")
+        share one code and expanding ``terms[codes]`` by ``lens`` gives
+        exactly ``[tokens(t) for t in texts]``."""
+        findall = self.regex.findall
+        per_text = [findall(t) if t else [] for t in texts]
+        lens = np.fromiter((len(t) for t in per_text), dtype=np.int64, count=len(per_text))
+        flat = np.asarray([tok for toks in per_text for tok in toks], dtype=object)
+        if not flat.shape[0]:
+            return lens, np.empty(0, dtype=np.int64), np.empty(0, dtype=object)
+        raw_codes, raw = pd.factorize(flat, sort=False)
+        lowered = np.asarray([u.lower() for u in raw], dtype=object)
+        term_codes, terms = pd.factorize(lowered, sort=False)
+        return lens, term_codes[raw_codes].astype(np.int64, copy=False), terms
 
     @property
     def jvm_split(self) -> str:
@@ -80,7 +102,7 @@ class TokenizerSpec:
 # papered over.
 TOKENIZERS: dict[str, TokenizerSpec] = {
     "ascii": TokenizerSpec(
-        "ascii", r"[A-Za-z0-9]+", r"[A-Za-z0-9]+", "[^A-Za-z0-9]+"
+        "ascii", TOKEN_PATTERN, TOKEN_PATTERN, "[^A-Za-z0-9]+"
     ),
     "unicode": TokenizerSpec(
         "unicode", r"[^\W_]+", r"[\p{L}\p{N}]+", r"[^\pL\pN]+"
@@ -97,37 +119,19 @@ def get_tokenizer(name: str) -> TokenizerSpec:
         ) from None
 
 
-def tokenize_pd(texts: pd.Series, tokenizer: str = "ascii") -> pd.Series:
-    """pandas implementation: Series[str] -> Series[list[str]]."""
-    rx = get_tokenizer(tokenizer).regex
-    return texts.fillna("").map(lambda t: [m.lower() for m in rx.findall(t)])
-
-
-@pandas_udf(T.ArrayType(T.StringType()))
-def tokenize_udf(texts: pd.Series) -> pd.Series:
-    return tokenize_pd(texts)
-
-
-@pandas_udf(T.IntegerType())
-def doclen_udf(texts: pd.Series) -> pd.Series:
-    """Token count only — avoids materializing the token array through Arrow
-    when just the length is needed (docID gating, docmap doclen)."""
-    return texts.str.count(TOKEN_PATTERN).fillna(0).astype("int32")
-
-
 def doclen_expr(col: Column | str, tokenizer: str = "ascii") -> Column:
-    """JVM token count: size(regexp_extract_all(text, pattern)) — a codegen
-    expression, NOT a higher-order function and NOT a Python UDF, so the
-    assembly stage that sums per-turn doclens stays whole-stage-codegen with
-    zero Python workers. Verified equal to :func:`doclen_udf` (tests) and,
-    per variant, to the Python regex count (mixed-script fixture tests)."""
+    """JVM token count: regexp_count(text, pattern) — a codegen expression,
+    NOT a higher-order function and NOT a Python UDF, so the assembly stage
+    that sums per-turn doclens stays whole-stage-codegen with zero Python
+    workers. Verified equal, per variant, to ``len(TokenizerSpec.tokens)``
+    (mixed-script fixture tests)."""
     c = F.col(col) if isinstance(col, str) else col
     pat = get_tokenizer(tokenizer).jvm_pattern
     return F.regexp_count(F.coalesce(c, F.lit("")), F.lit(pat)).cast("int")
 
 
 def tokens_expr(col: Column | str, tokenizer: str = "ascii") -> Column:
-    """Catalyst-only equivalent of :func:`tokenize_udf` (verified equal)."""
+    """Catalyst equivalent of :meth:`TokenizerSpec.tokens` (verified equal)."""
     c = F.col(col) if isinstance(col, str) else col
     split = F.split(F.coalesce(c, F.lit("")), get_tokenizer(tokenizer).jvm_split)
     nonempty = F.filter(split, lambda t: t != "")

@@ -1,6 +1,6 @@
 from .assemble import assemble_documents
 from .docids import assign_doc_ids
-from .bm25_brute import bm25_score_all, bm25_topk_brute
+from .bm25_brute import bm25_score_scan, doc_tokens
 from .dedup import (
     embedding_dup_lsh,
     embedding_dup_pairs,
@@ -30,8 +30,8 @@ __all__ = [
     "assign_doc_ids",
     "corpus_stats",
     "term_df",
-    "bm25_score_all",
-    "bm25_topk_brute",
+    "bm25_score_scan",
+    "doc_tokens",
     "exact_dup_groups",
     "jaccard_pairs",
     "minhash_lsh_pairs",

@@ -18,7 +18,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.tokenize import tokens_expr
+from ..functions.tokenize import get_tokenizer, tokens_expr
 from .textstats import shingles_expr
 
 
@@ -36,18 +36,19 @@ def _shingles_udf(n: int):
     """Arrow-vectorized shingler: text -> distinct n-word shingles.
 
     Chosen over the pure-Catalyst shingles_expr for hot paths: Spark evaluates
-    higher-order-function lambdas interpreted (~ms/doc), while the Python
-    regex + join path runs at ~µs/doc over Arrow batches. Semantics are
-    identical (same tokenizer, same ' '-joined shingles; distinct-set output).
+    higher-order-function lambdas interpreted (~ms/doc), while the
+    tokenizer's Python ``tokens`` + join runs at ~µs/doc over Arrow
+    batches. Semantics are identical (same tokenizer, same ' '-joined
+    shingles; distinct-set output).
     """
     import pandas as pd
     from pyspark.sql import types as T
     from pyspark.sql.functions import pandas_udf
 
-    from ..functions.tokenize import _TOKEN_RE
+    tokens = get_tokenizer("ascii").tokens
 
     def shingle_one(t: str) -> list[str]:
-        toks = [m.lower() for m in _TOKEN_RE.findall(t or "")]
+        toks = tokens(t)
         return list(dict.fromkeys(" ".join(toks[i : i + n]) for i in range(len(toks) - n + 1)))
 
     # no type hints: `from __future__ import annotations` stringifies them,
@@ -146,9 +147,7 @@ def jaccard_pairs(
     par = spark.sparkContext.defaultParallelism
     nblk = max(2, int(round((4 * par) ** 0.5)))
 
-    from ..functions.tokenize import _TOKEN_RE
-
-    findall = _TOKEN_RE.findall
+    tokens = get_tokenizer("ascii").tokens
 
     def to_grid(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         # ONE pass does tokenize -> shingle -> id-set AND the (i<=j) grid
@@ -159,7 +158,7 @@ def jaccard_pairs(
         for pdf in batches:
             out = {"gi": [], "gj": [], "side": [], "vid": [], "n_sh": [], "ids": []}
             for vid, t in zip(pdf["doc_id"].to_numpy(), pdf["_text"]):
-                toks = [m.lower() for m in findall(t or "")]
+                toks = tokens(t)
                 shingles = dict.fromkeys(
                     " ".join(toks[i : i + n]) for i in range(len(toks) - n + 1)
                 )
@@ -343,17 +342,14 @@ def _minhash_sig_cols(df: DataFrame, id_col: str, text_col: str, num_perm: int, 
 
     import pandas as pd
 
-    from ..functions.tokenize import _TOKEN_RE
-
-    findall = _TOKEN_RE.findall
+    tokens = get_tokenizer("ascii").tokens
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             ids, sig_rows = [], []
             id_arr = pdf["doc_id"].to_numpy()
             for j, t in enumerate(pdf["_text"]):
-                toks = [m.lower() for m in findall(t or "")]
-                sigs = _minhash_sigs_one(toks, n, num_perm)
+                sigs = _minhash_sigs_one(tokens(t), n, num_perm)
                 if sigs is not None:
                     ids.append(id_arr[j])
                     sig_rows.append(sigs)

@@ -20,8 +20,13 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def assign_doc_ids(docs: DataFrame, start: int = 0, num_partitions: int | None = None) -> DataFrame:
-    """docs must have unique ``conv_id``. Returns docs + ``doc_id`` int64.
+def assign_doc_ids(
+    docs: DataFrame, start: int = 0, num_partitions: int | None = None
+) -> tuple[DataFrame, DataFrame]:
+    """docs must have unique ``conv_id``. Returns ``(ids, ranged)``: ``ids``
+    is docs + ``doc_id`` int64; ``ranged`` is the persisted range-partitioned
+    input that both the count job and ``ids`` read — the caller unpersists it
+    once ``ids`` is consumed.
 
     IDs are ``start + rank(conv_id)`` (0-based, lexicographic) — deterministic
     for a given input set, independent of partition boundaries. ``start``
@@ -57,4 +62,4 @@ def assign_doc_ids(docs: DataFrame, start: int = 0, num_partitions: int | None =
             seen += len(pdf)
             yield pdf
 
-    return with_pid.mapInPandas(attach, schema=out_schema)
+    return with_pid.mapInPandas(attach, schema=out_schema), with_pid

@@ -12,11 +12,9 @@ import math
 from collections import Counter
 
 from .. import B_BM25, K1
-from ..functions.tokenize import _TOKEN_RE
+from ..functions.tokenize import get_tokenizer
 
-
-def _tok(text: str) -> list[str]:
-    return [m.lower() for m in _TOKEN_RE.findall(text or "")]
+_tok = get_tokenizer("ascii").tokens
 
 
 class BM25Oracle:

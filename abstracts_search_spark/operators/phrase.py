@@ -3,11 +3,12 @@
 The reference is an embedding engine with no phrase capability; a fulltext
 engine (this repo's tier) needs one. Two paths, identical results (tested):
 
-- **brute** (`phrase_matches`) — pure Catalyst: the per-doc normalized stream
-  is searched with literal, boundary-padded `replace` arithmetic — no UDF,
-  whole-stage codegen end to end, and the identical algorithm runs in the
-  DuckDB oracle, so counts match bit-for-bit. A full corpus scan per query:
-  the correctness oracle.
+- **brute** (`phrase_matches`) — a vectorized pandas UDF over the raw text:
+  each doc's token stream (the engine's one tokenizer,
+  ``TokenizerSpec.tokens``) is joined into a boundary-padded string and the
+  padded phrase is counted with ``str.count``. A full corpus scan per query:
+  the correctness oracle. The DuckDB oracle runs the same count as literal
+  ``replace`` arithmetic over the same padded stream.
 - **indexed** (`make_phrase_matcher_multi`, driven by
   ``IndexReader.phrase_query`` and ``phrase_query_many``) — the scale path:
   dictionary lookup → bucket-pruned, term-pushed postings scan → per-shard
@@ -22,42 +23,18 @@ phrase like 'a a' in 'a a a' counts once — the standard rule; immediately
 adjacent repeats DO count separately: 'new york new york' contains
 'new york' twice). The brute stream is padded with TWO spaces between tokens
 (`' ' || join(tokens, '  ') || ' '`) so adjacent occurrences never share a
-delimiter — the replace arithmetic then implements exactly the greedy
-non-overlapping counter, and so does the oracle.
+delimiter — ``str.count`` (and the oracle's replace arithmetic) then
+implements exactly the greedy non-overlapping counter.
 """
 
 from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.tokenize import tokens_expr
-
-
-def _norm_stream(text: str | Column) -> Column:
-    """' ' + join(tokens, '  ') + ' ' — boundary-padded normalized stream.
-    Double spaces BETWEEN tokens: adjacent phrase occurrences then never share
-    delimiter characters, so replace-arithmetic counts each of them."""
-    col = F.col(text) if isinstance(text, str) else text
-    return F.concat(F.lit(" "), F.array_join(tokens_expr(col), "  "), F.lit(" "))
-
-
-def phrase_count_expr(text_col: str, phrase_norm: str) -> Column:
-    """Greedy non-overlapping occurrences of the normalized phrase.
-
-    count = (len(s) - len(replace(s, pat, ''))) / len(pat), pat boundary-
-    padded — literal (non-regex) replace, identical in Spark and DuckDB.
-    ``phrase_norm``: the phrase's normalized tokens joined by ONE space (the
-    double-space join happens here).
-    """
-    pat = " " + "  ".join(phrase_norm.split(" ")) + " "
-    s = _norm_stream(text_col)
-    return (
-        (F.length(s) - F.length(F.replace(s, F.lit(pat), F.lit(""))))
-        / F.lit(len(pat))
-    ).cast("int")
+from ..functions.tokenize import get_tokenizer
 
 
 def phrase_matches(
@@ -75,22 +52,17 @@ def phrase_matches(
     from pyspark.sql import types as T
     from pyspark.sql.functions import pandas_udf
 
-    from ..functions.tokenize import _TOKEN_RE, tokenize_pd
-
-    toks = list(tokenize_pd(pd.Series([phrase]))[0])
+    tokens = get_tokenizer("ascii").tokens
+    toks = tokens(phrase)
     if not toks:
         return docs.sparkSession.createDataFrame([], "doc_id long, n_hits int")
-    # Optimization r6 (guide §4.2): the Catalyst phrase_count_expr evaluates
-    # its tokenizer higher-order functions interpreted (~ms/doc); this
-    # vectorized UDF computes the identical padded stream in Python and
-    # counts with str.count — which IS the greedy non-overlapping counter
-    # the replace arithmetic implements (same counts, tested equal).
+    # str.count over the padded stream IS the greedy non-overlapping counter
+    # (double-space padding: adjacent occurrences share no delimiter)
     pat = " " + "  ".join(toks) + " "
-    findall = _TOKEN_RE.findall
 
     def _count(texts):
         return texts.map(
-            lambda t: (" " + "  ".join(m.lower() for m in findall(t or "")) + " ").count(pat)
+            lambda t: (" " + "  ".join(tokens(t)) + " ").count(pat)
         ).astype("int32")
 
     count_udf = pandas_udf(_count, T.IntegerType())
@@ -127,7 +99,7 @@ def make_phrase_matcher_multi(term_seqs: dict[int, list[int]]):
     Per phrase: candidate docs = intersection over its DISTINCT terms; per
     candidate doc, start positions = positions(t_0) ∩ (positions(t_1) − 1)
     ∩ … ∩ (positions(t_{L−1}) − (L−1)), then the greedy non-overlapping
-    count — identical to the brute replace-arithmetic (property-tested).
+    count — identical to the brute ``str.count`` counter (tested).
     """
     all_terms = sorted({t for seq in term_seqs.values() for t in seq})
 

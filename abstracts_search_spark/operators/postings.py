@@ -153,10 +153,11 @@ def pack_doc_tokens(
     at 100 TB the token-stream shuffle is the single largest data movement of
     the build, and its bytes (strings vs ints) set the memory-bandwidth floor.
 
-    The per-token work is numpy-vectorized: one regex findall per doc, then a
-    single ``pd.factorize`` over the batch's flat token stream; lowering and
-    blake2b hashing run once per UNIQUE raw token of the batch (with a
-    cross-batch cache), tf counting is a run-length pass over the
+    The per-token work is numpy-vectorized: the tokenizer's batch pass
+    (``TokenizerSpec.batch``: one regex scan per doc, one ``pd.factorize`` over
+    the batch's flat token stream, lowering once per unique raw token), then
+    blake2b hashing once per UNIQUE term of the batch (with a cross-batch
+    cache); tf counting is a run-length pass over the
     (doc, bucket, term_id)-lexsorted stream — no per-OCCURRENCE Python.
     ``with_positions`` additionally carries each occurrence's within-doc token
     index (the phrase-search stream, ascending per (doc, term) by the stable
@@ -167,7 +168,7 @@ def pack_doc_tokens(
     from ..codecs.multilist import concat_aranges
     from ..functions.tokenize import get_tokenizer
 
-    findall = get_tokenizer(tokenizer).regex.findall
+    spec = get_tokenizer(tokenizer)
 
     # per-task term→(id, bucket) cache bound: hashing re-runs for evicted
     # terms (correctness unaffected); keeps worker memory O(1) when a task
@@ -182,32 +183,22 @@ def pack_doc_tokens(
         for pdf in batches:
             if len(id_cache) > _CACHE_MAX:
                 id_cache.clear()
-            toks_per_doc = [findall(t) if t else [] for t in pdf[text_col]]
-            lens = np.fromiter(
-                (len(t) for t in toks_per_doc), dtype=np.int64, count=len(toks_per_doc)
-            )
-            flat = np.asarray(
-                [tok for toks in toks_per_doc for tok in toks], dtype=object
-            )
+            lens, codes, terms = spec.batch(pdf[text_col])
             out_cols = {
                 "bks": [], "tslices": [], "fslices": [],
                 **({"pslices": []} if with_positions else {}),
             }
             keep: list[int] = []
-            if flat.shape[0]:
-                codes, uniques = pd.factorize(flat, sort=False)
-                # lower + hash once per unique RAW token (case variants of one
-                # term get distinct codes here but the same term_id below — the
-                # run-length tf pass merges them because it keys on term_id)
-                utids = np.empty(uniques.shape[0], dtype=np.int64)
-                ubks = np.empty(uniques.shape[0], dtype=np.int64)
-                for j, u in enumerate(uniques):
-                    lu = u.lower()
-                    tb = cache_get(lu)
+            if codes.shape[0]:
+                # hash once per unique term of the batch
+                utids = np.empty(terms.shape[0], dtype=np.int64)
+                ubks = np.empty(terms.shape[0], dtype=np.int64)
+                for j, term in enumerate(terms):
+                    tb = cache_get(term)
                     if tb is None:
-                        tid = term_id_of(lu)
+                        tid = term_id_of(term)
                         tb = (tid, tid % buckets)
-                        id_cache[lu] = tb
+                        id_cache[term] = tb
                     utids[j], ubks[j] = tb
                 tok_tid = utids[codes]
                 tok_bk = ubks[codes]

@@ -12,9 +12,7 @@ exact. Per (query, shard) it runs one of two exact methods:
   order and the loop stops when the k-th score meets the next bound. Blocks
   that can't beat θ are never DECODED (block-restarted varint streams make
   per-block decode possible). The analog of FAISS-IVF probing only nprobe
-  inverted lists (the reference's Makefile:24-25; README.md:16). The classic
-  per-document pivot walk is kept as ``wand_topk_docwise`` for cross-check
-  tests.
+  inverted lists (the reference's Makefile:24-25; README.md:16).
 - ``taat`` — term-at-a-time vectorized scoring: numpy bincount accumulation
   over the shard's bounded doc range, each list decoded once per shard and
   shared across the batch's queries. No skipping, but zero Python-per-doc
@@ -27,7 +25,6 @@ Both return identical rankings (tested); tie-break everywhere is
 
 from __future__ import annotations
 
-import heapq
 import math
 
 import numpy as np
@@ -35,8 +32,6 @@ import pandas as pd
 
 from .. import B_BM25, K1
 from ..codecs.postings import decode_block, decode_posting_list
-
-_INF = np.iinfo(np.int64).max
 
 
 def idf_of(n_docs: int, df: int) -> float:
@@ -47,62 +42,6 @@ def _contrib(idf: float, tfs, dls, k1: float, b: float, avgdl: float):
     tfs = np.asarray(tfs, dtype=np.float64)
     dls = np.asarray(dls, dtype=np.float64)
     return idf * tfs * (k1 + 1.0) / (tfs + k1 * (1.0 - b + b * dls / avgdl))
-
-
-class _Cursor:
-    """Block-skipping cursor over one encoded posting list."""
-
-    __slots__ = ("row", "idf", "k1", "b", "avgdl", "block_last", "block_ub",
-                 "term_ub", "n_blocks", "bi", "docs", "contribs", "i", "cur_doc")
-
-    def __init__(self, row: dict, idf: float, k1: float, b: float, avgdl: float):
-        self.row, self.idf, self.k1, self.b, self.avgdl = row, idf, k1, b, avgdl
-        self.block_last = np.asarray(row["block_last"], dtype=np.int64)
-        max_tf = np.asarray(row["block_max_tf"], dtype=np.float64)
-        min_dl = np.asarray(row["block_min_dl"], dtype=np.float64)
-        self.block_ub = idf * max_tf * (k1 + 1.0) / (max_tf + k1 * (1.0 - b + b * min_dl / avgdl))
-        self.term_ub = float(self.block_ub.max())
-        self.n_blocks = self.block_last.shape[0]
-        self.bi = -1
-        self._load(0)
-
-    def _load(self, bi: int) -> None:
-        if bi >= self.n_blocks:
-            self.cur_doc = _INF
-            return
-        docs, tfs, dls = decode_block(self.row, bi)
-        self.bi = bi
-        self.docs = docs
-        self.contribs = _contrib(self.idf, tfs, dls, self.k1, self.b, self.avgdl)
-        self.i = 0
-        self.cur_doc = int(docs[0])
-
-    def next_geq(self, target: int) -> None:
-        """Advance to first doc >= target; skips (never decodes) dead blocks."""
-        if self.cur_doc >= target:
-            return
-        if self.block_last[self.bi] < target:
-            nb = int(np.searchsorted(self.block_last, target, side="left"))
-            if nb >= self.n_blocks:
-                self.cur_doc = _INF
-                return
-            self._load(nb)
-        # block_last[bi] >= target, so a match exists inside this block
-        self.i = int(np.searchsorted(self.docs, target, side="left"))
-        self.cur_doc = int(self.docs[self.i])
-
-    def advance(self) -> None:
-        self.i += 1
-        if self.i >= self.docs.shape[0]:
-            self._load(self.bi + 1)
-        else:
-            self.cur_doc = int(self.docs[self.i])
-
-    def score_current(self) -> float:
-        return float(self.contribs[self.i])
-
-    def current_block_ub(self) -> float:
-        return float(self.block_ub[self.bi]) if self.cur_doc != _INF else 0.0
 
 
 def wand_topk(rows: list[dict], idfs: dict[int, float], k: int, k1: float, b: float, avgdl: float):
@@ -183,59 +122,6 @@ def wand_topk(rows: list[dict], idfs: dict[int, float], k: int, k1: float, b: fl
         if top_docs.shape[0] >= k:
             theta = float(top_scores[-1])
     return [(int(d), float(s)) for d, s in zip(top_docs, top_scores)]
-
-
-def wand_topk_docwise(rows: list[dict], idfs: dict[int, float], k: int, k1: float, b: float, avgdl: float):
-    """Reference implementation: per-document block-max WAND (Ding & Suel
-    pivoting with a Python cursor walk). Kept as the property-test cross-check
-    for the vectorized zone scorer above — both are exact, so their rankings
-    must be identical on any input.
-    """
-    cursors = [_Cursor(r, idfs[r["term_id"]], k1, b, avgdl) for r in rows]
-    heap: list[tuple[float, int]] = []  # min-heap keyed (score, -doc_id)
-
-    def theta() -> float:
-        return heap[0][0] if len(heap) >= k else -1.0
-
-    while True:
-        cursors = [c for c in cursors if c.cur_doc != _INF]
-        if not cursors:
-            break
-        cursors.sort(key=lambda c: c.cur_doc)
-        th = theta()
-        cum = 0.0
-        pivot = -1
-        for i, c in enumerate(cursors):
-            cum += c.term_ub
-            if cum >= th:
-                pivot = i
-                break
-        if pivot < 0:
-            break  # even all remaining terms together can't reach θ
-        pivot_doc = cursors[pivot].cur_doc
-        if pivot_doc == _INF:
-            break
-        if cursors[0].cur_doc == pivot_doc:
-            aligned = [c for c in cursors if c.cur_doc == pivot_doc]
-            # block-max refinement: current blocks' UBs, strictly below θ → skip
-            if sum(c.current_block_ub() for c in aligned) < th:
-                for c in aligned:
-                    c.advance()
-                continue
-            s = sum(c.score_current() for c in aligned)
-            cand = (s, -pivot_doc)
-            if len(heap) < k:
-                heapq.heappush(heap, cand)
-            elif cand > heap[0]:
-                heapq.heapreplace(heap, cand)
-            for c in aligned:
-                c.advance()
-        else:
-            cursors[0].next_geq(pivot_doc)
-    out = sorted(((s, -nd) for s, nd in heap), key=lambda x: (-x[0], x[1]))
-    return [(doc, s) for s, doc in out]
-
-
 
 
 def pick_method(df_sum: int, width: int) -> str:

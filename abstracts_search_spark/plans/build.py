@@ -232,43 +232,48 @@ def ingest(
             shutil.rmtree(d)
 
     docs = docs.persist()
-    if "doc_id" in docs.columns:
-        ids, fat = docs.drop("document"), docs
-    else:
-        # ids are assigned on a SKINNY projection (conv_id + scalars) so the
-        # range shuffle never moves document payloads
-        ids = assign_doc_ids(docs.drop("document"), start=start).persist()
-        fat = docs.select("conv_id", "document").join(ids, "conv_id")
+    held = [docs]  # released in the finally, also when a write raises
+    try:
+        if "doc_id" in docs.columns:
+            ids, fat = docs.drop("document"), docs
+        else:
+            # ids are assigned on a SKINNY projection (conv_id + scalars) so the
+            # range shuffle never moves document payloads
+            ids, ranged = assign_doc_ids(docs.drop("document"), start=start)
+            ids = ids.persist()
+            held += [ranged, ids]
+            fat = docs.select("conv_id", "document").join(ids, "conv_id")
 
-    # tokenize + per-doc tf + bucketing happen in ONE Arrow pass, so the
-    # exchange into the encoder moves packed (doc, bucket) array rows instead
-    # of one row per token occurrence
-    counts = spark.sparkContext.accumulator({}, PartCounts())
-    packed = pack_doc_tokens(
-        fat.select("doc_id", "src_part", "doclen", "document"),
-        buckets=buckets, shard_docs=shard_docs,
-        with_positions=positions, tokenizer=tokenizer,
-    )
-    # one file per bucket dir (file count is driver-serial cost), term_id-
-    # sorted small row groups so query-time term predicates prune inside it;
-    # the varint blobs are high-entropy, so no general-purpose compression
-    commit_generation(build_segments_packed(packed, counts), index_dir, "postings", gen,
-                      partition_by=["bucket"], repartition_by=["bucket"], sort_by=["term_id"],
-                      compression="uncompressed", row_group_bytes=POSTINGS_ROW_GROUP_BYTES)
-    commit(ids.select("doc_id", "conv_id", "doclen", "src_part"), index_dir,
-           "docmap", mode="append", partition_by=["src_part"], repartition_by=["src_part"])
-    per_part = {
-        r["src_part"]: r
-        for r in ids.groupBy("src_part").agg(
-            F.countDistinct("conv_id").alias("n_convs"),
-            F.sum("n_turns").alias("n_turns"),
-            F.count("*").alias("n_docs"),
-            F.sum("doclen").alias("n_tokens"),
-            F.max("doc_id").alias("max_doc_id"),
-        ).collect()
-    }
-    docs.unpersist()
-    ids.unpersist()
+        # tokenize + per-doc tf + bucketing happen in ONE Arrow pass, so the
+        # exchange into the encoder moves packed (doc, bucket) array rows instead
+        # of one row per token occurrence
+        counts = spark.sparkContext.accumulator({}, PartCounts())
+        packed = pack_doc_tokens(
+            fat.select("doc_id", "src_part", "doclen", "document"),
+            buckets=buckets, shard_docs=shard_docs,
+            with_positions=positions, tokenizer=tokenizer,
+        )
+        # one file per bucket dir (file count is driver-serial cost), term_id-
+        # sorted small row groups so query-time term predicates prune inside it;
+        # the varint blobs are high-entropy, so no general-purpose compression
+        commit_generation(build_segments_packed(packed, counts), index_dir, "postings", gen,
+                          partition_by=["bucket"], repartition_by=["bucket"], sort_by=["term_id"],
+                          compression="uncompressed", row_group_bytes=POSTINGS_ROW_GROUP_BYTES)
+        commit(ids.select("doc_id", "conv_id", "doclen", "src_part"), index_dir,
+               "docmap", mode="append", partition_by=["src_part"], repartition_by=["src_part"])
+        per_part = {
+            r["src_part"]: r
+            for r in ids.groupBy("src_part").agg(
+                F.countDistinct("conv_id").alias("n_convs"),
+                F.sum("n_turns").alias("n_turns"),
+                F.count("*").alias("n_docs"),
+                F.sum("doclen").alias("n_tokens"),
+                F.max("doc_id").alias("max_doc_id"),
+            ).collect()
+        }
+    finally:
+        for df in held:
+            df.unpersist()
 
     wall = (time.time() - t0) / len(parts)
     lineage = []

@@ -29,11 +29,10 @@ from __future__ import annotations
 import json
 import os
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..functions.tokenize import tokenize_pd
+from ..functions.tokenize import get_tokenizer
 from ..operators.phrase import make_phrase_matcher_multi
 from ..operators.postings import term_id_of
 from ..operators.vecindex import Staleness, no_rows
@@ -152,7 +151,7 @@ class IndexReader(Staleness):
 
     def tokens(self, text: str) -> list[str]:
         """The query's token stream under the index's tokenizer."""
-        return list(tokenize_pd(pd.Series([text]), tokenizer=self._tokenizer)[0])
+        return get_tokenizer(self._tokenizer).tokens(text)
 
     def candidates(self, entries: list[dict], cols: tuple[str, ...]) -> DataFrame:
         """The pruned postings scan for looked-up ``entries``: bucket

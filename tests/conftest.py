@@ -73,3 +73,21 @@ def job_count(spark):
         return len(tracker.getJobIdsForGroup(group))
 
     return count
+
+
+@pytest.fixture(scope="session")
+def greedy_count():
+    """-> count(tokens, phrase_tokens): the independent phrase reference, a
+    greedy left-to-right non-overlapping scan in token space."""
+
+    def count(toks: list[str], phrase: list[str]) -> int:
+        n, j, width = 0, 0, len(phrase)
+        while j + width <= len(toks):
+            if toks[j : j + width] == phrase:
+                n += 1
+                j += width
+            else:
+                j += 1
+        return n
+
+    return count

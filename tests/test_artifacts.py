@@ -1,7 +1,9 @@
 """Byte-level layout of written artifacts: the text index's dictionary
 table is term_id-sorted in small row groups, and the package zip is
-reproducible."""
+reproducible. Also a source guard: the tokenizer's rule is applied in
+Python only by functions/tokenize.py."""
 
+import ast
 import glob
 import os
 import sys
@@ -66,3 +68,31 @@ def test_package_zip_is_reproducible(tmp_path, monkeypatch):
         zips.append(make_pyfiles.make_zip(str(tmp_path / f"pkg{i}.zip")))
     with open(zips[0], "rb") as a, open(zips[1], "rb") as b:
         assert a.read() == b.read()
+
+
+def test_token_regex_only_in_tokenizer_module():
+    """No package module but functions/tokenize.py touches a regex's
+    findall / finditer or compiles a regex: every Python token stream comes from
+    TokenizerSpec, so no inline tokenizer loop can come back."""
+    pkg = os.path.join(REPO, "abstracts_search_spark")
+    offenders = []
+    for path in sorted(glob.glob(os.path.join(pkg, "**", "*.py"), recursive=True)):
+        rel = os.path.relpath(path, pkg)
+        if rel == os.path.join("functions", "tokenize.py"):
+            continue
+        with open(path, encoding="utf-8") as f:
+            tree = ast.parse(f.read(), filename=path)
+        for node in ast.walk(tree):
+            # attribute access, not only calls: `findall = rx.findall` counts
+            if isinstance(node, ast.Attribute) and (
+                node.attr in ("findall", "finditer")
+                or (node.attr == "compile" and isinstance(node.value, ast.Name)
+                    and node.value.id == "re")
+            ):
+                offenders.append(f"{rel}:{node.lineno} .{node.attr}")
+            elif isinstance(node, ast.ImportFrom) and node.module == "re":
+                names = {a.name for a in node.names}
+                if names & {"compile", "findall", "finditer"}:
+                    offenders.append(f"{rel}:{node.lineno} from re import {sorted(names)}")
+    assert not offenders, offenders
+

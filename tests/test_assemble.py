@@ -95,9 +95,9 @@ def test_language_filter_semantics(spark):
 
 def test_assign_doc_ids_dense_and_deterministic(spark, tiny_df):
     docs = assemble_documents(tiny_df)
-    with_ids = assign_doc_ids(docs, num_partitions=3).select("conv_id", "doc_id").toPandas()
+    with_ids = assign_doc_ids(docs, num_partitions=3)[0].select("conv_id", "doc_id").toPandas()
     by_rank = with_ids.sort_values("conv_id").reset_index(drop=True)
     assert list(by_rank["doc_id"]) == list(range(len(by_rank)))
     # start offset for incremental batches
-    with_ids2 = assign_doc_ids(docs, start=100, num_partitions=2).toPandas()
+    with_ids2 = assign_doc_ids(docs, start=100, num_partitions=2)[0].toPandas()
     assert with_ids2["doc_id"].min() == 100

@@ -1,9 +1,11 @@
-"""M1: brute-force DataFrame BM25 vs the pure-numpy oracle — rank identical."""
+"""M1: brute-force BM25 (bm25_score_scan) vs the pure-numpy oracle — rank
+identical, scores within 1e-6."""
 
 import pytest
+from pyspark.sql import functions as F
 
 from abstracts_search_spark.operators.assemble import assemble_documents
-from abstracts_search_spark.operators.bm25_brute import bm25_topk_brute, doc_tokens
+from abstracts_search_spark.operators.bm25_brute import bm25_score_scan
 from abstracts_search_spark.operators.docids import assign_doc_ids
 from abstracts_search_spark.operators.oracle_numpy import BM25Oracle
 from abstracts_search_spark.sources.transcripts import gen_queries
@@ -11,16 +13,20 @@ from abstracts_search_spark.sources.transcripts import gen_queries
 
 @pytest.fixture(scope="module")
 def corpus(spark, tiny_df):
-    docs = assign_doc_ids(assemble_documents(tiny_df), num_partitions=2).cache()
-    toks = doc_tokens(docs).cache()
+    docs = assign_doc_ids(assemble_documents(tiny_df), num_partitions=2)[0].cache()
     oracle = BM25Oracle({r["doc_id"]: r["document"] for r in docs.collect()})
-    return docs, toks, oracle
+    return docs, oracle
+
+
+def _topk(docs, query, k=10):
+    scores = bm25_score_scan(docs, query, text_col="document")
+    return scores.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
 
 
 @pytest.mark.parametrize("qid,query", gen_queries(n=15))
 def test_topk_matches_oracle(corpus, qid, query):
-    _, toks, oracle = corpus
-    got = [(r["doc_id"], r["score"]) for r in bm25_topk_brute(toks, query, k=10).collect()]
+    docs, oracle = corpus
+    got = [(r["doc_id"], r["score"]) for r in _topk(docs, query).collect()]
     want = oracle.topk(query, k=10)
     assert [d for d, _ in got] == [d for d, _ in want], f"docIDs differ for {query!r}"
     for (_, gs), (_, ws) in zip(got, want):
@@ -28,10 +34,10 @@ def test_topk_matches_oracle(corpus, qid, query):
 
 
 def test_empty_query(corpus):
-    _, toks, _ = corpus
-    assert bm25_topk_brute(toks, "—— ☃ !!!").count() == 0
+    docs, _ = corpus
+    assert _topk(docs, "—— ☃ !!!").count() == 0
 
 
 def test_absent_term_query(corpus):
-    _, toks, _ = corpus
-    assert bm25_topk_brute(toks, "zzzneverappears").count() == 0
+    docs, _ = corpus
+    assert _topk(docs, "zzzneverappears").count() == 0

@@ -1,7 +1,7 @@
 """Round-3 scale-hardening tests (VERDICT r02 items 1-9 + ADVICE):
 
-- zone-vectorized block-max WAND ranks identically to the per-document
-  reference walk and to TAAT on multi-block lists,
+- zone-vectorized block-max WAND ranks identically to TAAT and to an
+  exhaustive numpy top-k over every decoded posting on multi-block lists,
 - IndexReader never runs a vocabulary-sized driver job (lazy, bounded cache),
 - incremental syncs add dictionary rows for ONLY the new generation, and
   df summed per term / stats equal a full re-aggregation,
@@ -22,13 +22,8 @@ import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
-from abstracts_search_spark.codecs.postings import encode_posting_list
-from abstracts_search_spark.operators.wand import (
-    idf_of,
-    make_scorer,
-    wand_topk,
-    wand_topk_docwise,
-)
+from abstracts_search_spark.codecs.postings import decode_posting_list, encode_posting_list
+from abstracts_search_spark.operators.wand import idf_of, make_scorer, wand_topk
 from abstracts_search_spark.plans.build import (
     build_index,
     compact_index,
@@ -59,6 +54,20 @@ def taat_topk(rows, idfs, k, k1, b, avgdl):
     return list(zip(out["doc_id"].tolist(), out["score"].tolist()))
 
 
+def brute_topk(rows, idfs, k, k1, b, avgdl):
+    """Exhaustive top-k: every posting of every list decoded and scored,
+    contributions summed per doc in row order -> [(doc_id, score)] ranked
+    (score DESC, doc_id ASC)."""
+    scores: dict[int, float] = {}
+    for row in rows:
+        docs, tfs, dls = decode_posting_list(row)
+        tf, dl = tfs.astype(np.float64), dls.astype(np.float64)
+        contrib = idfs[row["term_id"]] * tf * (k1 + 1.0) / (tf + k1 * (1.0 - b + b * dl / avgdl))
+        for d, c in zip(docs.tolist(), contrib.tolist()):
+            scores[d] = scores.get(d, 0.0) + c
+    return sorted(scores.items(), key=lambda x: (-x[1], x[0]))[:k]
+
+
 def _random_shard(rng, n_docs=4000, n_terms=6, max_df=1800, tie_scores=False):
     dls = rng.integers(10, 200, size=n_docs).astype(np.int64)
     rows, idfs = [], {}
@@ -81,21 +90,15 @@ def _random_shard(rng, n_docs=4000, n_terms=6, max_df=1800, tie_scores=False):
 @pytest.mark.parametrize("seed", [0, 1, 2, 3])
 @pytest.mark.parametrize("k", [1, 3, 10, 100])
 def test_wand_zone_equals_docwise_and_taat(seed, k):
+    """Zone scorer == TAAT == the exhaustive document-wise scan."""
     rng = np.random.default_rng(seed)
     rows, idfs = _random_shard(rng, tie_scores=(seed == 3))
     args = (rows, idfs, k, 1.2, 0.75, 90.0)
     zone = wand_topk(*args)
-    docwise = wand_topk_docwise(*args)
-    taat = taat_topk(*args)
-    # zone scorer and TAAT accumulate in the same order → BIT-identical.
-    # This is the pair that must agree exactly: method="auto" switches between
-    # them per shard, so any divergence would make rankings method-dependent.
-    assert zone == taat
-    # the per-document walk sums floats in a different order; docs whose true
-    # scores differ by ~1e-15 may legitimately swap — allow exactly that
-    assert [round(s, 6) for _, s in zone] == [round(s, 6) for _, s in docwise]
-    for (dz, sz), (dd, sd) in zip(zone, docwise):
-        assert dz == dd or abs(sz - sd) < 1e-9
+    # zone scorer, TAAT and the exhaustive scan all sum a doc's contributions
+    # in row order → BIT-identical. method="auto" switches between zone and
+    # TAAT per shard, so any divergence would make rankings method-dependent.
+    assert zone == taat_topk(*args) == brute_topk(*args)
 
 
 try:
@@ -134,14 +137,16 @@ def test_wand_zone_subset_of_terms():
     rng = np.random.default_rng(7)
     rows, idfs = _random_shard(rng, n_terms=4)
     args = ([rows[0], rows[2]], {0: idfs[0], 2: idfs[2]}, 5, 1.2, 0.75, 90.0)
-    assert wand_topk(*args) == wand_topk_docwise(*args)
+    assert wand_topk(*args) == taat_topk(*args)
+    assert wand_topk(*args) == brute_topk(*args)
 
 
 def test_wand_zone_single_sparse_term():
     rng = np.random.default_rng(11)
     rows, idfs = _random_shard(rng, n_terms=1, max_df=5)
     args = (rows, idfs, 10, 1.2, 0.75, 90.0)
-    assert wand_topk(*args) == wand_topk_docwise(*args)
+    assert wand_topk(*args) == taat_topk(*args)
+    assert wand_topk(*args) == brute_topk(*args)
 
 
 # ------------------------------------------- reader: bounded, lazy lookup --
@@ -548,37 +553,41 @@ def test_phrase_matches_exact_and_normalized(spark):
     assert phrase_matches(docs, "beta gamma").filter(F.col("doc_id") == 3).count() == 0
 
 
-def test_phrase_count_matches_python_reference(spark):
-    """Catalyst replace-arithmetic == independent greedy counter on random
-    token streams (both are non-overlapping left-to-right; double-space
+def test_phrase_count_matches_python_reference(spark, greedy_count):
+    """phrase_matches' counts == an independent greedy counter over the
+    tokenizer's stream, on random token streams and on the self-overlap
+    ('a a' in 'a a a': once) and adjacent-repeat ('new york new york':
+    twice) cases (both are non-overlapping left-to-right; double-space
     padding means adjacent occurrences all count)."""
     import numpy as np
 
-    from abstracts_search_spark.functions.tokenize import _TOKEN_RE
-    from abstracts_search_spark.operators.phrase import phrase_count_expr
+    from abstracts_search_spark.functions.tokenize import get_tokenizer
+    from abstracts_search_spark.operators.phrase import phrase_matches
 
+    tokens = get_tokenizer("ascii").tokens
     rng = np.random.default_rng(9)
     vocab = ["aa", "bb", "cc", "Dd!"]
     rows = [
         (i, " ".join(rng.choice(vocab, size=rng.integers(0, 30)).tolist()))
         for i in range(300)
+    ] + [
+        (300, "a a a"),
+        (301, "A a, a a"),
+        (302, "new york new york"),
+        (303, "New York, NEW york!"),
     ]
     docs = spark.createDataFrame(rows, "doc_id long, text string")
-    got = {
-        r["doc_id"]: r["n"]
-        for r in docs.select("doc_id", phrase_count_expr("text", "aa bb").alias("n")).collect()
-    }
-    for i, text in rows:
-        toks = [m.lower() for m in _TOKEN_RE.findall(text)]
-        # independent reference: greedy non-overlapping scan in token space
-        want, j = 0, 0
-        while j + 1 < len(toks):
-            if toks[j] == "aa" and toks[j + 1] == "bb":
-                want += 1
-                j += 2
-            else:
-                j += 1
-        assert got[i] == want, (i, text)
+    got = {}
+    for phrase in ("aa bb", "a a", "new york"):
+        got[phrase] = {
+            r["doc_id"]: r["n_hits"]
+            for r in phrase_matches(docs, phrase, top=len(rows)).collect()
+        }
+        for i, text in rows:
+            want = greedy_count(tokens(text), tokens(phrase))
+            assert got[phrase].get(i, 0) == want, (phrase, i, text)
+    assert got["a a"] == {300: 1, 301: 2}
+    assert got["new york"] == {302: 2, 303: 2}
 
 
 # ---------------------------------------------------- fixture invariants ---

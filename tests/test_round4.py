@@ -515,17 +515,15 @@ def test_tokenizer_ascii_contract(spark):
     """Non-Latin text tokenizes to an EMPTY stream by contract: the engine's
     single tokenizer is [A-Za-z0-9]+ with ASCII lowering (functions/
     tokenize.py). This keeps Python/JVM/DuckDB semantics bit-identical —
-    unicode lowercasing differs across engines on exotic codepoints. A
-    unicode-aware tokenizer variant would slot in by swapping TOKEN_PATTERN +
-    TOKENIZE_SQL_DUCKDB in functions/tokenize.py (one config point, three
-    synchronized implementations) with its own oracle.
+    unicode lowercasing differs across engines on exotic codepoints. Other
+    variants are TokenizerSpec entries in functions/tokenize.py (one config
+    point: the Python, JVM and DuckDB forms side by side), each with its own
+    oracle.
     """
-    import pandas as pd
+    from abstracts_search_spark.functions.tokenize import get_tokenizer, tokens_expr
 
-    from abstracts_search_spark.functions.tokenize import tokenize_pd, tokens_expr
-
-    cases = pd.Series(["Καλημέρα κόσμε", "你好世界", "Привет мир", "🙂🙂", "Grüße aus Köln"])
-    got = tokenize_pd(cases).tolist()
+    cases = ["Καλημέρα κόσμε", "你好世界", "Привет мир", "🙂🙂", "Grüße aus Köln"]
+    got = [get_tokenizer("ascii").tokens(t) for t in cases]
     # pure non-Latin scripts -> empty; mixed strings keep only ASCII runs
     assert got == [[], [], [], [], ["gr", "e", "aus", "k", "ln"]]
     # Catalyst expression agrees (the 'İ'-style lower-first hazards cannot

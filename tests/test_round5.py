@@ -271,27 +271,54 @@ def _duck_docs():
     return pd.DataFrame(MIXED_DOCS, columns=["doc_id", "text"])
 
 
-def test_unicode_tokenizer_three_way_equality(spark):
-    """Python regex ≡ Spark Catalyst split ≡ DuckDB RE2 split on the
-    mixed-script fixture (the per-variant contract test)."""
+# beyond MIXED_DOCS: case variants in several scripts, and U+0130 İ — the one
+# codepoint where the DuckDB oracle's simple case mapping differs
+CASE_DOCS = ["Мир МИР мир Spark SPARK spark Café CAFÉ", "İstanbul ISTANBUL istanbul"]
+
+
+@pytest.mark.parametrize("name", ["ascii", "unicode"])
+def test_tokenizer_streams_equal(spark, name):
+    """Per variant, on the mixed-script fixture: TokenizerSpec.tokens ≡ its
+    batch pass expanded back per document ≡ Spark Catalyst (tokens_expr,
+    doclen_expr) ≡ DuckDB RE2 (duckdb_sql; İ excluded for unicode, as
+    documented in functions/tokenize.py)."""
     import duckdb
 
     from abstracts_search_spark.functions.tokenize import (
+        doclen_expr,
         get_tokenizer,
-        tokenize_pd,
         tokens_expr,
     )
-    import pandas as pd
 
-    texts = [t for _, t in MIXED_DOCS]
-    py = list(tokenize_pd(pd.Series(texts), tokenizer="unicode"))
+    spec = get_tokenizer(name)
+    texts = [t for _, t in MIXED_DOCS] + CASE_DOCS
+    py = [spec.tokens(t) for t in texts]
+
+    lens, codes, terms = spec.batch(texts)
+    flat = terms[codes].tolist()
+    bounds = np.concatenate([[0], np.cumsum(lens)])
+    assert [flat[a:b] for a, b in zip(bounds[:-1], bounds[1:])] == py
+    # the codes are re-keyed onto distinct lowered terms, so every case
+    # variant (CASE_DOCS) of a term carries that term's one code
+    assert len(set(terms.tolist())) == terms.shape[0]
+    assert sorted(terms.tolist()) == sorted({t for toks in py for t in toks})
+
     df = spark.createDataFrame([(t,) for t in texts], "text string")
-    sp = [list(r[0]) for r in df.select(tokens_expr("text", tokenizer="unicode")).collect()]
-    sql = get_tokenizer("unicode").duckdb_sql.format(col="?")
+    rows = df.select(
+        tokens_expr("text", tokenizer=name).alias("toks"),
+        doclen_expr("text", tokenizer=name).alias("n"),
+    ).collect()
+    assert [list(r["toks"]) for r in rows] == py
+    assert [r["n"] for r in rows] == lens.tolist()
+
+    sql = spec.duckdb_sql.format(col="?")
     con = duckdb.connect()
-    dk = [con.execute(f"SELECT {sql}", [t]).fetchone()[0] for t in texts]
-    assert py == sp == dk
-    assert any("мир" in toks for toks in py)  # non-Latin text actually tokenized
+    duck = [(t, p) for t, p in zip(texts, py) if name == "ascii" or "İ" not in t]
+    assert [con.execute(f"SELECT {sql}", [t]).fetchone()[0] for t, _ in duck] == [
+        p for _, p in duck
+    ]
+    if name == "unicode":
+        assert any("мир" in toks for toks in py)  # non-Latin text actually tokenized
 
 
 def test_unicode_index_bm25_matches_duckdb_oracle(spark, tmp_path):
@@ -366,15 +393,14 @@ def test_tokenizer_contract_gates(spark, tiny_dir, tmp_path):
 def test_ascii_default_unchanged(spark, tmp_path):
     """The default build records tokenizer='ascii' and tokenizes exactly as
     before the registry existed (regression pin for every standing index)."""
-    import pandas as pd
+    import inspect
 
-    from abstracts_search_spark.functions.tokenize import tokenize_pd
+    from abstracts_search_spark.functions.tokenize import get_tokenizer, tokens_expr
+    from abstracts_search_spark.plans.build import build_doc_index, build_index
 
-    assert list(tokenize_pd(pd.Series(["Ä мир Test-42"]))[0]) == ["test", "42"]
-    assert list(tokenize_pd(pd.Series(["Ä мир Test-42"]), tokenizer="ascii")[0]) == [
-        "test",
-        "42",
-    ]
+    for fn in (build_index, build_doc_index, tokens_expr):
+        assert inspect.signature(fn).parameters["tokenizer"].default == "ascii"
+    assert get_tokenizer("ascii").tokens("Ä мир Test-42") == ["test", "42"]
 
 
 # --------------------------------------------------- AnnIndexReader ----

@@ -15,11 +15,7 @@ import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
-from abstracts_search_spark.operators.bm25_brute import (
-    bm25_score_all,
-    bm25_score_scan,
-    doc_tokens,
-)
+from abstracts_search_spark.operators.bm25_brute import bm25_score_scan, doc_tokens
 
 
 @pytest.fixture(scope="module")
@@ -33,16 +29,16 @@ def emb(spark):
 
 
 def test_doc_tokens_equals_explode_groupby(spark, docs):
-    """The one-pass mapInPandas doc_tokens must equal the original
+    """The one-pass mapInPandas doc_tokens must equal a Catalyst
     tokenize -> explode -> groupBy(tf) plan row-for-row."""
-    from abstracts_search_spark.functions.tokenize import tokenize_udf
+    from abstracts_search_spark.functions.tokenize import tokens_expr
 
     got = {
         (r["doc_id"], r["term"]): (r["doclen"], r["tf"])
         for r in doc_tokens(docs, text_col="text", id_col="doc_id").collect()
     }
     toks = docs.select(
-        F.col("doc_id"), tokenize_udf("text").alias("tokens")
+        F.col("doc_id"), tokens_expr("text").alias("tokens")
     ).withColumn("doclen", F.size("tokens"))
     want = {
         (r["doc_id"], r["term"]): (r["doclen"], r["tf"])
@@ -54,19 +50,23 @@ def test_doc_tokens_equals_explode_groupby(spark, docs):
     assert got == want
 
 
-def test_bm25_scan_equals_score_all(spark, docs):
-    """Two-scan brute BM25 == the doc_tokens + join/aggregate reference
-    plan, at full double precision ranking (not just round-6)."""
-    q = "spark query join table"
-    toks = doc_tokens(docs, text_col="text", id_col="doc_id")
-    want = {
-        r["doc_id"]: r["score"]
-        for r in bm25_score_all(toks, sorted(set(q.split()))).collect()
-    }
-    got = {r["doc_id"]: r["score"] for r in bm25_score_scan(docs, q).collect()}
-    assert set(got) == set(want)
-    for d in want:
-        assert got[d] == pytest.approx(want[d], abs=1e-9)
+@pytest.mark.parametrize("q", ["spark query join table", "Spark SPARK the data", "zzznope"])
+def test_bm25_scan_equals_numpy_oracle(spark, docs, q):
+    """Two-scan brute BM25 == the numpy oracle over every matching doc:
+    same doc set, rank-identical, scores within 1e-6 (case variants and
+    duplicated terms in the query; an absent term matches nothing)."""
+    from abstracts_search_spark.operators.oracle_numpy import BM25Oracle
+
+    oracle = BM25Oracle({r["doc_id"]: r["text"] for r in docs.collect()})
+    want = oracle.topk(q, k=len(oracle.tf))
+    got = sorted(
+        ((r["doc_id"], r["score"]) for r in bm25_score_scan(docs, q).collect()),
+        key=lambda x: (-x[1], x[0]),
+    )
+    assert [d for d, _ in got] == [d for d, _ in want]
+    for (_, gs), (_, ws) in zip(got, want):
+        assert abs(gs - ws) <= 1e-6 * max(1.0, abs(ws))
+    assert bool(got) == (q != "zzznope")
 
 
 def test_jaccard_blocked_equals_join_plan(spark, docs):
@@ -128,28 +128,26 @@ def test_assign_ids_tiled_equals_untiled_and_ties():
     assert (dup == want).all()
 
 
-def test_phrase_udf_equals_catalyst_expr(spark, docs):
-    """The vectorized phrase counter == the Catalyst replace-arithmetic
-    expression for hot, rare and absent phrases."""
-    from abstracts_search_spark.operators.phrase import (
-        phrase_count_expr,
-        phrase_matches,
-    )
+def test_phrase_matches_equals_greedy_count(spark, docs, greedy_count):
+    """The vectorized phrase counter == a plain greedy count over the
+    tokenizer's stream for hot, rare and absent phrases."""
+    from abstracts_search_spark.functions.tokenize import get_tokenizer
+    from abstracts_search_spark.operators.phrase import phrase_matches
 
+    tokens = get_tokenizer("ascii").tokens
+    texts = {r["doc_id"]: r["text"] for r in docs.collect()}
     for phrase in ("the data", "customer join small", "quantum flux absent"):
         got = {
             (r["doc_id"], r["n_hits"])
             for r in phrase_matches(docs, phrase, top=1000).collect()
         }
         want = {
-            (r["doc_id"], r["n_hits"])
-            for r in docs.select(
-                "doc_id", phrase_count_expr("text", phrase).alias("n_hits")
-            )
-            .filter(F.col("n_hits") > 0)
-            .collect()
+            (d, n)
+            for d, t in texts.items()
+            if (n := greedy_count(tokens(t), tokens(phrase))) > 0
         }
         assert got == want, phrase
+        assert len(want) < 1000  # the top cut dropped nothing
 
 
 def test_cosine_pairs_blocked_topk_cut_exact(spark, emb):

@@ -10,12 +10,11 @@ occurrence's within-document token index, and whose lineage counts match.
 
 from collections import defaultdict
 
-import pandas as pd
 from pyspark.sql import functions as F
 
 from abstracts_search_spark.codecs.multilist import decode_posting_lists
 from abstracts_search_spark.codecs.postings import decode_posting_list
-from abstracts_search_spark.functions.tokenize import doclen_expr, tokenize_pd
+from abstracts_search_spark.functions.tokenize import doclen_expr, get_tokenizer
 from abstracts_search_spark.operators.assemble import assemble_documents
 from abstracts_search_spark.operators.bm25_brute import doc_tokens
 from abstracts_search_spark.operators.docids import assign_doc_ids
@@ -30,7 +29,7 @@ BUCKETS, SHARD_DOCS = 4, 8
 
 
 def test_encoder_matches_brute_oracle(spark, tiny_df):
-    docs = assign_doc_ids(assemble_documents(tiny_df), num_partitions=2).select(
+    docs = assign_doc_ids(assemble_documents(tiny_df), num_partitions=2)[0].select(
         "doc_id", F.lit(0).alias("src_part"),
         doclen_expr("document").cast("int").alias("doclen"), "document",
     ).filter(F.col("doclen") > 0).cache()
@@ -60,12 +59,12 @@ def test_encoder_matches_brute_oracle(spark, tiny_df):
     # (term, shard) lists of the one source partition
     assert counts.value == {0: (len(want), len(seen))}
 
-    # positions: the decoded stream of each posting row equals a Python
+    # positions: the decoded stream of each posting row equals a per-text
     # re-tokenization of the row's documents
-    texts = {r["doc_id"]: r["document"] for r in docs.collect()}
-    toks = dict(zip(texts, tokenize_pd(pd.Series(list(texts.values())))))
+    tokens = get_tokenizer("ascii").tokens
     occ = defaultdict(list)
-    for doc, ts in toks.items():
+    for r in docs.collect():
+        doc, ts = r["doc_id"], tokens(r["document"])
         for i, t in enumerate(ts):
             occ[(term_id_of(t), doc)].append(i)
     for r in rows[:200]:

@@ -73,6 +73,22 @@ def test_crash_then_rerun_converges(spark, tiny_dir, tmp_path, fresh_want, fail_
 SYNC_KW = dict(buckets=8, shard_docs=64)
 
 
+def test_ingest_releases_cached_frames(spark, small_dir, tmp_path):
+    """An ingest leaves no cached RDD in the session: not after a build plus
+    one sync, and not after an ingest that crashes mid-write (the doc-id
+    range frame, the persisted ids and docs are released in a finally)."""
+    jsc = spark.sparkContext._jsc.sc()
+    before = jsc.getPersistentRDDs().size()
+    ix = str(tmp_path / "ix")
+    build_index(spark, small_dir, ix, max_parts=2, **SYNC_KW)
+    build_index(spark, small_dir, ix, **SYNC_KW)
+    assert jsc.getPersistentRDDs().size() == before
+    tables._FAIL_AFTER = "docmap"
+    with pytest.raises(InjectedCrash):
+        build_index(spark, small_dir, str(tmp_path / "crashed"), **SYNC_KW)
+    assert jsc.getPersistentRDDs().size() == before
+
+
 @pytest.fixture(scope="module")
 def sync_base(spark, small_dir, tmp_path_factory):
     """(index over the first 2 source partitions, ranks of a never-crashed

@@ -1,13 +1,12 @@
 import duckdb
 import pandas as pd
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+from pyspark.sql.functions import pandas_udf
 
-from abstracts_search_spark.functions.tokenize import (
-    TOKENIZE_SQL_DUCKDB,
-    tokenize_pd,
-    tokenize_udf,
-    tokens_expr,
-)
+from abstracts_search_spark.functions.tokenize import get_tokenizer, tokens_expr
+
+ASCII = get_tokenizer("ascii")
 
 CASES = [
     "Hello, World! 123",
@@ -21,17 +20,27 @@ CASES = [
 ]
 
 
+def _expand(lens, codes, terms):
+    """TokenizerSpec.batch output -> one token list per text."""
+    flat, out, i = terms[codes].tolist(), [], 0
+    for n in lens.tolist():
+        out.append(flat[i : i + n])
+        i += n
+    return out
+
+
 def test_pandas_vs_expr_vs_udf(spark):
-    pdf = pd.DataFrame({"text": CASES})
-    sdf = spark.createDataFrame(pdf)
-    got = (
-        sdf.select(
-            tokens_expr("text").alias("e"),
-            tokenize_udf("text").alias("u"),
-        )
-        .toPandas()
-    )
-    expected = tokenize_pd(pdf["text"])
+    """tokens() == batch() == the Catalyst form == tokens() run inside an
+    executor's pandas UDF."""
+    expected = [ASCII.tokens(c) for c in CASES]
+    assert _expand(*ASCII.batch(CASES)) == expected
+
+    @pandas_udf(T.ArrayType(T.StringType()))
+    def tokens_udf(texts: pd.Series) -> pd.Series:
+        return texts.map(ASCII.tokens)
+
+    sdf = spark.createDataFrame(pd.DataFrame({"text": CASES}))
+    got = sdf.select(tokens_expr("text").alias("e"), tokens_udf("text").alias("u")).toPandas()
     for i in range(len(CASES)):
         assert list(got["e"][i]) == expected[i], f"expr mismatch on {CASES[i]!r}"
         assert list(got["u"][i]) == expected[i], f"udf mismatch on {CASES[i]!r}"
@@ -39,18 +48,22 @@ def test_pandas_vs_expr_vs_udf(spark):
 
 def test_duckdb_oracle_matches():
     con = duckdb.connect()
-    expr = TOKENIZE_SQL_DUCKDB.format(col="text")
+    expr = ASCII.duckdb_sql.format(col="text")
     df = pd.DataFrame({"text": [c for c in CASES if c is not None]})
     con.register("t", df)
     rows = con.sql(f"select {expr} as toks from t").fetchall()
-    expected = tokenize_pd(df["text"])
     for i, (toks,) in enumerate(rows):
-        assert list(toks) == expected[i]
+        assert list(toks) == ASCII.tokens(df["text"][i])
 
 
 def test_doclen_expr_equals_udf(spark):
-    from abstracts_search_spark.functions.tokenize import doclen_expr, doclen_udf
-    from pyspark.sql import functions as F
+    """The JVM token count == the batch pass's per-text lengths, computed
+    in an executor's pandas UDF."""
+    from abstracts_search_spark.functions.tokenize import doclen_expr
+
+    @pandas_udf(T.IntegerType())
+    def doclen_udf(texts: pd.Series) -> pd.Series:
+        return pd.Series(ASCII.batch(texts)[0]).astype("int32")
 
     rows = [
         (0, "The cat sat. 42 times!"),

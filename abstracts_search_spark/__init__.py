@@ -7,7 +7,11 @@ exact top-k relevance queries — re-expressed Spark-first (DataFrame ops +
 Arrow-vectorized pandas UDFs, no per-row Python, no custom Catalyst rules).
 """
 
+from ._worker import guard_worker_zip_imports
+
 __version__ = "0.1.0"
 
 K1 = 1.2
 B_BM25 = 0.75
+
+guard_worker_zip_imports()

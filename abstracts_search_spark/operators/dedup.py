@@ -186,7 +186,7 @@ def jaccard_pairs(
         to_grid, schema="gi int, gj int, side int, vid long, n_sh long, ids array<long>"
     )
 
-    def intersect(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def intersect(key, pdf):
         from ..codecs.multilist import concat_aranges
 
         empty = pd.DataFrame(

@@ -188,7 +188,7 @@ def lloyd_step(
                 }
             )
 
-    def reduce_cl(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def reduce_cl(key, pdf):
         # partials are summed in PARTITION-ID order (ADVICE r5): the stack
         # order is then a pure function of the input partitioning, not of
         # task-arrival timing — the per-run float64 association is fixed.

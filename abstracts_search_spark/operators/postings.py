@@ -291,7 +291,7 @@ def build_segments_packed(packed: DataFrame, counts) -> DataFrame:
     """
     with_positions = "positions" in packed.columns
 
-    def build_group(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def build_group(key, pdf):
         bucket, shard = int(key[0]), int(key[1])
         lens = pdf["term_ids"].map(len).to_numpy(np.int64)
         tids = np.concatenate([np.asarray(t, dtype=np.int64) for t in pdf["term_ids"]])
@@ -342,7 +342,7 @@ def merge_segments(postings: DataFrame) -> DataFrame:
     list (the reference's Makefile:24-25).
     """
 
-    def merge_group(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def merge_group(key, pdf):
         from ..codecs.multilist import decode_posting_lists
 
         bucket, shard = int(key[0]), int(key[1])

@@ -139,7 +139,7 @@ def cosine_pairs_blocked(
     )
     both = left.union(right)
 
-    def gemm(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def gemm(key, pdf):
         gi, gj = int(key[0]), int(key[1])
         a = pdf[pdf["side"] == 0].sort_values("vid")
         b = pdf[pdf["side"] == 1].sort_values("vid") if gi != gj else a
@@ -241,7 +241,7 @@ def cosine_pairs_lsh(
     vecs = emb.select(F.col(id_col).alias("vid"), F.col(vec_col).alias("vec"))
     cand = banded.join(F.broadcast(guard), ["band", "bucket"]).join(vecs, "vid")
 
-    def gemm(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def gemm(key, pdf):
         a = pdf.sort_values("vid")
         # widen to float64 HERE (exact for float32 storage) — the GEMM and the
         # oracle both compute in doubles regardless of what the shuffle carried

@@ -229,8 +229,12 @@ class IndexReader(Staleness):
             .limit(k)
         )
         out = F.broadcast(topk).join(self.docmap.select("doc_id", "conv_id"), "doc_id")
-        return out.select("doc_id", "conv_id", "score").orderBy(
-            F.desc("score"), F.asc("doc_id")
+        # limit(k) plans a TakeOrderedAndProject: a bare orderBy would plan a
+        # range exchange, a sampling job and a shuffle job for at most k rows
+        return (
+            out.select("doc_id", "conv_id", "score")
+            .orderBy(F.desc("score"), F.asc("doc_id"))
+            .limit(k)
         )
 
     def query_many(

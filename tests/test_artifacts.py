@@ -1,7 +1,8 @@
 """Byte-level layout of written artifacts: the text index's dictionary
 table is term_id-sorted in small row groups, and the package zip is
-reproducible. Also a source guard: the tokenizer's rule is applied in
-Python only by functions/tokenize.py."""
+reproducible. Also source guards: the tokenizer's rule is applied in
+Python only by functions/tokenize.py, and no applyInPandas body carries
+type hints."""
 
 import ast
 import glob
@@ -96,3 +97,23 @@ def test_token_regex_only_in_tokenizer_module():
                     offenders.append(f"{rel}:{node.lineno} from re import {sorted(names)}")
     assert not offenders, offenders
 
+
+def test_grouped_map_functions_carry_no_type_hints():
+    """No package function whose first parameter is ``key`` (an
+    applyInPandas body) is annotated: PySpark tries to infer the eval type
+    from the hints, fails on the unannotated ``key`` and warns on every
+    call."""
+    pkg = os.path.join(REPO, "abstracts_search_spark")
+    offenders = []
+    for path in sorted(glob.glob(os.path.join(pkg, "**", "*.py"), recursive=True)):
+        with open(path, encoding="utf-8") as f:
+            tree = ast.parse(f.read(), filename=path)
+        for node in ast.walk(tree):
+            if not isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                continue
+            args = node.args.posonlyargs + node.args.args
+            if args and args[0].arg == "key" and (
+                node.returns is not None or any(a.annotation is not None for a in args)
+            ):
+                offenders.append(f"{os.path.relpath(path, pkg)}:{node.lineno} {node.name}")
+    assert not offenders, offenders

@@ -109,3 +109,18 @@ def test_single_query_plan_shape(two_gen):
         plan = df._jdf.queryExecution().executedPlan().toString()
         assert "TakeOrderedAndProject" in plan and "Window" not in plan, plan
         assert ("pos_bin" in plan) is positional, plan
+
+
+def test_single_query_job_count(spark, reader, job_count):
+    """A hydrated single read runs at most 3 Spark jobs when every query
+    term is in the dictionary cache and at most 4 with a dictionary lookup
+    scan: its final ranking is a TakeOrderedAndProject, not a range
+    exchange (a sampling job plus a shuffle job)."""
+    text = "user assistant"
+    rows = reader.query(text, k=5).collect()  # warms the dictionary cache
+    assert rows
+    assert job_count(lambda: reader.query(text, k=5).collect()) <= 3
+    scanning = IndexReader(spark, reader.index_dir, max_cached_terms=0)
+    assert scanning._cached_dict() is None
+    assert job_count(lambda: scanning.query(text, k=5).collect()) <= 4
+    assert scanning.query(text, k=5).collect() == rows

@@ -27,6 +27,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .. import B_BM25, K1
+from ..frames import no_rows
 from ..functions.tokenize import get_tokenizer
 
 
@@ -103,10 +104,9 @@ def bm25_score_scan(
     a doc's contributions are summed in sorted-term order (deterministic).
     """
     spec = get_tokenizer("ascii")
-    spark = docs.sparkSession
     terms = sorted(set(spec.tokens(query_text)))
     if not terms:
-        return spark.createDataFrame([], "doc_id long, score double")
+        return no_rows(docs, "doc_id long, score double")
     src = docs.select(F.col(id_col).alias("doc_id"), F.col(text_col).alias("_text"))
     term_index = pd.Index(terms)
 
@@ -141,12 +141,12 @@ def bm25_score_scan(
         stats_pass, schema="n_docs long, sum_dl long, dfs array<long>"
     ).collect()
     if not parts:
-        return spark.createDataFrame([], "doc_id long, score double")
+        return no_rows(docs, "doc_id long, score double")
     n_docs = sum(int(r["n_docs"]) for r in parts)
     avgdl = sum(int(r["sum_dl"]) for r in parts) / n_docs
     dfs = [sum(int(r["dfs"][i]) for r in parts) for i in range(len(terms))]
     if not any(dfs):
-        return spark.createDataFrame([], "doc_id long, score double")
+        return no_rows(docs, "doc_id long, score double")
     idfs = np.array([math.log(1.0 + (n_docs - df + 0.5) / (df + 0.5)) for df in dfs])
 
     def score_pass(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:

@@ -18,6 +18,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..frames import no_rows
 from ..functions.tokenize import get_tokenizer, tokens_expr
 from .textstats import shingles_expr
 
@@ -137,7 +138,7 @@ def jaccard_pairs(
     sh_ids = {r["shingle"]: i for i, r in enumerate(rep)}
     n_dict = len(sh_ids)
     if n_dict == 0:  # no repeated shingle -> no pair shares a shingle
-        return spark.createDataFrame([], "doc_a long, doc_b long, jaccard double")
+        return no_rows(df, "doc_a long, doc_b long, jaccard double")
     bc = spark.sparkContext.broadcast(sh_ids)
     # HASH blocks (pmod), ~sqrt(4·parallelism) of them: balanced for any id
     # distribution (incl. sparse/negative ids) with zero driver-side sizing

@@ -54,6 +54,7 @@ import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..frames import local_frame
 from . import vecindex
 
 # bumped when the persisted IVF artifact layout or training math changes
@@ -479,8 +480,8 @@ def build_ivf_index(
     vecindex.commit_vectors(assigned, out_dir, _IVF_SPEC)
 
     spark = emb.sparkSession
-    cdf = spark.createDataFrame(
-        [(int(i), [float(x) for x in cents[i]]) for i in range(n_lists)],
+    cdf = local_frame(
+        spark, list(zip(range(n_lists), cents.astype(np.float64).tolist())),
         "cl int, centroid array<double>",
     )
     commit(cdf, out_dir, "centroids")

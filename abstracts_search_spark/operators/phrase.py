@@ -34,6 +34,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..frames import no_rows
 from ..functions.tokenize import get_tokenizer
 
 
@@ -55,7 +56,7 @@ def phrase_matches(
     tokens = get_tokenizer("ascii").tokens
     toks = tokens(phrase)
     if not toks:
-        return docs.sparkSession.createDataFrame([], "doc_id long, n_hits int")
+        return no_rows(docs, "doc_id long, n_hits int")
     # str.count over the padded stream IS the greedy non-overlapping counter
     # (double-space padding: adjacent occurrences share no delimiter)
     pat = " " + "  ".join(toks) + " "

@@ -9,7 +9,11 @@ global fill producing on-disk inverted lists (Makefile:24-25). Here:
 - **build_segments_packed** — the one encoder: grouped by (bucket, shard),
   one encoded posting row per term. Every text write (batch build, stream
   epoch, documents index) encodes its rows ONCE with it and stores them as
-  one postings generation ``gen=G``. ``bucket = term_id % B`` drives
+  one postings generation ``gen=G``. Both it and the fold are grouped Arrow
+  UDFs (``applyInArrow``, record-batch iterator form): a group's columns
+  come in as flat numpy views, every list is encoded in one codec pass, and
+  the codec's Arrow arrays go back to Spark as they are — no per-list
+  Python and no pandas conversion on either side. ``bucket = term_id % B`` drives
   query-time partition pruning (the analog of IVF probing only nprobe lists,
   SURVEY.md §4); ``shard = doc_id // shard_docs`` tiles the docID space so
   doc ranges are DISJOINT across shards.
@@ -26,10 +30,22 @@ that process in parallel. AQE never sees a mega-group.
 
 from __future__ import annotations
 
+from typing import Iterator
+
 import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from ..codecs.multilist import (
+    MAX_STREAM_BYTES,
+    concat_aranges,
+    decode_posting_lists,
+    encode_posting_lists,
+    split_lists,
+)
 
 DEFAULT_BUCKETS = 64
 # docID-range tile per shard: bounds merge-group width AND sets the
@@ -61,6 +77,9 @@ _POSTING_COLS = (
 )
 
 POSTINGS_SCHEMA = f"bucket int, shard long, {_POSTING_COLS}"
+# the postings table as stored (plans/build.py writes it): data columns,
+# then the gen=G/bucket=B directory partitions
+POSTINGS_TABLE = f"shard long, {_POSTING_COLS}, gen int, bucket int"
 
 
 def term_id_of(term: str) -> int:
@@ -78,37 +97,55 @@ def bucket_of_id(tid: int, buckets: int) -> int:
     return tid % buckets
 
 
-_EMPTY_COLS = (
-    "term_id df first_doc last_doc doc_bin tf_bin dl_bin block_last block_max_tf "
-    "block_min_dl doc_offs tf_offs dl_offs n_blocks pos_bin pos_offs"
-).split()
+def _arrow_schema(ddl: str) -> pa.Schema:
+    """The Arrow schema Spark expects back from a grouped Arrow UDF
+    returning ``ddl`` (parsed driver-side: parsing needs a session)."""
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import _parse_datatype_string
+
+    return to_arrow_schema(_parse_datatype_string(ddl))
 
 
-def _encode_sorted(codes, uniques, docs, tfs, dls, head: dict, pos=None) -> pd.DataFrame:
-    """codes/docs/tfs/dls sorted by (code, doc) -> one encoded row per code.
-    All lists of a group are encoded in ONE vectorized codec pass
-    (codecs/multilist.py) — per-list Python work is just byte slicing.
-    ``pos``: flat within-doc positions aligned with the sorted entry order
-    (entry i owns tfs[i] contiguous ascending values)."""
-    from ..codecs.multilist import encode_posting_lists
+def _term_major(tids: np.ndarray, docs: np.ndarray) -> np.ndarray:
+    """The entry order the encoder takes: terms in order of first
+    appearance, each term's entries by doc. Rows leave the group in that
+    term order and the bucket files keep it (the partitioned write does not
+    re-sort them by term_id), so this order is part of the written bytes."""
+    return np.lexsort((docs, pd.factorize(tids, sort=False)[0]))
 
-    if len(codes) == 0:
-        out = pd.DataFrame({c: [] for c in _EMPTY_COLS})
-    else:
-        bounds = np.concatenate([[0], np.flatnonzero(np.diff(codes)) + 1, [len(codes)]])
-        enc = encode_posting_lists(docs, tfs, dls, bounds, positions=pos)
-        out = pd.DataFrame({"term_id": uniques[codes[bounds[:-1]]], **enc})
-    for k, v in head.items():
-        out[k] = v
-    return out
+
+def _encoded_batches(tids, docs, tfs, dls, schema: pa.Schema, head: dict, pos=None,
+                     max_bytes: int = MAX_STREAM_BYTES) -> Iterator[pa.RecordBatch]:
+    """Entries grouped by term (each term's entries contiguous and ascending
+    by doc, :func:`_term_major`) -> record batches of ``schema``, one
+    encoded row per term. All lists of a batch are encoded in ONE vectorized
+    codec pass (codecs/multilist.py) whose Arrow columns go out as they are;
+    a group whose varint streams outgrow Arrow's int32 offsets is cut into
+    several batches at list boundaries (``split_lists``). ``pos``: flat
+    within-doc positions aligned with the entries (entry i owns tfs[i]
+    contiguous ascending values); ``head``: the constant group-key columns."""
+    if tids.shape[0] == 0:
+        return
+    bounds = np.concatenate([[0], np.flatnonzero(np.diff(tids)) + 1, [tids.shape[0]]])
+    occ = np.zeros(tfs.shape[0] + 1, dtype=np.int64)
+    np.cumsum(tfs, out=occ[1:])
+    cuts = split_lists(bounds, tfs, max_bytes)
+    for t0, t1 in zip(cuts[:-1], cuts[1:]):
+        s, e = bounds[t0], bounds[t1]
+        enc = encode_posting_lists(
+            docs[s:e], tfs[s:e], dls[s:e], bounds[t0 : t1 + 1] - s,
+            positions=None if pos is None else pos[occ[s] : occ[e]],
+        )
+        cols = {**enc, "term_id": pa.array(tids[bounds[t0:t1]])}
+        for k, v in head.items():
+            cols[k] = pa.array(np.full(t1 - t0, v), type=schema.field(k).type)
+        yield pa.RecordBatch.from_arrays([cols[f.name] for f in schema], schema=schema)
 
 
 def _gather_positions(pos_flat, tf_arr, order) -> np.ndarray:
     """Reorder a flat occurrence-level positions array to follow a PAIR-level
     permutation: entry i's tf_arr[i] positions are contiguous; after sorting
     entries by ``order``, gather each entry's segment in the new order."""
-    from ..codecs.multilist import concat_aranges
-
     tf_arr = np.asarray(tf_arr, dtype=np.int64)
     starts = np.zeros(tf_arr.shape[0] + 1, dtype=np.int64)
     np.cumsum(tf_arr, out=starts[1:])
@@ -116,14 +153,25 @@ def _gather_positions(pos_flat, tf_arr, order) -> np.ndarray:
     return np.asarray(pos_flat, dtype=np.int64)[idx]
 
 
-def _emit_rows(term_arr, doc_arr, tf_arr, dl_arr, head: dict, pos_flat=None) -> pd.DataFrame:
-    """Encode one posting row per term; tf pre-aggregated per (term, doc)."""
-    codes, uniques = pd.factorize(term_arr, sort=False)
-    order = np.lexsort((doc_arr, codes))
-    pos = _gather_positions(pos_flat, tf_arr, order) if pos_flat is not None else None
-    return _encode_sorted(
-        codes[order], uniques, doc_arr[order], tf_arr[order], dl_arr[order], head, pos=pos
-    )
+def _flat(col: pa.ChunkedArray, depth: int = 1) -> np.ndarray:
+    """A list column's values, ``depth`` levels down, as one int64 numpy
+    array (``list_flatten`` honors slice offsets, where ``.values`` would
+    not)."""
+    for _ in range(depth):
+        col = pc.list_flatten(col)
+    return col.to_numpy().astype(np.int64, copy=False)
+
+
+def _stream_chunks(col: pa.ChunkedArray) -> list[memoryview]:
+    """A binary column's bytes, row after row, as one contiguous slice of
+    each chunk's data buffer (null rows hold no bytes)."""
+    out = []
+    for chunk in col.chunks:
+        _, offs_buf, data = chunk.buffers()
+        offs = np.frombuffer(offs_buf, dtype=np.int32)[chunk.offset : chunk.offset + len(chunk) + 1]
+        if data is not None and len(chunk):
+            out.append(memoryview(data)[offs[0] : offs[-1]])
+    return out
 
 
 _PACKED_DOC_SCHEMA = (
@@ -163,9 +211,6 @@ def pack_doc_tokens(
     index (the phrase-search stream, ascending per (doc, term) by the stable
     lexsort); it is off for the throughput build path.
     """
-    from typing import Iterator
-
-    from ..codecs.multilist import concat_aranges
     from ..functions.tokenize import get_tokenizer
 
     spec = get_tokenizer(tokenizer)
@@ -280,41 +325,47 @@ def build_segments_packed(packed: DataFrame, counts) -> DataFrame:
     """Packed (doc, bucket) token groups -> encoded posting rows, one per
     (bucket, shard, term).
 
-    groupBy(bucket, shard) over packed rows; inside the UDF the arrays are
-    flattened with numpy (concatenate/repeat — no per-token Python) and
-    encoded per term_id. When the packed rows carry a ``positions`` column
-    (pack_doc_tokens ``with_positions``), the posting rows gain the
-    pos_bin/pos_offs stream. ``counts`` (an accumulator of
-    :class:`PartCounts`) collects each source partition's lineage numbers
-    while the rows are encoded — its (term, doc) entries and its
-    (term, shard) lists — so nothing is read back after the write.
+    groupBy(bucket, shard) over packed rows into a grouped Arrow UDF: each
+    group's list columns are read as flat numpy arrays (``list_flatten`` +
+    ``repeat`` — no per-row or per-token Python), ordered term-major
+    (:func:`_term_major`) and encoded in one codec pass whose Arrow columns
+    are the output batch.
+    When the packed rows carry a ``positions`` column (pack_doc_tokens
+    ``with_positions``), the posting rows gain the pos_bin/pos_offs stream.
+    ``counts`` (an accumulator of :class:`PartCounts`) collects each source
+    partition's lineage numbers while the rows are encoded — its
+    (term, doc) entries and its (term, shard) lists — so nothing is read
+    back after the write.
     """
     with_positions = "positions" in packed.columns
+    schema = _arrow_schema(POSTINGS_SCHEMA)
 
-    def build_group(key, pdf):
-        bucket, shard = int(key[0]), int(key[1])
-        lens = pdf["term_ids"].map(len).to_numpy(np.int64)
-        tids = np.concatenate([np.asarray(t, dtype=np.int64) for t in pdf["term_ids"]])
-        tfs = np.concatenate([np.asarray(t, dtype=np.int64) for t in pdf["tfs"]])
-        doc_ids = np.repeat(pdf["doc_id"].to_numpy(np.int64), lens)
-        dls = np.repeat(pdf["doclen"].to_numpy(np.int64), lens)
-        parts = np.repeat(pdf["src_part"].to_numpy(np.int64), lens)
-        lists = np.unique(np.stack([parts, tids]), axis=1)[0]
+    def build_group(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        t = pa.Table.from_batches(list(batches))
+        lens = pc.list_value_length(t["term_ids"]).to_numpy().astype(np.int64)
+        part_ids, part = np.unique(t["src_part"].to_numpy(), return_inverse=True)
+        tids = _flat(t["term_ids"])
+        doc_ids = np.repeat(t["doc_id"].to_numpy(), lens)
+        order = _term_major(tids, doc_ids)
+        tfs = _flat(t["tfs"])
+        pos = _gather_positions(_flat(t["positions"], 2), tfs, order) if with_positions else None
+        tids, doc_ids, tfs = tids[order], doc_ids[order], tfs[order]
+        dls = np.repeat(t["doclen"].to_numpy().astype(np.int64), lens)[order]
+        part = np.repeat(part, lens)[order]
+        # per part: its (term, doc) entries, and its (term, shard) lists as
+        # the distinct (term rank, part) keys of the sorted entries
+        n_parts = part_ids.shape[0]
+        rank = np.cumsum(np.diff(tids, prepend=tids[0]) != 0)
+        lists = np.unique(rank * n_parts + part) % n_parts
         counts.add({
-            int(p): (int(n), int((lists == p).sum()))
-            for p, n in zip(*np.unique(parts, return_counts=True))
-        })
-        pos_flat = None
-        if with_positions:
-            pos_flat = np.concatenate(
-                [np.asarray(p, dtype=np.int64) for row in pdf["positions"] for p in row]
-                or [np.empty(0, dtype=np.int64)]
+            int(p): (int(n), int(r)) for p, n, r in zip(
+                part_ids, np.bincount(part, minlength=n_parts), np.bincount(lists, minlength=n_parts)
             )
-        return _emit_rows(
-            tids, doc_ids, tfs, dls, {"bucket": bucket, "shard": shard}, pos_flat=pos_flat
-        )
+        })
+        head = {"bucket": t["bucket"][0].as_py(), "shard": t["shard"][0].as_py()}
+        yield from _encoded_batches(tids, doc_ids, tfs, dls, schema, head, pos=pos)
 
-    return packed.groupBy("bucket", "shard").applyInPandas(build_group, schema=POSTINGS_SCHEMA)
+    return packed.groupBy("bucket", "shard").applyInArrow(build_group, schema=POSTINGS_SCHEMA)
 
 
 class PartCounts:
@@ -337,33 +388,32 @@ def merge_segments(postings: DataFrame) -> DataFrame:
     term): the compaction fold.
 
     Different generations hold disjoint doc sets (a document is ingested
-    exactly once), so the merge is concat + argsort + re-encode per term —
+    exactly once), so the merge is concat + sort + re-encode per term —
     the per-term analog of FAISS fill appending rowids to each centroid's
-    list (the reference's Makefile:24-25).
+    list (the reference's Makefile:24-25). Each group's varint streams are
+    decoded straight from the Arrow data buffers, and re-encoded through the
+    same Arrow batches as :func:`build_segments_packed`.
     """
+    schema = _arrow_schema(POSTINGS_SCHEMA)
 
-    def merge_group(key, pdf):
-        from ..codecs.multilist import decode_posting_lists
-
-        bucket, shard = int(key[0]), int(key[1])
-        dfs = pdf["df"].to_numpy(np.int64)
-        with_pos = bool(pdf["pos_bin"].notna().any())
+    def merge_group(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        t = pa.Table.from_batches(list(batches))
+        dfs = t["df"].to_numpy()
+        with_pos = t["pos_bin"].null_count < t.num_rows
         decoded = decode_posting_lists(
-            [bytes(b) for b in pdf["doc_bin"]],
-            [bytes(b) for b in pdf["tf_bin"]],
-            [bytes(b) for b in pdf["dl_bin"]],
+            _stream_chunks(t["doc_bin"]),
+            _stream_chunks(t["tf_bin"]),
+            _stream_chunks(t["dl_bin"]),
             dfs,
-            pos_bins=[bytes(b) for b in pdf["pos_bin"]] if with_pos else None,
+            pos_bins=_stream_chunks(t["pos_bin"]) if with_pos else None,
         )
         docs, tfs, dls = decoded[:3]
-        row_codes, uniques = pd.factorize(pdf["term_id"].to_numpy(np.int64), sort=False)
-        codes = np.repeat(row_codes, dfs)
-        order = np.lexsort((docs, codes))
+        tids = np.repeat(t["term_id"].to_numpy(), dfs)
+        order = _term_major(tids, docs)
         pos = _gather_positions(decoded[4], tfs, order) if with_pos else None
-        return _encode_sorted(
-            codes[order], uniques, docs[order], tfs[order], dls[order],
-            {"bucket": bucket, "shard": shard},
-            pos=pos,
+        head = {"bucket": t["bucket"][0].as_py(), "shard": t["shard"][0].as_py()}
+        yield from _encoded_batches(
+            tids[order], docs[order], tfs[order], dls[order], schema, head, pos=pos
         )
 
-    return postings.groupBy("bucket", "shard").applyInPandas(merge_group, schema=POSTINGS_SCHEMA)
+    return postings.groupBy("bucket", "shard").applyInArrow(merge_group, schema=POSTINGS_SCHEMA)

@@ -33,6 +33,7 @@ import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..frames import no_rows
 from ..sources.tables import scrub_orphan_generations
 
 # vectors-table row-group size: the pushed In(cell,…) predicate prunes
@@ -183,16 +184,6 @@ class Staleness:
     def _refresh_if_stale(self) -> None:
         if self._signature() != self._sig:
             self._attach()
-
-
-def no_rows(handle: DataFrame, schema: str) -> DataFrame:
-    """An empty DataFrame of ``schema`` that runs no Spark job: ``limit(0)``
-    on a table handle folds to an empty local relation, where
-    ``createDataFrame([], schema)`` is RDD-backed and costs a job."""
-    from pyspark.sql.types import _parse_datatype_string
-
-    fields = _parse_datatype_string(schema).fields
-    return handle.limit(0).select(*[F.lit(None).cast(f.dataType).alias(f.name) for f in fields])
 
 
 def raw_matrix(pdf) -> np.ndarray:

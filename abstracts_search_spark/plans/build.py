@@ -45,12 +45,14 @@ from pyspark.sql import functions as F
 
 from .. import B_BM25, K1
 from ..codecs.postings import BLOCK_SIZE
+from ..frames import local_frame
 from ..functions.tokenize import doclen_expr, get_tokenizer
 from ..operators.assemble import assemble_documents
 from ..operators.docids import assign_doc_ids
 from ..operators.postings import (
     DEFAULT_BUCKETS,
     DEFAULT_SHARD_DOCS,
+    POSTINGS_TABLE,
     PartCounts,
     build_segments_packed,
     merge_segments,
@@ -92,6 +94,15 @@ _LINEAGE_SCHEMA = (
     "src_part int, n_convs long, n_turns long, n_docs long, n_tokens long, "
     "max_doc_id long, n_postings long, n_term_rows long, wall_sec double"
 )
+_STATS_SCHEMA = "n_docs long, avgdl double, total_tokens long"
+
+# each table as read back (read_table's ``schema``): its data columns, then
+# its directory partitions. Declaring them spares every read the Spark job
+# that infers a schema from a parquet footer.
+LINEAGE_TABLE = f"{_LINEAGE_SCHEMA}, ts timestamp, gen int"
+DOCMAP_TABLE = "doc_id long, conv_id string, doclen int, src_part int"
+DICTIONARY_TABLE = "term_id long, df long, bucket int, gen int"
+STATS_TABLE = _STATS_SCHEMA
 
 
 def list_source_partitions(transcripts_dir: str) -> list[int]:
@@ -109,7 +120,7 @@ def committed_lineage(spark: SparkSession, index_dir: str) -> list:
     if not table_exists(index_dir, "lineage"):
         return []
     return (
-        read_table(spark, index_dir, "lineage")
+        read_table(spark, index_dir, "lineage", LINEAGE_TABLE)
         .select("src_part", "n_docs", "n_tokens", "max_doc_id")
         .collect()
     )
@@ -283,7 +294,7 @@ def ingest(
         max_doc = int(r["max_doc_id"]) if r else None
         lineage.append((int(p), *nums, max_doc, *counts.value.get(p, (0, 0)), wall))
     commit_generation(
-        spark.createDataFrame(lineage, _LINEAGE_SCHEMA).withColumn("ts", F.current_timestamp()),
+        local_frame(spark, lineage, _LINEAGE_SCHEMA).withColumn("ts", F.current_timestamp()),
         index_dir, "lineage", gen,
     )
     return {"n_docs": sum(r[3] for r in lineage), "n_turns": sum(r[2] for r in lineage)}
@@ -378,7 +389,7 @@ def _dictionary_delta(spark: SparkSession, index_dir: str, gen: int) -> DataFram
     PartitionFilter, so only that generation's files are read), range-
     partitioned by term_id so each written file covers its own term range."""
     return (
-        read_table(spark, index_dir, "postings")
+        read_table(spark, index_dir, "postings", POSTINGS_TABLE)
         .filter(F.col("gen") == gen)
         .groupBy("term_id")
         .agg(F.sum("df").alias("df"), F.first("bucket").alias("bucket"))
@@ -391,10 +402,7 @@ def _stats(spark: SparkSession, index_dir: str) -> DataFrame:
     lineage = committed_lineage(spark, index_dir)
     n_docs = sum(r["n_docs"] for r in lineage)
     total = sum(r["n_tokens"] for r in lineage)
-    return spark.createDataFrame(
-        [(n_docs, total / n_docs if n_docs else 0.0, total)],
-        "n_docs long, avgdl double, total_tokens long",
-    )
+    return local_frame(spark, [(n_docs, total / n_docs if n_docs else 0.0, total)], _STATS_SCHEMA)
 
 
 def _fold(spark: SparkSession, index_dir: str) -> None:
@@ -402,7 +410,7 @@ def _fold(spark: SparkSession, index_dir: str) -> None:
     dictionary into gen=0, each through the crash-atomic overwrite. df sums
     per term are invariant under the fold, so a compaction that stops
     between the two overwrites still serves correct results."""
-    postings = merge_segments(read_table(spark, index_dir, "postings"))
+    postings = merge_segments(read_table(spark, index_dir, "postings", POSTINGS_TABLE))
     commit(postings.withColumn("gen", F.lit(0)), index_dir, "postings",
            partition_by=["gen", "bucket"], repartition_by=["bucket"], sort_by=["term_id"],
            compression="uncompressed", row_group_bytes=POSTINGS_ROW_GROUP_BYTES)
@@ -461,7 +469,7 @@ def merge_index(
     if "positions" in prev:
         positions = prev["positions"]
     else:  # destroy-params recovery: the capability is in the postings rows
-        first = read_table(spark, index_dir, "postings").select("pos_bin").first()
+        first = read_table(spark, index_dir, "postings", POSTINGS_TABLE).select("pos_bin").first()
         positions = bool(first is not None and first[0] is not None)
 
     def publish() -> None:

@@ -32,13 +32,14 @@ import os
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..frames import no_rows
 from ..functions.tokenize import get_tokenizer
 from ..operators.phrase import make_phrase_matcher_multi
-from ..operators.postings import term_id_of
-from ..operators.vecindex import Staleness, no_rows
+from ..operators.postings import POSTINGS_TABLE, term_id_of
+from ..operators.vecindex import Staleness
 from ..operators.wand import idf_of, make_scorer
 from ..sources.tables import read_table
-from .build import check_format
+from .build import DICTIONARY_TABLE, DOCMAP_TABLE, STATS_TABLE, check_format
 
 # postings columns each scorer reads — the pruned scan projects only these,
 # so BM25 never ships the positional stream to Python
@@ -89,7 +90,7 @@ class IndexReader(Staleness):
         with open(self._params_file) as f:
             self.params = json.load(f)
         check_format(self.params, self.index_dir)
-        row = read_table(self.spark, self.index_dir, "stats").collect()[0]
+        row = read_table(self.spark, self.index_dir, "stats", STATS_TABLE).collect()[0]
         self.n_docs = int(row["n_docs"])
         self.avgdl = float(row["avgdl"])
         # table handles are re-created too: a DataFrame's file index is frozen
@@ -97,9 +98,11 @@ class IndexReader(Staleness):
         # handles. Only merged generations are visible: an ingested one
         # joins at the merge that moves params.json's next_gen past it
         merged = F.col("gen") < int(self.params["next_gen"])
-        self.postings = read_table(self.spark, self.index_dir, "postings").filter(merged)
-        self.dictionary = read_table(self.spark, self.index_dir, "dictionary").filter(merged)
-        self.docmap = read_table(self.spark, self.index_dir, "docmap")
+        self.postings = read_table(self.spark, self.index_dir, "postings", POSTINGS_TABLE).filter(merged)
+        self.dictionary = read_table(
+            self.spark, self.index_dir, "dictionary", DICTIONARY_TABLE
+        ).filter(merged)
+        self.docmap = read_table(self.spark, self.index_dir, "docmap", DOCMAP_TABLE)
         # query text is normalized with the INDEX's tokenizer contract
         # (params.json "tokenizer", fixed at first ingest) — a unicode index
         # must not have its queries ascii-tokenized or non-Latin query terms

@@ -71,14 +71,22 @@ def heal_table(root: str, name: str) -> None:
         os.rename(old, path)
 
 
-def read_table(spark: SparkSession, root: str, name: str) -> DataFrame:
+def read_table(spark: SparkSession, root: str, name: str, schema: str | None = None) -> DataFrame:
     """Read one index artifact table. Partition columns (bucket=…, src_part=…)
-    are recovered from the directory layout via basePath."""
+    are recovered from the directory layout via basePath.
+
+    ``schema`` (DDL: data columns, then the partition columns) declares the
+    table's columns, so the read runs no schema-inference job (Spark reads
+    a parquet footer in a job of its own otherwise). The Iceberg catalog
+    carries its own schema and ignores it."""
     if _backend() == "iceberg":
         return spark.read.table(_iceberg_table(root, name))
     heal_table(root, name)
     path = os.path.join(root, name)
-    return spark.read.option("basePath", path).parquet(path)
+    reader = spark.read.option("basePath", path)
+    if schema is not None:
+        reader = reader.schema(schema)
+    return reader.parquet(path)
 
 
 def table_exists(root: str, name: str) -> bool:

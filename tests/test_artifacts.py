@@ -117,3 +117,23 @@ def test_grouped_map_functions_carry_no_type_hints():
             ):
                 offenders.append(f"{os.path.relpath(path, pkg)}:{node.lineno} {node.name}")
     assert not offenders, offenders
+
+
+def test_posting_encoder_has_no_python_loop_or_pandas_udf():
+    """The multi-list encoder builds its Arrow columns in whole-array passes
+    (no ``for``/``while`` or comprehension in ``encode_posting_lists``), and
+    both posting encoders are grouped Arrow UDFs (no ``applyInPandas`` in
+    operators/postings.py)."""
+    pkg = os.path.join(REPO, "abstracts_search_spark")
+    with open(os.path.join(pkg, "codecs", "multilist.py"), encoding="utf-8") as f:
+        tree = ast.parse(f.read())
+    (enc,) = [n for n in tree.body
+              if isinstance(n, ast.FunctionDef) and n.name == "encode_posting_lists"]
+    loops = (ast.For, ast.AsyncFor, ast.While, ast.ListComp, ast.SetComp, ast.DictComp,
+             ast.GeneratorExp)
+    assert [n.lineno for n in ast.walk(enc) if isinstance(n, loops)] == []
+    with open(os.path.join(pkg, "operators", "postings.py"), encoding="utf-8") as f:
+        tree = ast.parse(f.read())
+    calls = [n.lineno for n in ast.walk(tree)
+             if isinstance(n, ast.Attribute) and n.attr == "applyInPandas"]
+    assert calls == []

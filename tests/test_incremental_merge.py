@@ -11,7 +11,7 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
-from abstracts_search_spark.plans.build import build_index, compact_index
+from abstracts_search_spark.plans.build import build_index, compact_index, merge_index
 from abstracts_search_spark.plans.query import IndexReader
 from abstracts_search_spark.sources.tables import read_table
 
@@ -92,3 +92,40 @@ def test_sync_with_other_bucket_count_refused(spark, small_dir, tmp_path):
     with pytest.raises(ValueError, match="buckets=8"):
         compact_index(spark, ix, buckets=4, shard_docs=64)
     assert sorted((dp, sorted(fs)) for dp, _, fs in os.walk(ix)) == listing
+
+
+def test_sync_and_attach_job_counts(spark, small_dir, tmp_path, job_count):
+    """A one-part sync onto a built positional index runs no schema-
+    inference job (every index table is read with its declared schema) and
+    writes its lineage and stats rows without Python-worker tasks: at most
+    20 ingest jobs and 6 merge jobs. A reader attach runs one job, the
+    stats row's collect."""
+    ix = str(tmp_path / "ix")
+    opts = dict(buckets=8, shard_docs=64, with_positions=True)
+    build_index(spark, small_dir, ix, max_parts=3, **opts)
+    ingest = job_count(lambda: build_index(spark, small_dir, ix, skip_merge=True, **opts))
+    merge = job_count(lambda: merge_index(spark, ix, buckets=8, shard_docs=64))
+    attach = job_count(lambda: IndexReader(spark, ix))
+    assert ingest <= 20 and merge <= 6 and attach <= 1, (ingest, merge, attach)
+
+
+def test_declared_table_schemas_equal_inferred(spark, small_dir, tmp_path):
+    """The declared schema of every text-index table is exactly what Spark
+    infers from the files, columns in the same order."""
+    from abstracts_search_spark.operators.postings import POSTINGS_TABLE
+    from abstracts_search_spark.plans.build import (
+        DICTIONARY_TABLE,
+        DOCMAP_TABLE,
+        LINEAGE_TABLE,
+        STATS_TABLE,
+    )
+
+    ix = str(tmp_path / "ix")
+    build_index(spark, small_dir, ix, buckets=8, shard_docs=64, max_parts=2)
+    for name, ddl in (("postings", POSTINGS_TABLE), ("docmap", DOCMAP_TABLE),
+                      ("lineage", LINEAGE_TABLE), ("dictionary", DICTIONARY_TABLE),
+                      ("stats", STATS_TABLE)):
+        inferred = read_table(spark, ix, name)
+        declared = read_table(spark, ix, name, ddl)
+        assert declared.schema.simpleString() == inferred.schema.simpleString(), name
+        assert sorted(map(repr, declared.collect())) == sorted(map(repr, inferred.collect())), name

@@ -102,10 +102,10 @@ def test_positions_roundtrip_property(n, seed):
     enc = encode_posting_lists(
         docs, tfs, dls, np.array([0, docs.shape[0]]), positions=pos
     )
-    assert bytes(enc["pos_bin"][0]) == row["pos_bin"]
-    assert np.array_equal(enc["pos_offs"][0], row["pos_offs"])
+    assert enc["pos_bin"][0].as_py() == row["pos_bin"]
+    assert np.array_equal(enc["pos_offs"][0].as_py(), row["pos_offs"])
     _, mt, _, _, mp = decode_posting_lists(
-        [bytes(enc["doc_bin"][0])], [bytes(enc["tf_bin"][0])],
-        [bytes(enc["dl_bin"][0])], enc["df"], pos_bins=[bytes(enc["pos_bin"][0])],
+        enc["doc_bin"].to_pylist(), enc["tf_bin"].to_pylist(),
+        enc["dl_bin"].to_pylist(), enc["df"].to_numpy(), pos_bins=enc["pos_bin"].to_pylist(),
     )
     assert np.array_equal(mp, pos)

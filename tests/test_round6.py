@@ -202,3 +202,29 @@ def test_ann_topk_many_full_radius_equals_brute(spark, emb, tmp_path):
     assert [g[0] for g in got] == [w[0] for w in want]
     for g, w in zip(got, want):
         assert g[1] == pytest.approx(w[1], abs=2e-6)
+
+
+def test_empty_answers_run_no_job(spark, docs, job_count):
+    """Every answer the driver already knows is empty (no query term, no
+    document to score, no document holding a term, an empty phrase, no
+    repeated shingle) is an empty local relation: collecting it runs no
+    Spark job."""
+    from abstracts_search_spark.operators.dedup import jaccard_pairs
+    from abstracts_search_spark.operators.phrase import phrase_matches
+
+    no_tokens = docs.select("doc_id", F.lit("—— ☃ !!!").alias("text"))
+    distinct = spark.createDataFrame(
+        [(d, " ".join(f"w{d}x{j}" for j in range(6))) for d in range(4)],
+        "doc_id long, text string",
+    )
+    answers = {
+        "bm25, empty query": bm25_score_scan(docs, "—— ☃ !!!"),
+        "bm25, no tokens in the corpus": bm25_score_scan(no_tokens, "spark"),
+        "bm25, absent terms": bm25_score_scan(docs, "zzznope qqqmissing"),
+        "phrase, empty phrase": phrase_matches(docs, "—— ☃ !!!"),
+        "jaccard, no repeated shingle": jaccard_pairs(distinct),
+    }
+    for name, answer in answers.items():
+        rows = []
+        assert job_count(lambda: rows.extend(answer.collect())) == 0, name
+        assert rows == [], name

@@ -280,12 +280,6 @@ def _assign_fn(
 QUANT_MODES = ("none", "sq8", "sq8r")
 
 
-def _payload_schema(p_or_vec_type, quantize: str) -> str:
-    if quantize in ("sq8", "sq8r"):
-        return "codes binary"
-    return f"embedding {p_or_vec_type}"
-
-
 def residual_min_max(
     emb: DataFrame, cents: np.ndarray, vec_col: str = "embedding"
 ) -> tuple[np.ndarray, np.ndarray]:
@@ -382,12 +376,16 @@ def _matrix_fn(
     return to_matrix
 
 
+# the centroids table as written and read back (one row per trained cell)
+CENTROIDS_TABLE = "cl int, centroid array<double>"
+
+
 def _load_centroids(spark, out_dir: str, params: dict) -> np.ndarray:
     """centroids table -> dense (n_lists × dim) float64 matrix."""
     from ..sources.tables import read_table
 
     cents = np.zeros((params["n_lists"], params["dim"]), dtype=np.float64)
-    for r in read_table(spark, out_dir, "centroids").collect():
+    for r in read_table(spark, out_dir, "centroids", CENTROIDS_TABLE).collect():
         cents[r["cl"]] = np.asarray(r["centroid"], dtype=np.float64)
     return cents
 
@@ -475,14 +473,14 @@ def build_ivf_index(
         quant = (qmin, qscale, quantize == "sq8r")
     assigned = emb.select(id_col, vec_col).mapInPandas(
         _assign_fn(cents, id_col, vec_col, n_groups, gen=0, quant=quant),
-        schema=f"vec_id long, {_payload_schema(vec_type, quantize)}, list int, lgroup int, gen int",
+        schema=vecindex.rows_ddl(_IVF_SPEC, vec_type, quantize),
     )
     vecindex.commit_vectors(assigned, out_dir, _IVF_SPEC)
 
     spark = emb.sparkSession
     cdf = local_frame(
         spark, list(zip(range(n_lists), cents.astype(np.float64).tolist())),
-        "cl int, centroid array<double>",
+        CENTROIDS_TABLE,
     )
     commit(cdf, out_dir, "centroids")
     params = {
@@ -536,7 +534,7 @@ def sync_ivf_index(
             )
         return new_emb.select(id_col, vec_col).mapInPandas(
             _assign_fn(cents, id_col, vec_col, int(p["n_groups"]), gen=next_gen, quant=quant),
-            schema=f"vec_id long, {_payload_schema(p['vec_type'], quantize)}, list int, lgroup int, gen int",
+            schema=vecindex.rows_ddl(_IVF_SPEC, p["vec_type"], quantize),
         )
 
     return vecindex.sync_generation(
@@ -608,11 +606,11 @@ def ivf_cell_stats(spark, out_dir: str) -> DataFrame:
     from ..sources.tables import read_table
 
     occ = (
-        read_table(spark, out_dir, "vectors")
+        vecindex.read_vectors(spark, out_dir, _IVF_SPEC)
         .groupBy("list")
         .agg(F.count("*").alias("n_vecs"))
     )
-    cells = read_table(spark, out_dir, "centroids").select(
+    cells = read_table(spark, out_dir, "centroids", CENTROIDS_TABLE).select(
         F.col("cl").alias("list")
     )
     return (

@@ -445,7 +445,7 @@ def build_ann_index(
     vec_type = emb.schema[vec_col].dataType.simpleString()
     bucketed = emb.select(id_col, vec_col).mapInPandas(
         _bucketize_fn(planes, id_col, vec_col, gen=0),
-        schema=f"vec_id long, embedding {vec_type}, bucket int, bgroup int, gen int",
+        schema=vecindex.rows_ddl(_ANN_SPEC, vec_type),
     )
     vecindex.commit_vectors(bucketed, out_dir, _ANN_SPEC)
     vecindex.write_params(
@@ -486,7 +486,7 @@ def sync_ann_index(
         planes = hyperplanes(p["dim"], p["n_planes"], p["seed"])
         return new_emb.select(id_col, vec_col).mapInPandas(
             _bucketize_fn(planes, id_col, vec_col, gen=next_gen),
-            schema=f"vec_id long, embedding {p['vec_type']}, bucket int, bgroup int, gen int",
+            schema=vecindex.rows_ddl(_ANN_SPEC, p["vec_type"]),
         )
 
     return vecindex.sync_generation(
@@ -498,10 +498,8 @@ def ann_bucket_stats(spark, out_dir: str) -> DataFrame:
     """-> (bucket, n_vecs) for every OCCUPIED bucket (hash buckets have no
     trained roster, so empties are implicit: 2^n_planes − rows) — the LSH
     twin of ivf.ivf_cell_stats, same probe-cost-variance rationale."""
-    from ..sources.tables import read_table
-
     return (
-        read_table(spark, out_dir, "vectors")
+        vecindex.read_vectors(spark, out_dir, _ANN_SPEC)
         .groupBy("bucket")
         .agg(F.count("*").cast("long").alias("n_vecs"))
         .orderBy("bucket")

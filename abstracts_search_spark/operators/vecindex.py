@@ -53,6 +53,33 @@ class VecIndexSpec:
     builder: str         # rebuild entry point named in error messages
 
 
+def payload_ddl(vec_type: str, quantize: str = "none") -> str:
+    """The stored vector column: the raw ``embedding`` (of the input's
+    ``vec_type``), or the SQ8 ``codes`` bytes of a quantized IVF index."""
+    if quantize in ("sq8", "sq8r"):
+        return "codes binary"
+    return f"embedding {vec_type}"
+
+
+def rows_ddl(spec: VecIndexSpec, vec_type: str, quantize: str = "none") -> str:
+    """A family's assigned rows, as its fill stage emits them."""
+    return (f"vec_id long, {payload_ddl(vec_type, quantize)}, {spec.sort_col} int, "
+            f"{spec.part_col} int, gen int")
+
+
+def read_vectors(spark, out_dir: str, spec: VecIndexSpec, p: dict | None = None) -> DataFrame:
+    """The vectors table, read with its declared schema (data columns, then
+    the (gen, ``spec.part_col``) directories), so the read runs no Spark job
+    inferring it from a parquet footer. ``p``: the index params, read from
+    ``out_dir`` when omitted."""
+    from ..sources.tables import read_table
+
+    p = read_params(out_dir, spec) if p is None else p
+    payload = payload_ddl(p["vec_type"], p.get("quantize", "none"))
+    return read_table(spark, out_dir, "vectors",
+                      f"vec_id long, {payload}, {spec.sort_col} int, gen int, {spec.part_col} int")
+
+
 def params_path(out_dir: str, spec: VecIndexSpec) -> str:
     return os.path.join(out_dir, spec.params_file)
 
@@ -149,16 +176,13 @@ def compact_generations(spark, out_dir: str, spec: VecIndexSpec) -> int:
     re-open; the crash window between the swap and the params rewrite is
     benign (old tags still no-op, a new sync appends past the stale
     next_gen without touching gen=0). Returns the generations folded."""
-    from ..sources.tables import read_table
-
     p = read_params(out_dir, spec)
     check_format(p, out_dir, spec)
     n_gens = int(p["next_gen"])
     if n_gens <= 1:
         return 0  # single generation — nothing to fold
     scrub_orphan_generations(out_dir, "vectors", n_gens)
-    vectors = read_table(spark, out_dir, "vectors")
-    folded = vectors.withColumn("gen", F.lit(0).cast("int"))
+    folded = read_vectors(spark, out_dir, spec, p).withColumn("gen", F.lit(0).cast("int"))
     commit_vectors(folded, out_dir, spec)
     p["next_gen"] = 1
     write_params(out_dir, spec, p)
@@ -228,15 +252,13 @@ class CellIndexReader(Staleness):
         self._attach()
 
     def _attach(self) -> None:
-        from ..sources.tables import read_table
-
         self._sig = self._signature()
         self.params = read_params(self.index_dir, self._spec)
         check_format(self.params, self.index_dir, self._spec)
         self._load_constants()
         # handle re-created on staleness: a DataFrame's file index is frozen
         # at read time, so a new gen=G dir is invisible to old handles
-        self.vectors = read_table(self.spark, self.index_dir, "vectors")
+        self.vectors = read_vectors(self.spark, self.index_dir, self._spec, self.params)
 
     # ---- family hooks ----
     def _load_constants(self) -> None:

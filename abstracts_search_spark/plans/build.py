@@ -67,6 +67,7 @@ from ..sources.tables import (
     table_exists,
     write_params,
 )
+from ..sources.transcripts import load_transcripts
 
 # bumped whenever the on-disk artifact schema changes
 # (2 = int64 term_id keys; 3 = generation-stacked postings/gen=G/bucket=B;
@@ -330,10 +331,7 @@ def build_index(
         pending = pending[:max_parts]
     metrics: dict = {"pending_parts": len(pending), "n_turns": 0, "n_docs": 0}
     if pending:
-        t = (
-            spark.read.option("basePath", transcripts_dir)
-            .parquet(*[os.path.join(transcripts_dir, f"part={p}") for p in pending])
-        )
+        t = load_transcripts(spark, transcripts_dir, pending)
         docs = documents(t.withColumnRenamed("part", "src_part"), tokenizer)
         metrics.update(ingest(docs, index_dir, pending, **contract, start=next_doc_id(lineage)))
     if not skip_merge:

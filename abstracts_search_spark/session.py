@@ -6,9 +6,35 @@ used by ``spark-submit --py-files`` (master comes from the environment).
 
 from __future__ import annotations
 
+import atexit
 import os
+import shutil
+import tempfile
 
+from pyspark import SparkContext
 from pyspark.sql import SparkSession
+
+# Spark refuses a spark.python.unix.domain.socket.dir longer than this; under
+# it, PySpark's socket paths <dir>/.<uuid4>.sock also fit AF_UNIX's 107 bytes
+_SOCKET_DIR_MAX = 61
+_SOCKET_DIR_PREFIX = "uds-"
+
+
+def _is_local(master: str) -> bool:
+    return master == "local" or master.startswith("local[")
+
+
+def _socket_dir() -> str:
+    """A private directory for one SparkContext's Unix domain sockets, under
+    the process temp dir when its path fits Spark's limit, else under /tmp.
+    Spark removes the socket files at stop(); the directory goes at exit."""
+    base = tempfile.gettempdir()
+    # mkdtemp appends "/" + prefix + 8 random characters
+    if len(os.fsencode(base)) + 1 + len(_SOCKET_DIR_PREFIX) + 8 > _SOCKET_DIR_MAX:
+        base = "/tmp"
+    path = tempfile.mkdtemp(prefix=_SOCKET_DIR_PREFIX, dir=base)
+    atexit.register(shutil.rmtree, path, True)
+    return path
 
 
 def build_spark(
@@ -23,6 +49,10 @@ def build_spark(
       grouped-map skew is handled by the engine's own sharding, SURVEY.md §4).
     - Arrow on (every heavy per-row op is a vectorized pandas UDF).
     - UTC session TZ so DuckDB-oracle comparisons are stable.
+    - Local masters talk to their Python workers over Unix domain sockets:
+      on loopback TCP every UDF task waited ~40 ms for its first Arrow
+      batch. Cluster masters keep Spark's TCP default, since their
+      executors' temp dirs are unknown here.
     """
     # make this package importable inside executor Python workers regardless
     # of the driver's cwd (the spark-submit equivalent is --py-files; in
@@ -52,6 +82,11 @@ def build_spark(
         .config("spark.hadoop.mapreduce.fileoutputcommitter.algorithm.version", "2")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"))
     )
+    if SparkContext._active_spark_context is None and _is_local(master):
+        builder = (
+            builder.config("spark.python.unix.domain.socket.enabled", "true")
+            .config("spark.python.unix.domain.socket.dir", _socket_dir())
+        )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()

@@ -21,6 +21,12 @@ import pyarrow as pa
 import pyarrow.parquet as pq
 
 
+# the source as read back: its data columns, then the ``part`` directories
+TRANSCRIPTS_SCHEMA = (
+    "conv_id string, turn_idx int, role string, text string, tool string, ts timestamp, part int"
+)
+
+
 @dataclass(frozen=True)
 class Scale:
     n_convs: int
@@ -150,6 +156,11 @@ def gen_queries(seed: int = 42, n: int = 50) -> list[tuple[int, str]]:
     return out
 
 
-def load_transcripts(spark, path: str):
-    """Read the partitioned fixture; `part` comes back as a partition column."""
-    return spark.read.option("basePath", path).parquet(path)
+def load_transcripts(spark, path: str, parts: list[int] | None = None):
+    """Read the partitioned fixture, or only its ``parts``; `part` comes back
+    as a partition column. The declared schema spares the read a Spark job
+    that infers it from a parquet footer."""
+    reader = spark.read.schema(TRANSCRIPTS_SCHEMA).option("basePath", path)
+    if parts is None:
+        return reader.parquet(path)
+    return reader.parquet(*[os.path.join(path, f"part={p}") for p in parts])

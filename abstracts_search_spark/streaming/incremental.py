@@ -32,6 +32,7 @@ from ..plans.build import (
     merge_index,
     next_doc_id,
 )
+from ..sources.transcripts import TRANSCRIPTS_SCHEMA
 
 # streaming epochs are namespaced into their own src_part range so they can
 # never collide with batch-path part numbers (directory-derived small ints)
@@ -64,11 +65,8 @@ def stream_build(
                     positions=bool(with_positions), tokenizer=tokenizer)
     check_contract(index_dir, **contract)
     checkpoint_dir = checkpoint_dir or os.path.join(index_dir, "_stream_checkpoint")
-    schema = (
-        "conv_id string, turn_idx int, role string, text string, tool string, ts timestamp"
-    )
     stream = (
-        spark.readStream.schema(schema)
+        spark.readStream.schema(TRANSCRIPTS_SCHEMA)
         .option("basePath", transcripts_dir)
         .parquet(transcripts_dir)
     )

@@ -26,9 +26,8 @@ def main():
     cpus = int(sys.argv[1]) if len(sys.argv) > 1 else 8
     scale = sys.argv[2] if len(sys.argv) > 2 else "bench"
 
-    from pyspark.sql import SparkSession
-
     from abstracts_search_spark.plans.build import build_index
+    from abstracts_search_spark.session import build_spark
     from abstracts_search_spark.sources.transcripts import gen_transcripts
 
     tx_dir = os.path.join(_REPO, "data", "bench", f"transcripts_{scale}")
@@ -36,17 +35,11 @@ def main():
         gen_transcripts(tx_dir, scale=scale, seed=42)
 
     evt_dir = tempfile.mkdtemp(prefix="evtlog_")
-    spark = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName("stage_profile")
-        .config("spark.sql.shuffle.partitions", str(cpus))
-        .config("spark.eventLog.enabled", "true")
-        .config("spark.eventLog.dir", evt_dir)
-        .config("spark.eventLog.compress", "false")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.driver.memory", "16g")
-        .getOrCreate()
-    )
+    # the engine's own session conf, plus an uncompressed event log
+    spark = build_spark("stage_profile", master=f"local[{cpus}]", shuffle_partitions=cpus,
+                        extra_conf={"spark.eventLog.enabled": "true",
+                                    "spark.eventLog.dir": evt_dir,
+                                    "spark.eventLog.compress": "false"})
     ix = tempfile.mkdtemp(prefix="profile_ix_")
     t0 = time.time()
     metrics = build_index(spark, tx_dir, ix)

@@ -98,7 +98,7 @@ def test_sync_and_attach_job_counts(spark, small_dir, tmp_path, job_count):
     """A one-part sync onto a built positional index runs no schema-
     inference job (every index table is read with its declared schema) and
     writes its lineage and stats rows without Python-worker tasks: at most
-    20 ingest jobs and 6 merge jobs. A reader attach runs one job, the
+    19 ingest jobs and 6 merge jobs. A reader attach runs one job, the
     stats row's collect."""
     ix = str(tmp_path / "ix")
     opts = dict(buckets=8, shard_docs=64, with_positions=True)
@@ -106,7 +106,32 @@ def test_sync_and_attach_job_counts(spark, small_dir, tmp_path, job_count):
     ingest = job_count(lambda: build_index(spark, small_dir, ix, skip_merge=True, **opts))
     merge = job_count(lambda: merge_index(spark, ix, buckets=8, shard_docs=64))
     attach = job_count(lambda: IndexReader(spark, ix))
-    assert ingest <= 20 and merge <= 6 and attach <= 1, (ingest, merge, attach)
+    assert ingest <= 19 and merge <= 6 and attach <= 1, (ingest, merge, attach)
+
+
+def test_transcripts_read_runs_no_inference_job(spark, small_dir, tmp_path, job_count):
+    """build_index reads the source with its declared schema: the same ingest
+    over a schema-inferring read runs one job more and writes the same
+    postings and docmap rows."""
+    from abstracts_search_spark.operators.postings import POSTINGS_TABLE
+    from abstracts_search_spark.plans.build import DOCMAP_TABLE, documents, ingest
+
+    declared_ix, inferred_ix = str(tmp_path / "declared"), str(tmp_path / "inferred")
+    opts = dict(buckets=8, shard_docs=64)
+    declared = job_count(lambda: build_index(
+        spark, small_dir, declared_ix, max_parts=1, skip_merge=True, with_positions=True, **opts))
+
+    def inferred_ingest():
+        turns = spark.read.option("basePath", small_dir).parquet(os.path.join(small_dir, "part=0"))
+        ingest(documents(turns.withColumnRenamed("part", "src_part"), "ascii"), inferred_ix, [0],
+               positions=True, tokenizer="ascii", **opts)
+
+    inferred = job_count(inferred_ingest)
+    assert declared == inferred - 1, (declared, inferred)
+    for name, ddl in (("postings", POSTINGS_TABLE), ("docmap", DOCMAP_TABLE)):
+        rows = [sorted(map(repr, read_table(spark, ix, name, ddl).collect()))
+                for ix in (declared_ix, inferred_ix)]
+        assert rows[0] == rows[1], name
 
 
 def test_declared_table_schemas_equal_inferred(spark, small_dir, tmp_path):

@@ -686,6 +686,57 @@ def test_cell_stats(spark, tmp_path):
     assert all(0 <= r["bucket"] < 16 for r in arows)
 
 
+@pytest.mark.parametrize("kind", ["lsh", "ivf", "sq8"])
+def test_vector_tables_declared_schemas_equal_inferred(spark, tmp_path, kind):
+    """After a sync, the declared vectors and centroids schemas are exactly
+    what Spark infers from the files, columns in the same order, and the
+    rows read are the same."""
+    from abstracts_search_spark.operators import vecindex
+    from abstracts_search_spark.operators.ivf import _IVF_SPEC, CENTROIDS_TABLE, sync_ivf_index
+    from abstracts_search_spark.operators.similarity import (
+        _ANN_SPEC,
+        build_ann_index,
+        sync_ann_index,
+    )
+    from abstracts_search_spark.sources.tables import read_table
+
+    emb = _emb(spark)
+    first, second = emb.filter(F.col("vec_id") < 400), emb.filter(F.col("vec_id") >= 400)
+    out = str(tmp_path / kind)
+    if kind == "lsh":
+        build_ann_index(first, out, n_planes=4)
+        sync_ann_index(second, out, src_tag="b2")
+        spec, tables = _ANN_SPEC, []
+    else:
+        build_ivf_index(first, out, n_lists=8, iters=1,
+                        quantize="none" if kind == "ivf" else kind)
+        sync_ivf_index(second, out, src_tag="b2")
+        spec, tables = _IVF_SPEC, [("centroids", read_table(spark, out, "centroids", CENTROIDS_TABLE))]
+    tables.append(("vectors", vecindex.read_vectors(spark, out, spec)))
+    for name, declared in tables:
+        inferred = read_table(spark, out, name)
+        assert declared.schema.simpleString() == inferred.schema.simpleString(), name
+        assert sorted(map(repr, declared.collect())) == sorted(map(repr, inferred.collect())), name
+
+
+def test_ivf_sync_and_first_read_run_no_inference_job(spark, tmp_path, job_count):
+    """An IVF sync runs no schema-inference job and the first read after it
+    two jobs: the reader's centroids collect and the probe (5 and 4 when
+    the vectors and centroids tables were read with inference)."""
+    from abstracts_search_spark.operators.ivf import sync_ivf_index
+
+    emb = _emb(spark)
+    out = str(tmp_path / "ivf")
+    build_ivf_index(emb.filter(F.col("vec_id") < 400), out, n_lists=8, iters=1)
+    r = IvfIndexReader(spark, out)
+    q = [float(v) for v in emb.filter(F.col("vec_id") == 450).first()["embedding"]]
+    sync = job_count(lambda: sync_ivf_index(emb.filter(F.col("vec_id") >= 400), out, src_tag="b2"))
+    top = []
+    read = job_count(lambda: top.extend(r.topk(q, k=3).collect()))
+    assert top[0]["vec_id"] == 450
+    assert sync <= 4 and read <= 2, (sync, read)
+
+
 def test_auto_n_lists_reference_geometry():
     assert auto_n_lists(10**8) == 65104  # ~the reference's 65,536 lists at 10^8
     assert auto_n_lists(1536 * 65536 * 2) == 65536  # clamped at the reference max

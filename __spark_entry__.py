@@ -348,7 +348,7 @@ def _q_ann_lsh(spark, sf_dir):
     # the SCALE path: probe the persisted bucket-partitioned ANN index
     # (partition pruning reads only the probed buckets' files; candidates
     # scored with one float64 GEMM per Arrow batch — no interpreted HOF
-    # fold) — same results as the unindexed ann_lsh_topk scan, same oracle.
+    # fold) — the rows of the oracle's SQL re-bucketing of the corpus.
     # The cached reader skips the per-open listing of the vectors table.
     return _ann_reader(spark, sf_dir).topk(
         _query_vec(spark, sf_dir), k=ANN_K, probe_hamming=1

@@ -64,24 +64,6 @@ def main(argv: list[str] | None = None) -> int:
                     help="hyperplane count (default: auto-sized to the corpus)")
     ab.add_argument("--seed", type=int, default=42)
 
-    asn = sub.add_parser("ann-sync", help="append a new vector batch as the next generation")
-    asn.add_argument("--embeddings", required=True)
-    asn.add_argument("--index", required=True)
-    asn.add_argument("--tag", required=True, help="batch content identity (idempotency key)")
-
-    at = sub.add_parser("ann-tune", help="sweep probe radius, record recall@k in ann_params.json")
-    at.add_argument("--index", required=True)
-    at.add_argument("-k", type=int, default=10)
-
-    aq = sub.add_parser("ann-query", help="top-k cosine probe of the ANN index")
-    aq.add_argument("--index", required=True)
-    aq.add_argument("--embeddings", required=True,
-                    help="parquet holding the query vector's row")
-    aq.add_argument("--vec-id", type=int, required=True)
-    aq.add_argument("-k", type=int, default=10)
-    aq.add_argument("--probe-hamming", type=int, default=None,
-                    help="probe radius (default: the tuned value in ann_params.json)")
-
     ib = sub.add_parser("ivf-build", help="train k-means cells + build the IVF index")
     ib.add_argument("--embeddings", required=True, help="parquet with (vec_id, embedding)")
     ib.add_argument("--index", required=True)
@@ -96,35 +78,7 @@ def main(argv: list[str] | None = None) -> int:
     ib.add_argument("--train-sample-mod", type=int, default=1,
                     help="train centroids on the 1/m sample vec_id %% m == 0")
 
-    isn = sub.add_parser("ivf-sync", help="append a new vector batch as the next generation (fixed centroids)")
-    isn.add_argument("--embeddings", required=True)
-    isn.add_argument("--index", required=True)
-    isn.add_argument("--tag", required=True, help="batch content identity (idempotency key)")
-
-    ic = sub.add_parser("ivf-compact", help="fold all generations back into gen=0")
-    ic.add_argument("--index", required=True)
-
-    ii = sub.add_parser("ivf-info", help="cell-occupancy stats (probe-cost balance)")
-    ii.add_argument("--index", required=True)
-
-    ai = sub.add_parser("ann-info", help="bucket-occupancy stats (probe-cost balance)")
-    ai.add_argument("--index", required=True)
-
-    ac = sub.add_parser("ann-compact", help="fold all generations back into gen=0")
-    ac.add_argument("--index", required=True)
-
-    it = sub.add_parser("ivf-tune", help="sweep nprobe, record recall@k in ivf_params.json")
-    it.add_argument("--index", required=True)
-    it.add_argument("-k", type=int, default=10)
-
-    iq = sub.add_parser("ivf-query", help="top-k cosine probe of the IVF index")
-    iq.add_argument("--index", required=True)
-    iq.add_argument("--embeddings", required=True,
-                    help="parquet holding the query vector's row")
-    iq.add_argument("--vec-id", type=int, required=True)
-    iq.add_argument("-k", type=int, default=10)
-    iq.add_argument("--nprobe", type=int, default=None,
-                    help="probe width (default: the value in ivf_params.json)")
+    _add_vector_commands(sub)
 
     args = p.parse_args(argv)
 
@@ -171,109 +125,93 @@ def main(argv: list[str] | None = None) -> int:
             for r in reader.phrase_query(args.text, k=args.k).collect():
                 print(json.dumps({"doc_id": r["doc_id"], "n_hits": r["n_hits"]}))
         elif args.cmd == "ann-build":
-            from abstracts_search_spark.operators.similarity import build_ann_index
+            from abstracts_search_spark.operators.similarity import AnnIndexReader, build_ann_index
 
             build_ann_index(
                 spark.read.parquet(args.embeddings), args.index,
                 n_planes=args.planes, seed=args.seed,
             )
-            import json as _json
-
-            with open(f"{args.index}/ann_params.json") as f:
-                print(_json.dumps(_json.load(f)))
-        elif args.cmd == "ann-sync":
-            from abstracts_search_spark.operators.similarity import sync_ann_index
-
-            appended = sync_ann_index(
-                spark.read.parquet(args.embeddings), args.index, src_tag=args.tag
-            )
-            print(json.dumps({"appended": bool(appended), "tag": args.tag}))
-        elif args.cmd == "ann-tune":
-            from abstracts_search_spark.operators.similarity import tune_ann_index
-
-            print(json.dumps(tune_ann_index(spark, args.index, k=args.k)))
-        elif args.cmd == "ann-query":
-            from pyspark.sql import functions as F
-
-            from abstracts_search_spark.operators.similarity import AnnIndexReader
-
-            row = (
-                spark.read.parquet(args.embeddings)
-                .filter(F.col("vec_id") == args.vec_id)
-                .first()
-            )
-            if row is None:
-                raise SystemExit(f"vec_id {args.vec_id} not found in {args.embeddings}")
-            reader = AnnIndexReader(spark, args.index)
-            qv = [float(x) for x in row["embedding"]]
-            for r in reader.topk(qv, k=args.k, probe_hamming=args.probe_hamming).collect():
-                print(json.dumps({"vec_id": r["vec_id"], "cos": r["cos"]}))
+            _print_params(args.index, AnnIndexReader)
         elif args.cmd == "ivf-build":
-            from abstracts_search_spark.operators.ivf import build_ivf_index
+            from abstracts_search_spark.operators.ivf import IvfIndexReader, build_ivf_index
 
             build_ivf_index(
                 spark.read.parquet(args.embeddings), args.index,
                 n_lists=args.lists, iters=args.iters, nprobe=args.nprobe,
                 quantize=args.quantize, train_sample_mod=args.train_sample_mod,
             )
-            with open(f"{args.index}/ivf_params.json") as f:
-                print(json.dumps(json.load(f)))
-        elif args.cmd == "ivf-sync":
-            from abstracts_search_spark.operators.ivf import sync_ivf_index
-
-            appended = sync_ivf_index(
-                spark.read.parquet(args.embeddings), args.index, src_tag=args.tag
-            )
-            print(json.dumps({"appended": bool(appended), "tag": args.tag}))
-        elif args.cmd == "ivf-tune":
-            from abstracts_search_spark.operators.ivf import tune_ivf_index
-
-            print(json.dumps(tune_ivf_index(spark, args.index, k=args.k)))
-        elif args.cmd == "ivf-compact":
-            from abstracts_search_spark.operators.ivf import compact_ivf_index
-
-            print(json.dumps({"folded_gens": compact_ivf_index(spark, args.index)}))
-        elif args.cmd in ("ivf-info", "ann-info"):
-            if args.cmd == "ivf-info":
-                from abstracts_search_spark.operators.ivf import ivf_cell_stats
-
-                rows = ivf_cell_stats(spark, args.index).collect()
-            else:
-                from abstracts_search_spark.operators.similarity import ann_bucket_stats
-
-                rows = ann_bucket_stats(spark, args.index).collect()
-            occ = [int(r["n_vecs"]) for r in rows]
-            print(json.dumps({
-                "cells": len(rows),
-                "vectors": sum(occ),
-                "empty": sum(1 for n in occ if n == 0),
-                "min": min(occ) if occ else 0,
-                "max": max(occ) if occ else 0,
-                "avg": round(sum(occ) / len(occ), 2) if occ else 0.0,
-            }))
-        elif args.cmd == "ann-compact":
-            from abstracts_search_spark.operators.similarity import compact_ann_index
-
-            print(json.dumps({"folded_gens": compact_ann_index(spark, args.index)}))
-        elif args.cmd == "ivf-query":
-            from pyspark.sql import functions as F
-
-            from abstracts_search_spark.operators.ivf import IvfIndexReader
-
-            row = (
-                spark.read.parquet(args.embeddings)
-                .filter(F.col("vec_id") == args.vec_id)
-                .first()
-            )
-            if row is None:
-                raise SystemExit(f"vec_id {args.vec_id} not found in {args.embeddings}")
-            reader = IvfIndexReader(spark, args.index)
-            qv = [float(x) for x in row["embedding"]]
-            for r in reader.topk(qv, k=args.k, nprobe=args.nprobe).collect():
-                print(json.dumps({"vec_id": r["vec_id"], "cos": r["cos"]}))
+            _print_params(args.index, IvfIndexReader)
+        else:
+            _run_vector_command(spark, args)
     finally:
         spark.stop()
     return 0
+
+
+def _add_vector_commands(sub) -> None:
+    """``{ann,ivf}-{sync,tune,query,compact,info}``: the same five lifecycle
+    subcommands for each vector family, run by the shared bodies of
+    operators/vecindex. A family's probe knob names its query flag
+    (``--probe-hamming`` / ``--nprobe``)."""
+    from abstracts_search_spark.operators.ivf import IvfIndexReader
+    from abstracts_search_spark.operators.similarity import AnnIndexReader
+
+    for fam, cls in (("ann", AnnIndexReader), ("ivf", IvfIndexReader)):
+        pf = cls._spec.params_file
+        sn = sub.add_parser(f"{fam}-sync", help="append a new vector batch as the next generation")
+        sn.add_argument("--embeddings", required=True)
+        sn.add_argument("--tag", required=True, help="batch content identity (idempotency key)")
+        tn = sub.add_parser(f"{fam}-tune", help=f"sweep {cls.knob}, record recall@k in {pf}")
+        tn.add_argument("-k", type=int, default=10)
+        qr = sub.add_parser(f"{fam}-query", help="top-k cosine probe of the index")
+        qr.add_argument("--embeddings", required=True,
+                        help="parquet holding the query vector's row")
+        qr.add_argument("--vec-id", type=int, required=True)
+        qr.add_argument("-k", type=int, default=10)
+        qr.add_argument("--" + cls.knob.replace("_", "-"), dest="knob", metavar=cls.knob.upper(),
+                        type=int, default=None,
+                        help=f"probe width (default: the tuned value in {pf})")
+        cp = sub.add_parser(f"{fam}-compact", help="fold all generations back into gen=0")
+        info = sub.add_parser(f"{fam}-info", help="cell-occupancy stats (probe-cost balance)")
+        for sp, action in ((sn, "sync"), (tn, "tune"), (qr, "query"), (cp, "compact"), (info, "info")):
+            sp.add_argument("--index", required=True)
+            sp.set_defaults(family=cls, action=action)
+
+
+def _print_params(index_dir: str, cls) -> None:
+    from abstracts_search_spark.operators import vecindex
+
+    print(json.dumps(vecindex.read_params(index_dir, cls._spec)))
+
+
+def _run_vector_command(spark, args) -> None:
+    from pyspark.sql import functions as F
+
+    from abstracts_search_spark.operators import vecindex
+
+    cls = args.family
+    if args.action == "sync":
+        appended = vecindex.sync(cls, spark.read.parquet(args.embeddings), args.index,
+                                 src_tag=args.tag)
+        print(json.dumps({"appended": bool(appended), "tag": args.tag}))
+    elif args.action == "compact":
+        folded = vecindex.compact_generations(spark, args.index, cls._spec)
+        print(json.dumps({"folded_gens": folded}))
+    elif args.action == "tune":
+        print(json.dumps(vecindex.tune(cls(spark, args.index), k=args.k)))
+    elif args.action == "info":
+        print(json.dumps(vecindex.cell_stats(cls(spark, args.index))))
+    else:
+        row = (
+            spark.read.parquet(args.embeddings)
+            .filter(F.col("vec_id") == args.vec_id)
+            .first()
+        )
+        if row is None:
+            raise SystemExit(f"vec_id {args.vec_id} not found in {args.embeddings}")
+        qv = [float(x) for x in row["embedding"]]
+        for r in cls(spark, args.index).topk(qv, k=args.k, **{cls.knob: args.knob}).collect():
+            print(json.dumps({"vec_id": r["vec_id"], "cos": r["cos"]}))
 
 
 if __name__ == "__main__":

@@ -10,18 +10,15 @@ from .dedup import (
     simhash64,
 )
 from .dedup import connected_components, dedup_clusters
-from .ivf import (
-    IvfIndexReader,
-    build_ivf_index,
-    compact_ivf_index,
-    ivf_index_topk,
-    sync_ivf_index,
-    train_kmeans,
-    tune_ivf_index,
-)
-from .similarity import compact_ann_index
+from .ivf import IvfIndexReader, build_ivf_index, sync_ivf_index, train_kmeans
 from .phrase import phrase_matches
-from .similarity import ann_index_topk, ann_lsh_topk, build_ann_index, cosine_pairs_lsh, cosine_topk
+from .similarity import (
+    AnnIndexReader,
+    build_ann_index,
+    cosine_pairs_lsh,
+    cosine_topk,
+    sync_ann_index,
+)
 from .stats import corpus_stats, term_df
 from .textstats import fingerprint, lang_id, quality_score, token_counts
 
@@ -43,17 +40,13 @@ __all__ = [
     "phrase_matches",
     "cosine_topk",
     "cosine_pairs_lsh",
-    "ann_lsh_topk",
-    "ann_index_topk",
+    "AnnIndexReader",
     "build_ann_index",
+    "sync_ann_index",
     "train_kmeans",
+    "IvfIndexReader",
     "build_ivf_index",
     "sync_ivf_index",
-    "tune_ivf_index",
-    "compact_ivf_index",
-    "compact_ann_index",
-    "ivf_index_topk",
-    "IvfIndexReader",
     "lang_id",
     "quality_score",
     "token_counts",

@@ -232,18 +232,12 @@ def train_kmeans(
     return cents
 
 
-def _assign_fn(
-    cents: np.ndarray,
-    id_col: str,
-    vec_col: str,
-    n_groups: int,
-    gen: int,
-    quant: tuple[np.ndarray, np.ndarray, bool] | None = None,
-):
-    """Fill-stage mapInPandas: assignment always runs on the RAW vector (the
+def _assign_fn(consts, params: dict, id_col: str, vec_col: str, gen: int):
+    """The IVF fill: ``consts`` = (centroids, ``quant`` = (qmin, qscale,
+    residual) or None). Assignment always runs on the RAW vector (the
     coarse quantizer sees full precision, as in FAISS ADC); with ``quant``
     set, the stored payload is the uint8 SQ8 code bytes instead of the
-    vector — a 4× storage shrink for float32 inputs. ``quant[2]`` selects
+    vector — a 4× storage shrink for float32 inputs. ``residual`` selects
     RESIDUAL coding (codes quantize x − centroid[cell], the true FAISS
     IVF-PQ shape — residuals have a tighter range than raw coordinates, so
     the same 256 levels land closer)."""
@@ -251,7 +245,8 @@ def _assign_fn(
 
     import pandas as pd
 
-    n_lists = cents.shape[0]
+    cents, quant = consts
+    n_lists, n_groups = cents.shape[0], int(params["n_groups"])
 
     def assign(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -390,18 +385,14 @@ def _load_centroids(spark, out_dir: str, params: dict) -> np.ndarray:
     return cents
 
 
-# shared lifecycle + reader (r5 verdict #8): sync/compact/scrub/staleness
-# and the probe → GEMM → top-k query path live ONCE in operators/vecindex.py
-# for both vector-index families
+# shared lifecycle + reader (r5 verdict #8): fill/sync/tune/compact/stats and
+# the probe → GEMM → top-k query path live ONCE in operators/vecindex.py for
+# both vector-index families
 _IVF_SPEC = vecindex.VecIndexSpec(
     kind="IVF", params_file="ivf_params.json",
     format_version=IVF_INDEX_FORMAT, part_col="lgroup",
     sort_col="list", builder="build_ivf_index",
 )
-
-
-def _read_ivf_params(out_dir: str) -> dict:
-    return vecindex.read_params(out_dir, _IVF_SPEC)
 
 
 def build_ivf_index(
@@ -461,34 +452,19 @@ def build_ivf_index(
     n_groups = min(IVF_MAX_GROUPS, n_lists)
     cents = train_kmeans(train_emb, n_lists, iters, id_col, vec_col)
 
-    vec_type = emb.schema[vec_col].dataType.simpleString()
     quant = None
-    qmin = qscale = None
     if quantize in ("sq8", "sq8r"):
         if quantize == "sq8":
             lo, hi = corpus_min_max(train_emb, vec_col)
         else:  # sq8r: bounds of the assignment residuals (FAISS IVF-PQ shape)
             lo, hi = residual_min_max(train_emb, cents, vec_col)
-        qmin, qscale = lo, (hi - lo) / 255.0
-        quant = (qmin, qscale, quantize == "sq8r")
-    assigned = emb.select(id_col, vec_col).mapInPandas(
-        _assign_fn(cents, id_col, vec_col, n_groups, gen=0, quant=quant),
-        schema=vecindex.rows_ddl(_IVF_SPEC, vec_type, quantize),
-    )
-    vecindex.commit_vectors(assigned, out_dir, _IVF_SPEC)
-
-    spark = emb.sparkSession
-    cdf = local_frame(
-        spark, list(zip(range(n_lists), cents.astype(np.float64).tolist())),
-        CENTROIDS_TABLE,
-    )
-    commit(cdf, out_dir, "centroids")
+        quant = (lo, (hi - lo) / 255.0, quantize == "sq8r")
     params = {
         "n_lists": int(n_lists),
         "iters": int(iters),
         "dim": int(cents.shape[1]),
         "format": IVF_INDEX_FORMAT,
-        "vec_type": vec_type,
+        "vec_type": emb.schema[vec_col].dataType.simpleString(),
         "n_groups": int(n_groups),
         "nprobe": int(nprobe),
         "n_vectors": int(n),
@@ -498,9 +474,16 @@ def build_ivf_index(
         "next_gen": 1,
         "build_id": uuid.uuid4().hex,
     }
-    if quantize in ("sq8", "sq8r"):
-        params["sq8_min"] = [float(x) for x in qmin]
-        params["sq8_scale"] = [float(x) for x in qscale]
+    if quant is not None:
+        params["sq8_min"] = [float(x) for x in quant[0]]
+        params["sq8_scale"] = [float(x) for x in quant[1]]
+    vecindex.fill(IvfIndexReader, emb, out_dir, (cents, quant), params, 0, id_col, vec_col)
+
+    cdf = local_frame(
+        emb.sparkSession, list(zip(range(n_lists), cents.astype(np.float64).tolist())),
+        CENTROIDS_TABLE,
+    )
+    commit(cdf, out_dir, "centroids")
     vecindex.write_params(out_dir, _IVF_SPEC, params)
 
 
@@ -512,34 +495,11 @@ def sync_ivf_index(
     vec_col: str = "embedding",
 ) -> bool:
     """Append a NEW vector batch to a persisted IVF index as the next
-    generation — assignment under the index's FIXED trained centroids, no
-    retrain (the same add-without-train contract as FAISS `index fill` on an
-    already-trained index, and the same crash-replay protocol as
-    similarity.sync_ann_index): ``src_tag`` is the batch's content identity;
-    a tag already recorded in ivf_params.json is a no-op, and generations
-    past the marker (appended, then crashed before the params update) are
-    scrubbed before re-appending, so replays converge. Returns True if a
-    generation was appended."""
-    spark = new_emb.sparkSession
-
-    def make_rows(p: dict, next_gen: int):
-        cents = _load_centroids(spark, out_dir, p)
-        quantize = p.get("quantize", "none")
-        quant = None
-        if quantize in ("sq8", "sq8r"):  # index's FIXED quantizer, no retrain
-            quant = (
-                np.asarray(p["sq8_min"], dtype=np.float64),
-                np.asarray(p["sq8_scale"], dtype=np.float64),
-                quantize == "sq8r",
-            )
-        return new_emb.select(id_col, vec_col).mapInPandas(
-            _assign_fn(cents, id_col, vec_col, int(p["n_groups"]), gen=next_gen, quant=quant),
-            schema=vecindex.rows_ddl(_IVF_SPEC, p["vec_type"], quantize),
-        )
-
-    return vecindex.sync_generation(
-        new_emb, out_dir, _IVF_SPEC, src_tag, vec_col, make_rows
-    )
+    generation — assignment (and SQ8 coding) under the index's FIXED trained
+    centroids and quantizer, no retrain (FAISS `index fill` on an
+    already-trained index), with the crash-replay contract of
+    :func:`~.vecindex.sync`. Returns True if a generation was appended."""
+    return vecindex.sync(IvfIndexReader, new_emb, out_dir, src_tag, id_col, vec_col)
 
 
 def probe_lists(query_vec, cents: np.ndarray, nprobe: int) -> list[int]:
@@ -559,20 +519,27 @@ class IvfIndexReader(vecindex.CellIndexReader):
     nearest centroids (:func:`probe_lists`): ``topk``/``topk_many`` take
     ``nprobe`` (default: the tuned value in ivf_params.json). Lists map to
     contiguous list-range directories (:func:`_lgroup_of`); SQ8 payloads are
-    reconstructed before scoring (asymmetric, as in FAISS ADC)."""
+    reconstructed before scoring (asymmetric, as in FAISS ADC). Tune sweeps
+    nprobe = 1, 2, 4, … and then n_lists (the exhaustive scan)."""
 
     _spec = _IVF_SPEC
+    knob = "nprobe"
+    _fill_fn = staticmethod(_assign_fn)
+
+    @staticmethod
+    def _constants(spark, index_dir: str, params: dict):
+        """-> (centroids, (qmin, qscale, residual) or None)."""
+        quant = None
+        if params.get("quantize", "none") in ("sq8", "sq8r"):
+            quant = (
+                np.asarray(params["sq8_min"], dtype=np.float64),
+                np.asarray(params["sq8_scale"], dtype=np.float64),
+                params["quantize"] == "sq8r",
+            )
+        return _load_centroids(spark, index_dir, params), quant
 
     def _load_constants(self) -> None:
-        self.centroids = _load_centroids(self.spark, self.index_dir, self.params)
-        self.quant: tuple[np.ndarray, np.ndarray, bool] | None = None
-        qmode = self.params.get("quantize", "none")
-        if qmode in ("sq8", "sq8r"):
-            self.quant = (
-                np.asarray(self.params["sq8_min"], dtype=np.float64),
-                np.asarray(self.params["sq8_scale"], dtype=np.float64),
-                qmode == "sq8r",
-            )
+        self.centroids, self.quant = self._constants(self.spark, self.index_dir, self.params)
         self.payload_col = "codes" if self.quant is not None else "embedding"
 
     def _probe(self, query_vec, nprobe: int | None = None) -> list[int]:
@@ -586,6 +553,10 @@ class IvfIndexReader(vecindex.CellIndexReader):
     def _groups_of(self, cells: np.ndarray) -> np.ndarray:
         return _lgroup_of(cells, int(self.params["n_lists"]), int(self.params["n_groups"]))
 
+    def _tune_widths(self) -> list[int]:
+        n_lists = int(self.params["n_lists"])
+        return [1 << i for i in range(n_lists.bit_length()) if 1 << i < n_lists] + [n_lists]
+
     def _decoder(self):
         return _matrix_fn(self.quant, self.centroids)
 
@@ -595,98 +566,3 @@ class IvfIndexReader(vecindex.CellIndexReader):
         return self.vectors.select(
             "vec_id", F.col("list").alias("list_id")
         )
-
-
-def ivf_cell_stats(spark, out_dir: str) -> DataFrame:
-    """-> (list, n_vecs) for EVERY trained cell, including empty ones (left
-    join from the centroids table) — cell occupancy is the probe-cost
-    variance at scale: a probe reads its cells' rows, so a hot cell is a hot
-    probe (the stat FAISS exposes as invlist sizes). One narrow groupBy over
-    (list), no vector payload touched thanks to column pruning."""
-    from ..sources.tables import read_table
-
-    occ = (
-        vecindex.read_vectors(spark, out_dir, _IVF_SPEC)
-        .groupBy("list")
-        .agg(F.count("*").alias("n_vecs"))
-    )
-    cells = read_table(spark, out_dir, "centroids", CENTROIDS_TABLE).select(
-        F.col("cl").alias("list")
-    )
-    return (
-        cells.join(occ, "list", "left")
-        .select("list", F.coalesce("n_vecs", F.lit(0)).cast("long").alias("n_vecs"))
-        .orderBy("list")
-    )
-
-
-def compact_ivf_index(spark, out_dir: str) -> int:
-    """Fold all generations back into gen=0 — the vector-side analog of the
-    doc index's postings compaction: a long-lived index that syncs every
-    delivery accumulates one ``gen=N`` directory per batch, and every probe
-    pays the per-generation file listing. Compaction rewrites the vectors
-    table (same rows, same cells, payload unchanged) as a single generation
-    through the crash-atomic facade swap; centroids/quantizer are untouched
-    (they are fixed constants of the index). ``merged_srcs`` is RETAINED —
-    every folded batch is still merged, so its tag must keep no-opping on
-    replay — and only ``next_gen`` resets. Returns the generations folded.
-
-    Concurrency contract: compaction is a MAINTENANCE operation under the
-    same single-writer assumption as the doc index's compact_index — the
-    swap replaces every vectors file, so a probe running concurrently from
-    an already-attached reader can hit FileNotFound mid-scan and must
-    re-open (the reader re-attaches on its next call once params change).
-    Crash-wise the window between the swap and the params rewrite is benign:
-    old tags still no-op and a new sync appends past the stale next_gen
-    without touching gen=0."""
-    return vecindex.compact_generations(spark, out_dir, _IVF_SPEC)
-
-
-def ivf_index_topk(
-    spark, out_dir: str, query_vec, k: int = 10, nprobe: int | None = None
-) -> DataFrame:
-    """One-shot probe of a persisted IVF index (functional wrapper around
-    :class:`IvfIndexReader` for callers without a long-lived handle)."""
-    return IvfIndexReader(spark, out_dir).topk(query_vec, k=k, nprobe=nprobe)
-
-
-def tune_ivf_index(spark, out_dir: str, n_queries: int = 8, k: int = 10) -> dict:
-    """Sweep nprobe and record recall@k vs brute force — the IVF analog of
-    the reference's `index tune` nprobe sweep (Makefile:31-32), twin of
-    similarity.tune_ann_index. The widths nprobe = 1, 2, 4, … run through
-    :func:`~.vecindex.recall_sweep` (on an SQ8 index the sample queries are
-    the reconstructed codes) and stop at the first width reaching recall
-    1.0 — guaranteed to terminate, since nprobe = n_lists probes every cell
-    and IS the exhaustive scan (the ground truth in both storage modes). The
-    chosen nprobe and the sweep land in ivf_params.json, which
-    :meth:`IvfIndexReader.topk` reads as its default."""
-    reader = IvfIndexReader(spark, out_dir)
-    p = reader.params
-    n_lists = int(p["n_lists"])
-    # 1, 2, 4, … below n_lists, then n_lists itself (the exhaustive scan)
-    widths = [1 << i for i in range(n_lists.bit_length()) if 1 << i < n_lists]
-    chosen, sweep, n_q = vecindex.recall_sweep(
-        reader, n_queries, k, "nprobe", widths + [n_lists]
-    )
-    p["nprobe"] = int(chosen)
-    p["tune_recall_at_k"] = {"k": k, "n_queries": n_q, "sweep": sweep}
-    # hot-cell skew disclosure (r5 verdict #7): cell occupancy IS the
-    # probe-cost variance — a probe reads its cells' rows, so a hot cell is
-    # a hot probe (the trained-IVF analog of the documented postings skew).
-    # One narrow groupBy at tune time; recorded so operators see the ratio
-    # without running a job.
-    occ = np.asarray(
-        [int(r["n_vecs"]) for r in ivf_cell_stats(spark, out_dir).collect()],
-        dtype=np.int64,
-    )
-    nz = occ[occ > 0]
-    med = float(np.median(nz)) if nz.size else 0.0
-    p["cell_occupancy"] = {
-        "n_cells": int(occ.size),
-        "n_empty": int((occ == 0).sum()),
-        "max": int(occ.max()) if occ.size else 0,
-        "median_nonempty": med,
-        "max_over_median": round(float(occ.max()) / med, 2) if med else None,
-    }
-    vecindex.write_params(out_dir, _IVF_SPEC, p)
-    return p

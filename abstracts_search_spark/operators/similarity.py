@@ -1,15 +1,18 @@
 """Similarity search over an embedding column (array<float>).
 
-- ``cosine_topk`` — brute-force exact cosine top-k: the baseline and oracle.
-  Dot products via ``zip_with`` + ``aggregate`` (JVM-side fold in element
-  order, float64 — matches DuckDB's list_dot_product on DOUBLE[] exactly).
-- ``ann_lsh_topk`` — the scale path: random-hyperplane LSH. Each vector gets a
-  sign-pattern bucket from `n_planes` fixed hyperplanes; the query probes only
-  its own bucket (plus Hamming-1 neighbors for recall). The hyperplanes are
-  seeded constants, so the whole pipeline is deterministic and the same plane
-  matrix can be embedded into an oracle SQL. At scale the bucketed table is
-  written partitioned by bucket → queries prune to a few files (the same
-  IVF-probe analogy as the postings buckets, SURVEY.md §4).
+- ``cosine_topk`` — brute-force exact cosine top-k: the baseline and oracle
+  (one float64 GEMM per Arrow batch).
+- ``cosine_pairs_blocked`` / ``cosine_pairs_lsh`` — exact and banded-LSH
+  near-duplicate pairs.
+- the persisted LSH index (:func:`build_ann_index`, :class:`AnnIndexReader`)
+  — the scale path: random-hyperplane LSH. Each vector gets a sign-pattern
+  bucket from `n_planes` fixed hyperplanes; a query probes its own bucket
+  plus its Hamming neighbours. The hyperplanes are seeded constants, so the
+  whole pipeline is deterministic and the same plane matrix can be embedded
+  into an oracle SQL. The bucketed table is written partitioned by bucket
+  prefix → queries prune to a few files (the same IVF-probe analogy as the
+  postings buckets, SURVEY.md §4). Its lifecycle (fill, sync, tune,
+  compaction, stats) is the shared one of ``operators/vecindex.py``.
 
 The reference's FAISS-IVF index does exactly this job for embeddings
 (/root/reference/Makefile:24-39); these operators are that capability
@@ -27,23 +30,6 @@ from . import vecindex
 
 def _to_double(v: Column) -> Column:
     return F.transform(v, lambda x: x.cast("double"))
-
-
-def dot_expr(a: Column, b: Column) -> Column:
-    """Σ a_i·b_i as float64, sequential element order (engine-portable)."""
-    return F.aggregate(
-        F.zip_with(_to_double(a), _to_double(b), lambda x, y: x * y),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-
-
-def norm_expr(a: Column) -> Column:
-    return F.sqrt(F.aggregate(_to_double(a), F.lit(0.0), lambda acc, x: acc + x * x))
-
-
-def cosine_expr(a: Column, b: Column) -> Column:
-    return dot_expr(a, b) / (norm_expr(a) * norm_expr(b))
 
 
 def cosine_topk(
@@ -273,28 +259,6 @@ def hyperplanes(dim: int, n_planes: int = 8, seed: int = 42) -> np.ndarray:
     return rng.standard_normal((n_planes, dim))
 
 
-def bucket_expr(vec: Column, planes: np.ndarray) -> Column:
-    """Sign-pattern bucket id: bit p = (vec · plane_p) >= 0."""
-    bits = [
-        F.when(
-            F.aggregate(
-                F.zip_with(
-                    _to_double(vec),
-                    F.array(*[F.lit(float(w)) for w in planes[p]]),
-                    lambda x, y: x * y,
-                ),
-                F.lit(0.0),
-                lambda acc, x: acc + x,
-            )
-            >= 0,
-            F.lit(1 << p),
-        ).otherwise(F.lit(0))
-        for p in range(planes.shape[0])
-    ]
-    out = bits[0]
-    for b in bits[1:]:
-        out = out + b
-    return out.cast("int")
 
 
 # bumped when the persisted ANN artifact layout or bucketize math changes —
@@ -358,9 +322,9 @@ def _query_sig(query_vec, planes: np.ndarray) -> int:
     return int(sum(1 << i for i in range(planes.shape[0]) if bits[i]))
 
 
-# shared lifecycle + reader (r5 verdict #8): sync/compact/scrub/staleness
-# and the probe → GEMM → top-k query path live ONCE in operators/vecindex.py
-# for both vector-index families
+# shared lifecycle + reader (r5 verdict #8): fill/sync/tune/compact/stats and
+# the probe → GEMM → top-k query path live ONCE in operators/vecindex.py for
+# both vector-index families
 _ANN_SPEC = vecindex.VecIndexSpec(
     kind="ANN", params_file="ann_params.json",
     format_version=ANN_INDEX_FORMAT, part_col="bgroup",
@@ -368,26 +332,22 @@ _ANN_SPEC = vecindex.VecIndexSpec(
 )
 
 
-def _read_ann_params(out_dir: str) -> dict:
-    return vecindex.read_params(out_dir, _ANN_SPEC)
-
-
 def _group_shift(n_planes: int) -> int:
     return max(0, n_planes - ANN_GROUP_BITS)
 
 
-def _bucketize_fn(planes: np.ndarray, id_col: str, vec_col: str, gen: int):
-    """One float64 GEMM per Arrow batch -> (vec_id, embedding, bucket,
-    bgroup, gen). Catalyst higher-order-function lambdas evaluate
-    interpreted, so the per-row ``bucket_expr`` fold would be the build's
-    CPU ceiling at 100 TB. ``bgroup`` is the directory key (bucket prefix,
+def _bucketize_fn(planes: np.ndarray, params: dict, id_col: str, vec_col: str, gen: int):
+    """The LSH fill: one float64 GEMM per Arrow batch -> (vec_id, embedding,
+    bucket, bgroup, gen). Catalyst higher-order-function lambdas evaluate
+    interpreted, so a per-row sign fold would be the build's CPU ceiling at
+    100 TB. ``bgroup`` is the directory key (bucket prefix,
     :data:`ANN_GROUP_BITS`); ``bucket`` stays a data column pruned by
     row-group stats."""
     from typing import Iterator
 
     import pandas as pd
 
-    n_planes = planes.shape[0]
+    n_planes = int(params["n_planes"])
     weights = (1 << np.arange(n_planes, dtype=np.int64)).reshape(1, n_planes)
     shift = _group_shift(n_planes)
 
@@ -441,29 +401,20 @@ def build_ann_index(
     if n_planes is None:
         n_planes = auto_n_planes(emb.count())
     planes = hyperplanes(_dim_of(emb, vec_col), n_planes, seed)
-
-    vec_type = emb.schema[vec_col].dataType.simpleString()
-    bucketed = emb.select(id_col, vec_col).mapInPandas(
-        _bucketize_fn(planes, id_col, vec_col, gen=0),
-        schema=vecindex.rows_ddl(_ANN_SPEC, vec_type),
-    )
-    vecindex.commit_vectors(bucketed, out_dir, _ANN_SPEC)
-    vecindex.write_params(
-        out_dir,
-        _ANN_SPEC,
-        {
-            "n_planes": int(n_planes),
-            "seed": seed,
-            "dim": int(planes.shape[1]),
-            "format": ANN_INDEX_FORMAT,
-            "group_bits": ANN_GROUP_BITS,
-            "probe_hamming": 1,
-            "vec_type": vec_type,
-            "merged_srcs": ["__initial__"],
-            "next_gen": 1,
-            "build_id": __import__("uuid").uuid4().hex,
-        },
-    )
+    params = {
+        "n_planes": int(n_planes),
+        "seed": seed,
+        "dim": int(planes.shape[1]),
+        "format": ANN_INDEX_FORMAT,
+        "group_bits": ANN_GROUP_BITS,
+        "probe_hamming": 1,
+        "vec_type": emb.schema[vec_col].dataType.simpleString(),
+        "merged_srcs": ["__initial__"],
+        "next_gen": 1,
+        "build_id": __import__("uuid").uuid4().hex,
+    }
+    vecindex.fill(AnnIndexReader, emb, out_dir, planes, params, 0, id_col, vec_col)
+    vecindex.write_params(out_dir, _ANN_SPEC, params)
 
 
 def sync_ann_index(
@@ -474,65 +425,10 @@ def sync_ann_index(
     vec_col: str = "embedding",
 ) -> bool:
     """Append a NEW batch of vectors to a persisted ANN index as the next
-    generation — the vector-side twin of the doc index's incremental merge
-    (plans/build.merge_index): same planes (fixed constants of the index),
-    same crash-replay contract. ``src_tag`` is the batch's content identity
-    (source partition name, delivery id); a tag already recorded in
-    ann_params.json is a no-op, so replays after a crash between the vectors
-    append and the params marker converge instead of double-ingesting.
-    Returns True if a generation was appended.
-    """
-    def make_rows(p: dict, next_gen: int):
-        planes = hyperplanes(p["dim"], p["n_planes"], p["seed"])
-        return new_emb.select(id_col, vec_col).mapInPandas(
-            _bucketize_fn(planes, id_col, vec_col, gen=next_gen),
-            schema=vecindex.rows_ddl(_ANN_SPEC, p["vec_type"]),
-        )
-
-    return vecindex.sync_generation(
-        new_emb, out_dir, _ANN_SPEC, src_tag, vec_col, make_rows
-    )
-
-
-def ann_bucket_stats(spark, out_dir: str) -> DataFrame:
-    """-> (bucket, n_vecs) for every OCCUPIED bucket (hash buckets have no
-    trained roster, so empties are implicit: 2^n_planes − rows) — the LSH
-    twin of ivf.ivf_cell_stats, same probe-cost-variance rationale."""
-    return (
-        vecindex.read_vectors(spark, out_dir, _ANN_SPEC)
-        .groupBy("bucket")
-        .agg(F.count("*").cast("long").alias("n_vecs"))
-        .orderBy("bucket")
-    )
-
-
-def compact_ann_index(spark, out_dir: str) -> int:
-    """Fold all generations back into gen=0 (same contract, rationale, and
-    single-writer/concurrency caveat as ivf.compact_ivf_index): rows and
-    buckets unchanged, one generation of directories afterwards,
-    crash-atomic via the facade swap; planes stay fixed. The crash window
-    between the vectors swap and the params rewrite is benign — old tags
-    still no-op and a new sync appends past the stale next_gen without
-    touching gen=0 — but a CONCURRENT probe from an already-attached reader
-    can hit FileNotFound mid-scan and must re-open. Returns the generations
-    folded."""
-    return vecindex.compact_generations(spark, out_dir, _ANN_SPEC)
-
-
-def ann_index_topk(
-    spark,
-    out_dir: str,
-    query_vec: list[float],
-    k: int = 10,
-    probe_hamming: int | None = None,
-    max_probes: int | None = None,
-) -> DataFrame:
-    """One-shot probe of a persisted ANN index -> (vec_id, cos), top k
-    (functional wrapper around :class:`AnnIndexReader` for callers without a
-    long-lived handle)."""
-    return AnnIndexReader(spark, out_dir).topk(
-        query_vec, k=k, probe_hamming=probe_hamming, max_probes=max_probes
-    )
+    generation under the index's fixed planes — the vector-side twin of the
+    doc index's incremental merge, with the crash-replay contract of
+    :func:`~.vecindex.sync`. Returns True if a generation was appended."""
+    return vecindex.sync(AnnIndexReader, new_emb, out_dir, src_tag, id_col, vec_col)
 
 
 class AnnIndexReader(vecindex.CellIndexReader):
@@ -542,14 +438,19 @@ class AnnIndexReader(vecindex.CellIndexReader):
     ``topk``/``topk_many`` take ``probe_hamming`` (default: the tuned value
     in ann_params.json) and ``max_probes`` (truncates the ordered list — the
     nprobe knob). Buckets map to directories by their top
-    :data:`ANN_GROUP_BITS` bits; payloads are the raw embeddings."""
+    :data:`ANN_GROUP_BITS` bits; payloads are the raw embeddings. Tune
+    sweeps the radii 0 … n_planes (radius n_planes probes every bucket)."""
 
     _spec = _ANN_SPEC
+    knob = "probe_hamming"
+    _fill_fn = staticmethod(_bucketize_fn)
+
+    @staticmethod
+    def _constants(spark, index_dir: str, params: dict) -> np.ndarray:
+        return hyperplanes(params["dim"], params["n_planes"], params["seed"])
 
     def _load_constants(self) -> None:
-        self.planes = hyperplanes(
-            self.params["dim"], self.params["n_planes"], self.params["seed"]
-        )
+        self.planes = self._constants(self.spark, self.index_dir, self.params)
 
     def _probe(self, query_vec, probe_hamming: int | None = None, max_probes: int | None = None):
         if probe_hamming is None:
@@ -565,85 +466,9 @@ class AnnIndexReader(vecindex.CellIndexReader):
     def _groups_of(self, cells: np.ndarray) -> np.ndarray:
         return cells >> _group_shift(int(self.params["n_planes"]))
 
-
-def tune_ann_index(
-    spark,
-    out_dir: str,
-    n_queries: int = 8,
-    k: int = 10,
-) -> dict:
-    """Sweep the multi-probe radius and record recall@k vs brute force —
-    the ANN analog of the reference's nprobe tune step (`sidecar-search
-    index tune`, Makefile:31-32).
-
-    The radii 0, 1, 2, … up to n_planes run through
-    :func:`~.vecindex.recall_sweep` against radius-n_planes ground truth
-    (every bucket probed = the exhaustive scan), so the whole sweep runs
-    O(n_planes) jobs and is guaranteed to terminate at recall 1.0. The
-    chosen radius and the full sweep land in ann_params.json
-    (probe_hamming / tune_recall_at_k), which :func:`ann_index_topk` reads
-    as its default.
-    """
-    reader = AnnIndexReader(spark, out_dir)
-    p = reader.params
-    n_planes = int(p["n_planes"])
-    chosen, sweep, n_q = vecindex.recall_sweep(
-        reader, n_queries, k, "probe_hamming", list(range(n_planes + 1))
-    )
-    p["probe_hamming"] = int(chosen)
-    p["tune_recall_at_k"] = {"k": k, "n_queries": n_q, "sweep": sweep}
-    # hot-bucket skew disclosure (r5 verdict #7, LSH twin of the IVF cell
-    # stats): occupied-bucket occupancy recorded at tune time — a hot
-    # bucket is a hot probe; empties are implicit (2^n_planes − n_buckets)
-    occ = np.asarray(
-        [int(r["n_vecs"]) for r in ann_bucket_stats(spark, out_dir).collect()],
-        dtype=np.int64,
-    )
-    med = float(np.median(occ)) if occ.size else 0.0
-    p["bucket_occupancy"] = {
-        "n_buckets_total": 1 << n_planes,
-        "n_occupied": int(occ.size),
-        "max": int(occ.max()) if occ.size else 0,
-        "median_occupied": med,
-        "max_over_median": round(float(occ.max()) / med, 2) if med else None,
-    }
-    vecindex.write_params(out_dir, _ANN_SPEC, p)
-    return p
+    def _tune_widths(self) -> list[int]:
+        return list(range(int(self.params["n_planes"]) + 1))
 
 
 def _dim_of(emb: DataFrame, vec_col: str) -> int:
     return len(emb.select(vec_col).first()[0])
-
-
-def ann_lsh_topk(
-    emb: DataFrame,
-    query_vec: list[float],
-    k: int = 10,
-    n_planes: int = 8,
-    seed: int = 42,
-    probe_hamming: int = 1,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Approximate cosine top-k: probe the query's LSH bucket (+Hamming-1).
-
-    Exact scoring within probed buckets; approximation is only in candidate
-    pruning. Deterministic for fixed (seed, n_planes).
-    """
-    planes = hyperplanes(len(query_vec), n_planes, seed)
-    qsig = 0
-    qv = np.asarray(query_vec, dtype=np.float64)
-    for p in range(n_planes):
-        if float(qv @ planes[p]) >= 0:
-            qsig |= 1 << p
-    probe = {qsig}
-    if probe_hamming >= 1:
-        probe |= {qsig ^ (1 << p) for p in range(n_planes)}
-    bucketed = emb.withColumn("bucket", bucket_expr(F.col(vec_col), planes))
-    cand = bucketed.filter(F.col("bucket").isin(sorted(probe)))
-    q = F.array(*[F.lit(float(x)) for x in query_vec])
-    scored = cand.select(
-        F.col(id_col).alias("vec_id"),
-        F.round(cosine_expr(F.col(vec_col), q), 6).alias("cos"),
-    )
-    return scored.orderBy(F.desc("cos"), F.asc("vec_id")).limit(k)

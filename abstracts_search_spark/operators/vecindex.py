@@ -9,18 +9,21 @@ each query's cells, scan only those cells, score the candidates exactly,
 keep the top k. This module holds everything the two families share, so a
 format or contract change lands once (r5 verdict item 8):
 
-- the lifecycle: atomic marker writes, the vectors-table layout, the sync
-  tag-replay / empty-batch / dimension guards, orphan-generation scrub,
-  compaction and reader staleness;
+- the lifecycle: atomic marker writes, the vectors-table layout, the fill
+  (:func:`fill`, gen 0 at build), the sync (:func:`sync`: tag-replay /
+  empty-batch / dimension guards, orphan-generation scrub), compaction
+  (:func:`compact_generations`) and reader staleness;
 - the reader: :class:`CellIndexReader` runs probe → pruned scan → one GEMM
   per candidate batch → top-k for both families;
-- the tune step's recall sweep (:func:`recall_sweep`).
+- the tune step (:func:`tune`: :func:`recall_sweep` over the family's probe
+  widths plus the :func:`cell_stats` occupancy summary).
 
-A family differs only in its constants (a small ``VecIndexSpec``: params
-filename, format stamp, partition/sort columns, builder name for error
-messages) and in four reader hooks: how a query picks its cells, how a cell
-maps to its directory, how many cells exist, and how a stored row decodes
-to a float64 vector.
+A family is described once, by its reader class: a small ``VecIndexSpec``
+(params filename, format stamp, partition/sort columns, builder name for
+error messages), its probe knob, and the hooks of :class:`CellIndexReader`
+— its constants, its fill UDF, how a query picks its cells, how a cell
+maps to its directory, how many cells exist, its tune widths, and how a
+stored row decodes to a float64 vector.
 """
 
 from __future__ import annotations
@@ -118,24 +121,35 @@ def commit_vectors(rows: DataFrame, out_dir: str, spec: VecIndexSpec, mode: str 
            sort_by=[spec.sort_col], row_group_bytes=VECTORS_ROW_GROUP_BYTES)
 
 
-def sync_generation(
-    new_emb: DataFrame,
-    out_dir: str,
-    spec: VecIndexSpec,
-    src_tag: str,
-    vec_col: str,
-    make_rows,
-) -> bool:
-    """Append a NEW vector batch as the next generation under the shared
-    crash-replay contract: a ``src_tag`` already recorded in the params is a
-    no-op (replay of a committed batch), an EMPTY batch never consumes the
-    tag (its real content may arrive later under the same identity), NULL
-    vectors and dimension mismatches fail loudly, and orphaned generations
-    are scrubbed before re-appending so replays converge.
+def fill(family, emb: DataFrame, out_dir: str, consts, p: dict, gen: int,
+         id_col: str = "vec_id", vec_col: str = "embedding", mode: str = "overwrite") -> None:
+    """Assign ``emb``'s vectors to the cells of ``family`` (a
+    :class:`CellIndexReader` subclass) under its constants ``consts`` and
+    commit them as generation ``gen``: a build fills gen 0, a sync
+    appends ``next_gen``. ``p``: the index params."""
+    rows = emb.select(id_col, vec_col).mapInPandas(
+        family._fill_fn(consts, p, id_col, vec_col, gen),
+        schema=rows_ddl(family._spec, p["vec_type"], p.get("quantize", "none")),
+    )
+    commit_vectors(rows, out_dir, family._spec, mode=mode)
 
-    ``make_rows(params, next_gen) -> DataFrame`` supplies the family's
-    assigned rows (bucketize / centroid-assign + optional quantize).
-    Returns True if a generation was appended."""
+
+def sync(family, new_emb: DataFrame, out_dir: str, src_tag: str,
+         id_col: str = "vec_id", vec_col: str = "embedding") -> bool:
+    """Append a NEW vector batch to an index of ``family`` (a
+    :class:`CellIndexReader` subclass) as its next
+    generation, under the index's FIXED constants (planes; centroids and
+    quantizer — never retrained, as FAISS `index fill` on a trained index).
+    The crash-replay contract: ``src_tag`` is the batch's content identity
+    and a tag already recorded in the params is a no-op (replay of a
+    committed batch), an EMPTY batch never consumes the tag (its real
+    content may arrive later under the same identity), NULL vectors and
+    dimension mismatches fail loudly, and orphaned generations (appended,
+    then crashed before the params marker) are scrubbed before re-appending,
+    so replays converge. The constants come from the params and the
+    index's own tables; no reader is attached. Returns True if a generation
+    was appended."""
+    spec = family._spec
     p = read_params(out_dir, spec)
     check_format(p, out_dir, spec, appending=True)
     if src_tag in p["merged_srcs"]:
@@ -156,7 +170,8 @@ def sync_generation(
         )
     next_gen = int(p["next_gen"])
     scrub_orphan_generations(out_dir, "vectors", next_gen)
-    commit_vectors(make_rows(p, next_gen), out_dir, spec, mode="append")
+    consts = family._constants(new_emb.sparkSession, out_dir, p)
+    fill(family, new_emb, out_dir, consts, p, next_gen, id_col, vec_col, mode="append")
     p["merged_srcs"] = p["merged_srcs"] + [src_tag]
     p["next_gen"] = next_gen + 1
     write_params(out_dir, spec, p)  # marker LAST
@@ -235,14 +250,18 @@ class CellIndexReader(Staleness):
     rounding). ``topk`` ranks one query with a plain TakeOrderedAndProject;
     ``topk_many`` ranks a query set in one job with a per-query window.
 
-    Subclasses set ``_spec`` and ``payload_col`` and supply the hooks
-    :meth:`_load_constants`, :meth:`_probe` (its keyword arguments are the
-    family's probe knobs, passed through ``topk``/``topk_many``),
-    :meth:`_n_cells`, :meth:`_groups_of` and, for coded payloads,
+    Subclasses set ``_spec``, ``knob`` (the probe-width keyword that
+    :func:`tune` sweeps and records) and ``payload_col``, and supply the
+    hooks :meth:`_constants` and :meth:`_fill_fn` (static: :func:`sync`
+    uses them without attaching a reader), :meth:`_load_constants`,
+    :meth:`_probe` (its keyword arguments are the family's probe knobs,
+    passed through ``topk``/``topk_many``), :meth:`_n_cells`,
+    :meth:`_groups_of`, :meth:`_tune_widths` and, for coded payloads,
     :meth:`_decoder`.
     """
 
     _spec: VecIndexSpec
+    knob: str
     payload_col = "embedding"
 
     def __init__(self, spark, index_dir: str):
@@ -261,7 +280,20 @@ class CellIndexReader(Staleness):
         self.vectors = read_vectors(self.spark, self.index_dir, self._spec, self.params)
 
     # ---- family hooks ----
+    @staticmethod
+    def _constants(spark, index_dir: str, params: dict):
+        """The family's fixed constants (planes; centroids + quantizer), as
+        the params and the index's own tables define them."""
+        raise NotImplementedError
+
+    @staticmethod
+    def _fill_fn(consts, params: dict, id_col: str, vec_col: str, gen: int):
+        """-> the mapInPandas body assigning (id_col, vec_col) batches to
+        cells: rows of :func:`rows_ddl` at generation ``gen``."""
+        raise NotImplementedError
+
     def _load_constants(self) -> None:
+        """Set the reader's constants from :meth:`_constants`."""
         raise NotImplementedError
 
     def _probe(self, query_vec, **knobs) -> list[int]:
@@ -273,6 +305,11 @@ class CellIndexReader(Staleness):
 
     def _groups_of(self, cells: np.ndarray) -> np.ndarray:
         """cell ids -> their ``spec.part_col`` directory keys."""
+        raise NotImplementedError
+
+    def _tune_widths(self) -> list[int]:
+        """The ``knob`` values :func:`tune` sweeps, ascending; the last one
+        probes every cell (the exhaustive scan)."""
         raise NotImplementedError
 
     def _decoder(self):
@@ -390,10 +427,11 @@ class CellIndexReader(Staleness):
         )
 
 
-def recall_sweep(reader: CellIndexReader, n_queries: int, k: int, knob: str, widths: list[int]):
+def recall_sweep(reader: CellIndexReader, n_queries: int, k: int):
     """The tune step's sweep (the reference's nprobe tune, Makefile:31-32):
-    recall@k of the probe widths in ascending order against the widest one,
-    which probes every cell and IS the exhaustive scan. Sample queries are
+    recall@k of the reader's probe widths (:meth:`~CellIndexReader._tune_widths`)
+    in ascending order against the widest one, which probes every cell and
+    IS the exhaustive scan. Sample queries are
     the index's own ``n_queries`` lowest-vec_id vectors as the reader
     scores them (deterministic, no external data; a coded index's codes are
     reconstructed, so the sweep measures its quantizer's own geometry).
@@ -413,10 +451,11 @@ def recall_sweep(reader: CellIndexReader, n_queries: int, k: int, knob: str, wid
 
     def topk_sets(width: int) -> dict[int, set[int]]:
         out: dict[int, set[int]] = {qid: set() for qid in qvecs}
-        for row in reader.topk_many(qvecs, k=k, **{knob: width}).collect():
+        for row in reader.topk_many(qvecs, k=k, **{reader.knob: width}).collect():
             out[int(row["query_id"])].add(row["vec_id"])
         return out
 
+    widths = reader._tune_widths()
     truth = topk_sets(widths[-1])
     total = sum(len(t) for t in truth.values())
     sweep: dict[str, float] = {}
@@ -428,3 +467,48 @@ def recall_sweep(reader: CellIndexReader, n_queries: int, k: int, knob: str, wid
         if recall >= 1.0:
             break
     return width, sweep, len(qvecs)
+
+
+def cell_stats(reader: CellIndexReader) -> dict:
+    """Cell occupancy of the index — the probe-cost variance at scale: a
+    probe reads its cells' rows, so a hot cell is a hot probe (the stat
+    FAISS exposes as invlist sizes). One narrow groupBy over the cell
+    column (no vector payload read); empty cells are ``_n_cells()`` minus
+    the occupied ones, so neither family needs a cell roster.
+    -> {cells, vectors, empty, min, max, avg, median_occupied,
+    max_over_median}."""
+    reader._refresh_if_stale()
+    occ = np.asarray(
+        [r["count"] for r in reader.vectors.groupBy(reader._spec.sort_col).count().collect()],
+        dtype=np.int64,
+    )
+    n_cells, n = reader._n_cells(), int(occ.sum())
+    med = float(np.median(occ)) if occ.size else 0.0
+    return {
+        "cells": n_cells,
+        "vectors": n,
+        "empty": n_cells - int(occ.size),
+        "min": int(occ.min()) if occ.size == n_cells else 0,
+        "max": int(occ.max()) if occ.size else 0,
+        "avg": round(n / n_cells, 2),
+        "median_occupied": med,
+        "max_over_median": round(float(occ.max()) / med, 2) if med else None,
+    }
+
+
+def tune(reader: CellIndexReader, n_queries: int = 8, k: int = 10) -> dict:
+    """Sweep the family's probe width and record recall@k against the
+    exhaustive scan — the reference's `index tune` nprobe sweep
+    (Makefile:31-32). :func:`recall_sweep` stops at the first width reaching
+    recall 1.0 (guaranteed by the last). The chosen width (the reader's
+    default ``knob`` from then on), the sweep (``tune_recall_at_k``) and the
+    :func:`cell_stats` summary (``occupancy``: hot-cell skew, readable
+    without running a job) land in the params. -> the new params."""
+    reader._refresh_if_stale()
+    p = reader.params
+    chosen, sweep, n_q = recall_sweep(reader, n_queries, k)
+    p[reader.knob] = int(chosen)
+    p["tune_recall_at_k"] = {"k": k, "n_queries": n_q, "sweep": sweep}
+    p["occupancy"] = cell_stats(reader)
+    write_params(reader.index_dir, reader._spec, p)
+    return p

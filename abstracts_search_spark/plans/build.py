@@ -88,7 +88,10 @@ DEFAULT_MAX_GENERATIONS = 8
 # In(term_id,…) predicate (used above the driver-side cache) prunes files and
 # row groups to those holding the query's terms instead of the vocabulary
 DICT_ROW_GROUP_BYTES = 16 << 10
-# postings row-group size: the pushed In(term_id,…) prunes inside bucket files
+# postings row-group size. Bucket files keep the encoder's row order, not a
+# term_id sort (term_id-sorted postings measured 6–7% larger: df/first_doc/
+# last_doc lose their dictionary runs), so the pushed In(term_id,…) prunes
+# row groups only where that order happens to separate term ranges
 POSTINGS_ROW_GROUP_BYTES = 8 << 20
 
 _LINEAGE_SCHEMA = (
@@ -265,11 +268,12 @@ def ingest(
             buckets=buckets, shard_docs=shard_docs,
             with_positions=positions, tokenizer=tokenizer,
         )
-        # one file per bucket dir (file count is driver-serial cost), term_id-
-        # sorted small row groups so query-time term predicates prune inside it;
-        # the varint blobs are high-entropy, so no general-purpose compression
+        # one file per bucket dir (file count is driver-serial cost), rows in
+        # the encoder's order (smaller than a term_id sort, see
+        # POSTINGS_ROW_GROUP_BYTES); the varint blobs are high-entropy, so no
+        # general-purpose compression
         commit_generation(build_segments_packed(packed, counts), index_dir, "postings", gen,
-                          partition_by=["bucket"], repartition_by=["bucket"], sort_by=["term_id"],
+                          partition_by=["bucket"], repartition_by=["bucket"],
                           compression="uncompressed", row_group_bytes=POSTINGS_ROW_GROUP_BYTES)
         commit(ids.select("doc_id", "conv_id", "doclen", "src_part"), index_dir,
                "docmap", mode="append", partition_by=["src_part"], repartition_by=["src_part"])
@@ -410,7 +414,7 @@ def _fold(spark: SparkSession, index_dir: str) -> None:
     between the two overwrites still serves correct results."""
     postings = merge_segments(read_table(spark, index_dir, "postings", POSTINGS_TABLE))
     commit(postings.withColumn("gen", F.lit(0)), index_dir, "postings",
-           partition_by=["gen", "bucket"], repartition_by=["bucket"], sort_by=["term_id"],
+           partition_by=["gen", "bucket"], repartition_by=["bucket"],
            compression="uncompressed", row_group_bytes=POSTINGS_ROW_GROUP_BYTES)
     commit(_dictionary_delta(spark, index_dir, 0).withColumn("gen", F.lit(0)), index_dir,
            "dictionary", partition_by=["gen"], sort_by=["term_id"],

@@ -117,6 +117,9 @@ def commit(
     ``repartition_by`` co-partitions the write with the directory layout (one
     file per partition dir — file count is driver-serial cost); ``sort_by``
     orders rows within files so parquet row-group min/max stats prune reads.
+    A partitioned write sorts its rows by ``partition_by`` itself and drops
+    any sort below that one, so ``sort_by`` is applied after the partition
+    columns (without them, no file would be ``sort_by``-ordered).
     ``compression`` overrides the parquet codec — posting/segment blobs are
     already-varint-packed high-entropy bytes, so general-purpose compression
     wastes CPU + memory bandwidth for near-zero ratio; those tables pass
@@ -129,7 +132,7 @@ def commit(
     if repartition_by:
         out = out.repartition(*repartition_by)
     if sort_by:
-        out = out.sortWithinPartitions(*sort_by)
+        out = out.sortWithinPartitions(*(partition_by or []), *sort_by)
 
     if _backend() == "iceberg":
         writer = out.writeTo(_iceberg_table(root, name))

@@ -110,8 +110,8 @@ def stream_sync_vectors(
     from ``embeddings_dir`` into a persisted vector index (``kind`` =
     "ivf" | "ann") — the vector-side twin of :func:`stream_build`.
 
-    Each micro-batch appends as the index's next generation through
-    sync_ivf_index / sync_ann_index with a CONTENT-derived ``src_tag`` (the
+    Each micro-batch appends as the index's next generation through the
+    shared ``vecindex.sync`` with a CONTENT-derived ``src_tag`` (the
     hash of the batch's distinct input-file set — NOT the epoch counter,
     which restarts at 0 per checkpoint location and would collide tags
     across two streams into one index, or after a lost checkpoint, silently
@@ -129,15 +129,13 @@ def stream_sync_vectors(
     files. Returns {"batches": n_appended}.
     """
     from ..operators import vecindex
-    from ..operators.ivf import _IVF_SPEC, sync_ivf_index
-    from ..operators.similarity import _ANN_SPEC, sync_ann_index
+    from ..operators.ivf import IvfIndexReader
+    from ..operators.similarity import AnnIndexReader
 
-    if kind == "ivf":
-        params_path, sync = vecindex.params_path(index_dir, _IVF_SPEC), sync_ivf_index
-    elif kind == "ann":
-        params_path, sync = vecindex.params_path(index_dir, _ANN_SPEC), sync_ann_index
-    else:
+    family = {"ivf": IvfIndexReader, "ann": AnnIndexReader}.get(kind)
+    if family is None:
         raise ValueError(f"unknown vector index kind {kind!r}")
+    params_path = vecindex.params_path(index_dir, family._spec)
     if not os.path.exists(params_path):
         raise ValueError(
             f"no {kind} index at {index_dir} — build it first "
@@ -186,7 +184,7 @@ def stream_sync_vectors(
             r[0] for r in batch_df.select(F.input_file_name()).distinct().collect()
         )
         tag = "stream_" + hashlib.sha256("\n".join(files).encode()).hexdigest()[:16]
-        if sync(batch_df, index_dir, src_tag=tag):
+        if vecindex.sync(family, batch_df, index_dir, src_tag=tag):
             n_batches["n"] += 1
 
     q = (

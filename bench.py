@@ -191,7 +191,7 @@ def main() -> dict:
     ann16_dir = os.path.join(_REPO, "data", "cache", f"annindex16_{sf_tag}")
     from abstracts_search_spark.operators.similarity import (
         ANN_INDEX_FORMAT,
-        ann_index_topk,
+        AnnIndexReader,
         build_ann_index,
     )
 
@@ -211,7 +211,7 @@ def main() -> dict:
     a_runs = []
     for _ in range(3):
         t0 = time.time()
-        n16 = ann_index_topk(spark, ann16_dir, qv, k=10, probe_hamming=2).count()
+        n16 = AnnIndexReader(spark, ann16_dir).topk(qv, k=10, probe_hamming=2).count()
         a_runs.append(round(time.time() - t0, 3))
     timings["ann_probe_16planes_h2"] = sorted(a_runs)[1]
     print(

@@ -8,13 +8,13 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
+from abstracts_search_spark.operators import vecindex
 from abstracts_search_spark.operators.ivf import (
     IvfIndexReader,
     assign_ids,
     auto_n_lists,
     build_ivf_index,
     init_centroids,
-    ivf_index_topk,
     probe_lists,
     train_kmeans,
 )
@@ -80,7 +80,7 @@ def test_full_probe_equals_brute(spark, tmp_path):
     row = emb.filter(F.col("vec_id") == 3).first()
     q = [float(x) for x in row["embedding"]]
     # probing every list is brute force — identical rows in identical order
-    got = [(r["vec_id"], r["cos"]) for r in ivf_index_topk(spark, out, q, k=10, nprobe=8).collect()]
+    got = [(r["vec_id"], r["cos"]) for r in IvfIndexReader(spark, out).topk(q, k=10, nprobe=8).collect()]
     want = [(r["vec_id"], r["cos"]) for r in cosine_topk(emb, q, k=10).collect()]
     assert got == want and len(got) == 10
 
@@ -152,7 +152,7 @@ def test_ivf_probe_plan_prunes_and_gemm_scores(spark, tmp_path):
     build_ivf_index(emb, out, n_lists=8, iters=1)
     row = emb.filter(F.col("vec_id") == 2).first()
     q = [float(x) for x in row["embedding"]]
-    df = ivf_index_topk(spark, out, q, k=10, nprobe=2)
+    df = IvfIndexReader(spark, out).topk(q, k=10, nprobe=2)
     phys = df._jdf.queryExecution().toString().split("== Physical Plan ==", 1)[1]
     assert "aggregate(" not in phys and "zip_with" not in phys
     assert "mapinpandas" in phys.lower()
@@ -212,7 +212,7 @@ def test_compaction_folds_generations(spark, tmp_path):
     """build + 2 syncs = 3 generations; compaction folds to ONE gen=0 with
     identical rows/cells, probes return identical results, folded tags still
     no-op on replay, and a fresh sync appends cleanly as gen=1."""
-    from abstracts_search_spark.operators.ivf import compact_ivf_index, sync_ivf_index
+    from abstracts_search_spark.operators.ivf import sync_ivf_index
 
     emb = _emb(spark)
     out = str(tmp_path / "ivf")
@@ -227,7 +227,7 @@ def test_compaction_folds_generations(spark, tmp_path):
         for r in IvfIndexReader(spark, out).assignments().collect()
     )
 
-    assert compact_ivf_index(spark, out) == 3
+    assert vecindex.compact_generations(spark, out, IvfIndexReader._spec) == 3
     r2 = IvfIndexReader(spark, out)
     gens = [x["gen"] for x in r2.vectors.select("gen").distinct().collect()]
     assert gens == [0]
@@ -235,7 +235,7 @@ def test_compaction_folds_generations(spark, tmp_path):
     assert [(x["vec_id"], x["cos"]) for x in r2.topk(q, k=5).collect()] == before
     # folded batches keep no-opping; a genuinely new batch lands as gen=1
     assert sync_ivf_index(emb.filter(F.col("vec_id") >= 400), out, src_tag="b3") is False
-    assert compact_ivf_index(spark, out) == 0  # single gen: nothing to fold
+    assert vecindex.compact_generations(spark, out, IvfIndexReader._spec) == 0  # single gen: nothing to fold
     assert sync_ivf_index(emb.limit(5), out, src_tag="b4") is True
     # assignments() runs the staleness check, so the handle sees gen=1
     # (raw r2.vectors would still be the pre-sync snapshot by design)
@@ -246,7 +246,6 @@ def test_ann_compaction(spark, tmp_path):
     from abstracts_search_spark.operators.similarity import (
         AnnIndexReader,
         build_ann_index,
-        compact_ann_index,
         sync_ann_index,
     )
 
@@ -257,7 +256,7 @@ def test_ann_compaction(spark, tmp_path):
     row = emb.filter(F.col("vec_id") == 470).first()
     q = [float(x) for x in row["embedding"]]
     before = [(r["vec_id"], r["cos"]) for r in AnnIndexReader(spark, out).topk(q, k=5).collect()]
-    assert compact_ann_index(spark, out) == 2
+    assert vecindex.compact_generations(spark, out, AnnIndexReader._spec) == 2
     r = AnnIndexReader(spark, out)
     assert [x["gen"] for x in r.vectors.select("gen").distinct().collect()] == [0]
     assert r.vectors.count() == 500
@@ -272,7 +271,7 @@ def test_compact_scrubs_orphan_generation(spark, tmp_path):
     replay then appends the same batch twice."""
     import shutil
 
-    from abstracts_search_spark.operators.ivf import compact_ivf_index, sync_ivf_index
+    from abstracts_search_spark.operators.ivf import sync_ivf_index
 
     emb = _emb(spark)
     out = str(tmp_path / "ivf")
@@ -281,7 +280,7 @@ def test_compact_scrubs_orphan_generation(spark, tmp_path):
     # simulate the crash window: gen=2 appended, params never updated
     shutil.copytree(os.path.join(out, "vectors", "gen=1"),
                     os.path.join(out, "vectors", "gen=2"))
-    assert compact_ivf_index(spark, out) == 2
+    assert vecindex.compact_generations(spark, out, IvfIndexReader._spec) == 2
     r = IvfIndexReader(spark, out)
     assert r.assignments().count() == 400  # orphan scrubbed, not folded
     # the orphan's batch can now land exactly once
@@ -363,12 +362,10 @@ def test_single_topk_plan_and_equivalence(spark, tmp_path, kind):
 
 
 def test_tune_ivf_records_recall(spark, tmp_path):
-    from abstracts_search_spark.operators.ivf import tune_ivf_index
-
     emb = _emb(spark)
     out = str(tmp_path / "ivf")
     build_ivf_index(emb, out, n_lists=8, iters=2, nprobe=1)
-    p = tune_ivf_index(spark, out, n_queries=4, k=5)
+    p = vecindex.tune(IvfIndexReader(spark, out), n_queries=4, k=5)
     sweep = p["tune_recall_at_k"]["sweep"]
     assert p["tune_recall_at_k"]["k"] == 5 and len(sweep) >= 1
     assert sweep[str(p["nprobe"])] == 1.0  # chosen width reaches full recall
@@ -456,7 +453,6 @@ def test_sq8r_residual_coding(spark, tmp_path):
     reference computing the identical pipeline; sync encodes new batches
     with the stored residual quantizer."""
     from abstracts_search_spark.operators.ivf import (
-        _read_ivf_params,
         assign_ids,
         sq8_decode,
         sq8_encode,
@@ -467,7 +463,7 @@ def test_sq8r_residual_coding(spark, tmp_path):
     emb = _emb(spark)
     out = str(tmp_path / "sq8r")
     build_ivf_index(emb, out, n_lists=8, iters=1, quantize="sq8r")
-    p = _read_ivf_params(out)
+    p = vecindex.read_params(out, IvfIndexReader._spec)
     assert p["quantize"] == "sq8r"
 
     ids, m = _mat(spark)
@@ -499,16 +495,14 @@ def test_sq8r_residual_coding(spark, tmp_path):
     top = r.topk(list(qv), k=2, nprobe=8).collect()
     assert {t["vec_id"] for t in top} == {5, 1000}  # identical vectors tie region
     # tune sweeps on reconstructions in residual mode too
-    from abstracts_search_spark.operators.ivf import tune_ivf_index
-
-    tp = tune_ivf_index(spark, out, n_queries=2, k=3)
+    tp = vecindex.tune(IvfIndexReader(spark, out), n_queries=2, k=3)
     assert tp["tune_recall_at_k"]["sweep"][str(tp["nprobe"])] == 1.0
 
 
 def test_sq8_sync_and_tune(spark, tmp_path):
     """Generations encode with the FIXED stored quantizer; tune sweeps on
     reconstructions (no embedding column needed)."""
-    from abstracts_search_spark.operators.ivf import sync_ivf_index, tune_ivf_index
+    from abstracts_search_spark.operators.ivf import sync_ivf_index
 
     emb = _emb(spark)
     out = str(tmp_path / "sq8")
@@ -520,7 +514,7 @@ def test_sq8_sync_and_tune(spark, tmp_path):
     row = emb.filter(F.col("vec_id") == 450).first()
     top = r.topk([float(x) for x in row["embedding"]], k=3, nprobe=8).collect()
     assert top[0]["vec_id"] == 450
-    p = tune_ivf_index(spark, out, n_queries=3, k=5)
+    p = vecindex.tune(IvfIndexReader(spark, out), n_queries=3, k=5)
     assert p["tune_recall_at_k"]["sweep"][str(p["nprobe"])] == 1.0
 
 
@@ -593,9 +587,9 @@ def test_cli_ivf_build_query(tmp_path):
 def test_empty_batch_does_not_consume_tag(spark, tmp_path):
     """A zero-row delivery must be a no-op (not a tag burn): the real data
     arriving later under the same content identity has to land."""
-    from abstracts_search_spark.operators.ivf import _read_ivf_params, sync_ivf_index
+    from abstracts_search_spark.operators.ivf import sync_ivf_index
     from abstracts_search_spark.operators.similarity import (
-        _read_ann_params,
+        AnnIndexReader,
         build_ann_index,
         sync_ann_index,
     )
@@ -605,14 +599,14 @@ def test_empty_batch_does_not_consume_tag(spark, tmp_path):
     build_ivf_index(emb.filter(F.col("vec_id") < 400), out, n_lists=4, iters=1)
     late = emb.filter(F.col("vec_id") >= 400)
     assert sync_ivf_index(late.limit(0), out, src_tag="d7") is False
-    p = _read_ivf_params(out)
+    p = vecindex.read_params(out, IvfIndexReader._spec)
     assert "d7" not in p["merged_srcs"] and p["next_gen"] == 1
     assert sync_ivf_index(late, out, src_tag="d7") is True  # real data lands
 
     aout = str(tmp_path / "ann")
     build_ann_index(emb.filter(F.col("vec_id") < 400), aout, n_planes=4)
     assert sync_ann_index(late.limit(0), aout, src_tag="d7") is False
-    assert "d7" not in _read_ann_params(aout)["merged_srcs"]
+    assert "d7" not in vecindex.read_params(aout, AnnIndexReader._spec)["merged_srcs"]
     assert sync_ann_index(late, aout, src_tag="d7") is True
 
 
@@ -656,34 +650,31 @@ def test_build_and_sync_input_guards(spark, tmp_path):
     with pytest.raises(ValueError, match="dimension 2 != index dimension 64"):
         sync_ivf_index(bad, out, src_tag="bad")
     # the refused sync must not have consumed the tag or a generation
-    from abstracts_search_spark.operators.ivf import _read_ivf_params
-
-    p = _read_ivf_params(out)
+    p = vecindex.read_params(out, IvfIndexReader._spec)
     assert "bad" not in p["merged_srcs"] and p["next_gen"] == 1
 
 
 def test_cell_stats(spark, tmp_path):
-    """Occupancy introspection: every trained cell reported (empties as 0),
-    totals match the corpus, and the LSH twin agrees on its total."""
-    from abstracts_search_spark.operators.ivf import ivf_cell_stats
-    from abstracts_search_spark.operators.similarity import (
-        ann_bucket_stats,
-        build_ann_index,
-    )
+    """One occupancy summary for both families: the vectors total the
+    corpus, ``cells`` is every cell of the geometry (n_lists lists, 2^n_planes
+    buckets) and ``empty`` the cells no vector landed in — 256 buckets over
+    500 vectors leave some empty, which a count of occupied rows misses."""
+    from abstracts_search_spark.operators.similarity import AnnIndexReader, build_ann_index
 
     emb = _emb(spark)
-    out = str(tmp_path / "ivf")
-    build_ivf_index(emb, out, n_lists=8, iters=1)
-    rows = ivf_cell_stats(spark, out).collect()
-    assert [r["list"] for r in rows] == list(range(8))  # all cells, in order
-    assert sum(r["n_vecs"] for r in rows) == emb.count()
-    assert all(r["n_vecs"] >= 0 for r in rows)
-
-    aout = str(tmp_path / "ann")
-    build_ann_index(emb, aout, n_planes=4)
-    arows = ann_bucket_stats(spark, aout).collect()
-    assert sum(r["n_vecs"] for r in arows) == emb.count()
-    assert all(0 <= r["bucket"] < 16 for r in arows)
+    n = emb.count()
+    build_ivf_index(emb, str(tmp_path / "ivf"), n_lists=8, iters=1)
+    build_ann_index(emb, str(tmp_path / "lsh"), n_planes=8)
+    for r, n_cells in ((IvfIndexReader(spark, str(tmp_path / "ivf")), 8),
+                       (AnnIndexReader(spark, str(tmp_path / "lsh")), 1 << 8)):
+        col = r._spec.sort_col
+        occ = [x["count"] for x in r.vectors.groupBy(col).count().collect()]
+        st = vecindex.cell_stats(r)
+        assert (st["cells"], st["vectors"]) == (n_cells, n) and sum(occ) == n
+        assert st["empty"] == n_cells - len(occ)
+        assert st["min"] == (0 if st["empty"] else min(occ)) and st["max"] == max(occ)
+        assert st["avg"] == round(n / n_cells, 2)
+    assert st["empty"] > 0  # the LSH geometry has empty buckets
 
 
 @pytest.mark.parametrize("kind", ["lsh", "ivf", "sq8"])
@@ -719,22 +710,36 @@ def test_vector_tables_declared_schemas_equal_inferred(spark, tmp_path, kind):
         assert sorted(map(repr, declared.collect())) == sorted(map(repr, inferred.collect())), name
 
 
-def test_ivf_sync_and_first_read_run_no_inference_job(spark, tmp_path, job_count):
-    """An IVF sync runs no schema-inference job and the first read after it
-    two jobs: the reader's centroids collect and the probe (5 and 4 when
-    the vectors and centroids tables were read with inference)."""
+@pytest.mark.parametrize("kind", ["lsh", "ivf"])
+def test_ivf_sync_and_first_read_run_no_inference_job(spark, tmp_path, job_count, kind):
+    """Both families run the one shared sync and query path with no
+    schema-inference job: an IVF sync runs at most 4 jobs and the first read
+    after it 2 (the reader's centroids collect and the probe; 5 and 4 when
+    the vectors and centroids tables were read with inference); an LSH sync
+    (no centroids) at most 3 and the first read 1."""
     from abstracts_search_spark.operators.ivf import sync_ivf_index
+    from abstracts_search_spark.operators.similarity import (
+        AnnIndexReader,
+        build_ann_index,
+        sync_ann_index,
+    )
 
     emb = _emb(spark)
-    out = str(tmp_path / "ivf")
-    build_ivf_index(emb.filter(F.col("vec_id") < 400), out, n_lists=8, iters=1)
-    r = IvfIndexReader(spark, out)
+    out = str(tmp_path / kind)
+    first = emb.filter(F.col("vec_id") < 400)
+    if kind == "lsh":
+        build_ann_index(first, out, n_planes=4)
+        reader_cls, sync_fn, bounds = AnnIndexReader, sync_ann_index, (3, 1)
+    else:
+        build_ivf_index(first, out, n_lists=8, iters=1)
+        reader_cls, sync_fn, bounds = IvfIndexReader, sync_ivf_index, (4, 2)
+    r = reader_cls(spark, out)
     q = [float(v) for v in emb.filter(F.col("vec_id") == 450).first()["embedding"]]
-    sync = job_count(lambda: sync_ivf_index(emb.filter(F.col("vec_id") >= 400), out, src_tag="b2"))
+    sync = job_count(lambda: sync_fn(emb.filter(F.col("vec_id") >= 400), out, src_tag="b2"))
     top = []
     read = job_count(lambda: top.extend(r.topk(q, k=3).collect()))
     assert top[0]["vec_id"] == 450
-    assert sync <= 4 and read <= 2, (sync, read)
+    assert sync <= bounds[0] and read <= bounds[1], (sync, read)
 
 
 def test_auto_n_lists_reference_geometry():

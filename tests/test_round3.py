@@ -432,7 +432,7 @@ def test_streaming_replay_does_not_double_count_lineage(spark, small_dir, tmp_pa
 
 def test_ann_index_commits_through_facade(spark, tmp_path):
     from abstracts_search_spark.operators.similarity import (
-        ann_index_topk,
+        AnnIndexReader,
         build_ann_index,
         cosine_topk,
     )
@@ -453,7 +453,7 @@ def test_ann_index_commits_through_facade(spark, tmp_path):
     # the vectors table committed atomically before the crash; the rebuild
     # overwrite (tmp→swap) converges and the probed query matches brute force
     build_ann_index(emb, out, n_planes=4)
-    got = [(r["vec_id"], r["cos"]) for r in ann_index_topk(spark, out, q, k=1).collect()]
+    got = [(r["vec_id"], r["cos"]) for r in AnnIndexReader(spark, out).topk(q, k=1).collect()]
     want = [(r["vec_id"], r["cos"]) for r in cosine_topk(emb, q, k=1).collect()]
     assert got == want  # the query's own bucket always contains itself
 

@@ -114,14 +114,14 @@ def test_ann_probe_plan_has_no_hof_scoring(spark, tmp_path):
     — no interpreted aggregate/zip_with fold anywhere in the plan, and the
     scan still prunes to the probed buckets' partitions."""
     from abstracts_search_spark.operators.similarity import (
-        ann_index_topk,
+        AnnIndexReader,
         build_ann_index,
     )
 
     emb, vecs = _rand_emb(spark)
     out = str(tmp_path / "ann")
     build_ann_index(emb, out, n_planes=8)
-    df = ann_index_topk(spark, out, vecs[3][1], k=10)
+    df = AnnIndexReader(spark, out).topk(vecs[3][1], k=10)
     plan = df._jdf.queryExecution().toString()
     phys = plan.split("== Physical Plan ==", 1)[1]
     assert "aggregate(" not in phys and "zip_with" not in phys
@@ -143,7 +143,7 @@ def test_ann_sized_16_plane_probe(spark, tmp_path):
     """The reference's 65,536-bucket geometry is reachable and probes in
     Hamming order: self-bucket first, max_probes truncates (the nprobe knob)."""
     from abstracts_search_spark.operators.similarity import (
-        ann_index_topk,
+        AnnIndexReader,
         build_ann_index,
     )
 
@@ -151,7 +151,7 @@ def test_ann_sized_16_plane_probe(spark, tmp_path):
     out = str(tmp_path / "ann16")
     build_ann_index(emb, out, n_planes=16)
     q = vecs[5][1]
-    got = {r["vec_id"] for r in ann_index_topk(spark, out, q, k=5, probe_hamming=1).collect()}
+    got = {r["vec_id"] for r in AnnIndexReader(spark, out).topk(q, k=5, probe_hamming=1).collect()}
     assert 5 in got  # a vector always lands in (and is probed from) its own bucket
     with open(os.path.join(out, "ann_params.json")) as f:
         assert json.load(f)["n_planes"] == 16
@@ -162,7 +162,7 @@ def test_ann_sized_16_plane_probe(spark, tmp_path):
 
 def test_ann_sync_incremental_equals_oneshot(spark, tmp_path):
     from abstracts_search_spark.operators.similarity import (
-        ann_index_topk,
+        AnnIndexReader,
         build_ann_index,
         sync_ann_index,
     )
@@ -176,14 +176,14 @@ def test_ann_sync_incremental_equals_oneshot(spark, tmp_path):
     assert sync_ann_index(second, inc, src_tag="batch2") is True
     build_ann_index(emb, one, n_planes=6)
     q = vecs[250][1]
-    got = [(r["vec_id"], r["cos"]) for r in ann_index_topk(spark, inc, q, k=10, probe_hamming=1).collect()]
-    want = [(r["vec_id"], r["cos"]) for r in ann_index_topk(spark, one, q, k=10, probe_hamming=1).collect()]
+    got = [(r["vec_id"], r["cos"]) for r in AnnIndexReader(spark, inc).topk(q, k=10, probe_hamming=1).collect()]
+    want = [(r["vec_id"], r["cos"]) for r in AnnIndexReader(spark, one).topk(q, k=10, probe_hamming=1).collect()]
     assert got == want and len(got) > 0
     # replaying an already-committed batch is a no-op
     assert sync_ann_index(second, inc, src_tag="batch2") is False
     assert got == [
         (r["vec_id"], r["cos"])
-        for r in ann_index_topk(spark, inc, q, k=10, probe_hamming=1).collect()
+        for r in AnnIndexReader(spark, inc).topk(q, k=10, probe_hamming=1).collect()
     ]
 
 
@@ -192,7 +192,7 @@ def test_ann_sync_crash_replay(spark, tmp_path):
     scrubs the unmarked generation and converges (same contract as the doc
     index's postings-generation scrub)."""
     from abstracts_search_spark.operators.similarity import (
-        ann_index_topk,
+        AnnIndexReader,
         build_ann_index,
         sync_ann_index,
     )
@@ -214,8 +214,8 @@ def test_ann_sync_crash_replay(spark, tmp_path):
     assert sync_ann_index(second, inc, src_tag="b2") is True
     build_ann_index(emb, one, n_planes=6)
     q = vecs[200][1]
-    got = [(r["vec_id"], r["cos"]) for r in ann_index_topk(spark, inc, q, k=10, probe_hamming=1).collect()]
-    want = [(r["vec_id"], r["cos"]) for r in ann_index_topk(spark, one, q, k=10, probe_hamming=1).collect()]
+    got = [(r["vec_id"], r["cos"]) for r in AnnIndexReader(spark, inc).topk(q, k=10, probe_hamming=1).collect()]
+    want = [(r["vec_id"], r["cos"]) for r in AnnIndexReader(spark, one).topk(q, k=10, probe_hamming=1).collect()]
     assert got == want and len(got) > 0
 
 
@@ -223,18 +223,18 @@ def test_ann_sync_crash_replay(spark, tmp_path):
 
 
 def test_tune_ann_sweep_and_default(spark, tmp_path):
+    from abstracts_search_spark.operators import vecindex
     from abstracts_search_spark.operators.similarity import (
-        ann_index_topk,
+        AnnIndexReader,
         build_ann_index,
         cosine_topk,
-        tune_ann_index,
     )
     from abstracts_search_spark.sources.tables import read_table
 
     emb, vecs = _rand_emb(spark, n=250, dim=16, seed=21)
     out = str(tmp_path / "ann")
     build_ann_index(emb, out, n_planes=5)
-    params = tune_ann_index(spark, out, n_queries=4, k=5)
+    params = vecindex.tune(AnnIndexReader(spark, out), n_queries=4, k=5)
     sweep = params["tune_recall_at_k"]["sweep"]
     chosen = params["probe_hamming"]
     # the sweep terminates at recall 1.0 (radius n_planes IS brute force)
@@ -246,7 +246,7 @@ def test_tune_ann_sweep_and_default(spark, tmp_path):
     vectors = read_table(spark, out, "vectors")
     for r in vectors.select("vec_id", "embedding").orderBy("vec_id").limit(4).collect():
         qv = [float(x) for x in r["embedding"]]
-        got = {row["vec_id"] for row in ann_index_topk(spark, out, qv, k=5).collect()}
+        got = {row["vec_id"] for row in AnnIndexReader(spark, out).topk(qv, k=5).collect()}
         want = {row["vec_id"] for row in cosine_topk(vectors, qv, k=5).collect()}
         assert got == want
 
@@ -412,7 +412,6 @@ def test_ann_reader_batched_equals_per_query(spark, tmp_path):
     path."""
     from abstracts_search_spark.operators.similarity import (
         AnnIndexReader,
-        ann_index_topk,
         build_ann_index,
     )
 
@@ -430,7 +429,7 @@ def test_ann_reader_batched_equals_per_query(spark, tmp_path):
         single = [
             (i + 1, r["vec_id"], r["cos"])
             for i, r in enumerate(
-                ann_index_topk(spark, out, qv, k=8, probe_hamming=1).collect()
+                AnnIndexReader(spark, out).topk(qv, k=8, probe_hamming=1).collect()
             )
         ]
         assert sorted(by_q.get(qid, [])) == single
@@ -467,8 +466,9 @@ def test_ann_reader_refreshes_after_sync(spark, tmp_path):
 
 def test_cli_ann_build_sync_query(tmp_path):
     """The ANN surface end-to-end from the command line (foreign cwd,
-    separate JVMs): build -> sync a second batch -> probe; the probed
-    nearest neighbor of a synced vector's own query is itself (cos 1.0)."""
+    separate JVMs): build -> sync a second batch -> probe -> info; the
+    probed nearest neighbor of a synced vector's own query is itself
+    (cos 1.0)."""
     import subprocess
     import sys
 
@@ -515,3 +515,11 @@ def test_cli_ann_build_sync_query(tmp_path):
                                       "--embeddings", e2, "--vec-id", "100",
                                       "-k", "3", "--probe-hamming", "1")]
     assert got and got[0]["vec_id"] == 100 and got[0]["cos"] == 1.0
+    # occupancy counts every one of the 2^4 buckets, the empty ones included
+    from abstracts_search_spark.operators.similarity import hyperplanes
+
+    m = np.concatenate([np.stack(pq.read_table(e).column("embedding").to_pylist())
+                        for e in (e1, e2)]).astype(np.float64)
+    occupied = len(set(((m @ hyperplanes(16, 4, 42).T >= 0) @ (1 << np.arange(4))).tolist()))
+    info = json.loads(cli("ann-info", "--index", ix)[-1])
+    assert (info["cells"], info["vectors"], info["empty"]) == (16, 120, 16 - occupied)

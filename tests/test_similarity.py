@@ -1,20 +1,23 @@
-"""Similarity-search operators: persisted ANN index ≡ in-memory LSH variant;
-tune step writes a usable method; lineage metrics recorded."""
+"""Similarity-search operators: the persisted LSH index ≡ the DuckDB
+``ann_lsh_topk`` oracle at its geometry; tune step writes a usable method;
+lineage metrics recorded."""
 
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
 from abstracts_search_spark.operators.similarity import (
-    ann_index_topk,
-    ann_lsh_topk,
+    AnnIndexReader,
     build_ann_index,
     cosine_topk,
 )
 
+SF = "/root/testdata/sf0.001"
+
 
 def _emb(spark):
-    return spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
+    return spark.read.parquet(os.path.join(SF, "embeddings.parquet"))
 
 
 def _qvec(spark):
@@ -22,21 +25,35 @@ def _qvec(spark):
     return [float(x) for x in row["embedding"]]
 
 
-def test_persisted_ann_equals_inmem(spark, tmp_path):
-    emb = _emb(spark)
+@pytest.fixture(scope="module")
+def ann8(spark, tmp_path_factory):
+    """The oracle's geometry: 8 planes, seed 42, over the sf0.001 vectors."""
+    out = str(tmp_path_factory.mktemp("ann8") / "ann")
+    build_ann_index(_emb(spark), out, n_planes=8, seed=42)
+    return out
+
+
+def test_persisted_ann_equals_inmem(spark, ann8):
+    """The persisted index's Hamming-1 probe of vector 0 returns exactly the
+    rows of the DuckDB oracle that re-buckets the corpus in SQL."""
+    import duckdb
+
+    import __spark_entry__ as entrymod
+
     q = _qvec(spark)
-    out = str(tmp_path / "ann")
-    build_ann_index(emb, out, n_planes=8, seed=42)
-    a = [(r["vec_id"], r["cos"]) for r in ann_index_topk(spark, out, q, k=10).collect()]
-    b = [(r["vec_id"], r["cos"]) for r in ann_lsh_topk(emb, q, k=10).collect()]
+    a = [(r["vec_id"], r["cos"]) for r in AnnIndexReader(spark, ann8).topk(q, k=10).collect()]
+    con = duckdb.connect()
+    con.execute("CREATE VIEW embeddings AS SELECT * FROM "
+                f"read_parquet('{os.path.join(SF, 'embeddings.parquet')}')")
+    b = [(int(v), float(c)) for v, c in con.sql(entrymod._ann_lsh_sql()).fetchall()]
     assert a == b and len(a) > 0
 
 
-def test_ann_recall_vs_brute(spark):
+def test_ann_recall_vs_brute(spark, ann8):
     emb = _emb(spark)
     q = _qvec(spark)
     exact = {r["vec_id"] for r in cosine_topk(emb, q, k=10).collect()}
-    approx = {r["vec_id"] for r in ann_lsh_topk(emb, q, k=10).collect()}
+    approx = {r["vec_id"] for r in AnnIndexReader(spark, ann8).topk(q, k=10).collect()}
     # vec 0 itself must always be found (it is its own bucket's best match)
     assert 0 in approx
     assert len(exact & approx) >= 3  # deterministic for seed=42
